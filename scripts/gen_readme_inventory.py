@@ -38,7 +38,7 @@ def main() -> None:
 
     text = open(README).read()
     text = re.sub(
-        r"\| query \| check \| verified by \|\n\|---\|---\|---\|\n(?:\| `[a-z0-9_]+` \| [a-z-]+ \| [a-z ]+ \|\n?)+",
+        r"\| query \| check \| verified by \|\n\|---\|---\|---\|\n(?:\| `[a-z0-9_]+` \| [a-z-]+ \| [a-z +]+ \|\n?)+",
         table + "\n",
         text,
     )

@@ -247,42 +247,22 @@ def test_lsh_bits_scale_rule():
         assert b == 4 or n > _LSH_BUCKET_TARGET * (1 << (b - 1))
 
 
-def test_lsh_arrow_and_chain_paths_are_bit_identical(spark, tmp_path):
-    """The r13 Arrow signature build claims BIT-identical results to
-    the codegen-chain fallback (same IEEE ops in the same order), so a
-    numpy/pyarrow upgrade that broke the accumulation order would be a
-    silent oracle break. Pin full-output equality (ids AND truncated
-    cosines) on a planted corpus exercising both paths."""
-    from tpctools_spark.generate_corpus import gen_embeddings_scattered
-    from tpctools_spark.queries import dedup as D
-    from tpctools_spark.registry import spark_queries
-
-    d = str(tmp_path / "parity")
-    gen_embeddings_scattered(spark, 3000, dim=64, parts=4).write.mode(
-        "overwrite"
-    ).parquet(f"{d}/embeddings.parquet")
-
-    def rows():
-        out = sorted(
-            (r.vec_a, r.vec_b, r.cosine)
-            for r in spark_queries()["dedup_lsh_cosine"](spark, d).collect()
-        )
-        spark.catalog.clearCache()
-        return out
-
-    arrow_rows = rows()
-    real = D._lsh_sig_arrow
-    D._lsh_sig_arrow = lambda *a, **k: None  # force the chain fallback
-    try:
-        chain_rows = rows()
-    finally:
-        D._lsh_sig_arrow = real
-    assert arrow_rows, "parity corpus produced no pairs"
-    assert arrow_rows == chain_rows
+def test_lsh_arrow_signatures_match_oracle(
+    planted_embeddings, oracle_parity
+):
+    """The Arrow signature build claims BIT-identical plane sums to the
+    oracle's left-to-right ``list_reduce`` (same IEEE ops in the same
+    order), so a numpy/pyarrow upgrade that broke the accumulation order
+    would be a silent oracle break. Pin exact output equality (ids AND
+    truncated cosines) on a planted corpus."""
+    d, con = planted_embeddings
+    assert oracle_parity(con, d, "dedup_lsh_cosine"), (
+        "parity corpus produced no pairs"
+    )
 
 
 def test_minhash_arrow_and_join_tails_are_value_identical(
-    spark, tmp_path
+    spark, tmp_path, monkeypatch
 ):
     """The r13 Arrow within-bucket agreement scan claims the same pair
     set as the band-join + signature-rejoin fallback (the agreement
@@ -290,13 +270,12 @@ def test_minhash_arrow_and_join_tails_are_value_identical(
     Pin full output equality on a generated corpus with planted
     near-dups exercising both paths.
 
-    r14: the Arrow tail is SIZE-GATED (``_minhash_arrow_enabled``) —
-    this corpus is far below the gate, so the Arrow leg forces the
-    path on via TPCTOOLS_MINHASH_ARROW=1; and the scan now STREAMS
-    sorted batches (carry/flush at bucket-run boundaries), so the
-    Arrow leg also shrinks ``arrow.maxRecordsPerBatch`` to force many
-    batches per partition and exercise run-straddling carries."""
-    import os
+    The Arrow tail is SIZE-GATED (``_minhash_arrow_enabled``), so each
+    leg is forced by moving ``_MINHASH_ARROW_MIN_BYTES``; the scan
+    STREAMS sorted batches (carry/flush at bucket-run boundaries), so
+    the Arrow leg also shrinks ``arrow.maxRecordsPerBatch`` to force
+    many batches per partition and exercise run-straddling carries."""
+    import sys
 
     from tpctools_spark.generate_corpus import gen_documents
     from tpctools_spark.queries import dedup as D
@@ -317,46 +296,31 @@ def test_minhash_arrow_and_join_tails_are_value_identical(
 
     batch_key = "spark.sql.execution.arrow.maxRecordsPerBatch"
     old_batch = spark.conf.get(batch_key, None)
-    os.environ["TPCTOOLS_MINHASH_ARROW"] = "1"
+    monkeypatch.setattr(D, "_MINHASH_ARROW_MIN_BYTES", 0)
     spark.conf.set(batch_key, "256")  # many batches → straddled runs
     try:
         arrow_rows = rows()
     finally:
-        os.environ.pop("TPCTOOLS_MINHASH_ARROW", None)
         if old_batch is None:
             spark.conf.unset(batch_key)
         else:
             spark.conf.set(batch_key, old_batch)
-    # The size gate routes this (tiny) corpus to the join tail without
-    # the forced env — the default dispatch IS the fallback here.
-    real = D._minhash_pairs_arrow
-    D._minhash_pairs_arrow = lambda *a, **k: None  # force the join tail
-    try:
-        join_rows = rows()
-    finally:
-        D._minhash_pairs_arrow = real
+    monkeypatch.setattr(D, "_MINHASH_ARROW_MIN_BYTES", sys.maxsize)
+    join_rows = rows()
     assert arrow_rows, "parity corpus produced no pairs"
     assert arrow_rows == join_rows
 
 
-def test_minhash_arrow_gate_reads_scan_size_and_env(spark):
+def test_minhash_arrow_gate_reads_scan_size(spark):
     """The r14 size gate: small corpora route to the JVM join tail
-    (the driver-measured −21%/−11% small-tier fix), env forces win
-    either way, and an unknown size estimate gates OPEN (scale-safe:
-    at 100 TB the gate must never fail closed)."""
-    import os
-
+    (the measured −21%/−11% small-tier fix), and an unknown size
+    estimate gates OPEN (scale-safe: at 100 TB the gate must never fail
+    closed)."""
     from tpctools_spark.catalog import table
     from tpctools_spark.queries import dedup as D
 
     raw = table(spark, "/root/testdata/sf0.001", "documents")
     assert not D._minhash_arrow_enabled(raw)  # ~65 KB << 16 MiB gate
-    for forced, want in (("1", True), ("0", False)):
-        os.environ["TPCTOOLS_MINHASH_ARROW"] = forced
-        try:
-            assert D._minhash_arrow_enabled(raw) is want
-        finally:
-            os.environ.pop("TPCTOOLS_MINHASH_ARROW", None)
 
     class _NoStats:
         @property

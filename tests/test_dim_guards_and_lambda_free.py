@@ -20,47 +20,8 @@ def _collect_err(df):
     return str(ei.value)
 
 
-def test_wide_dims_rejects_short_embeddings(spark):
-    """element_at past the end returns NULL — the old silent-drop
-    failure mode. The guard must raise, naming the observed dim."""
-    from tpctools_spark.queries.similarity import _wide_dims
-
-    bad = spark.createDataFrame(
-        [(1, [0.1, 0.2, 0.3]), (2, [0.4, 0.5, 0.6])],
-        "vec_id bigint, embedding array<double>",
-    )
-    msg = _collect_err(bad.select(*_wide_dims(bad, "embedding", "a")))
-    assert "_wide_dims" in msg and "got 3" in msg
-
-
-def test_wide_dims_rejects_long_embeddings(spark):
-    """Extra dims would be silently ignored (truncated cosines) — the
-    guard must raise on longer-than-expected vectors too."""
-    from tpctools_spark.queries.similarity import _EMB_DIM, _wide_dims
-
-    bad = spark.createDataFrame(
-        [(1, [0.5] * (_EMB_DIM + 3))],
-        "vec_id bigint, embedding array<double>",
-    )
-    msg = _collect_err(bad.select(*_wide_dims(bad, "embedding", "a")))
-    assert f"got {_EMB_DIM + 3}" in msg
-
-
-def test_wide_dims_identity_on_correct_dim(spark):
-    """On a right-sized vector the guard is an identity: the flattened
-    columns equal the array elements exactly."""
-    from tpctools_spark.queries.similarity import _EMB_DIM, _wide_dims
-
-    vec = [float(i) / 7 for i in range(_EMB_DIM)]
-    ok = spark.createDataFrame(
-        [(1, vec)], "vec_id bigint, embedding array<double>"
-    )
-    row = ok.select(*_wide_dims(ok, "embedding", "a")).collect()[0]
-    assert [row[f"a{d}"] for d in range(1, _EMB_DIM + 1)] == vec
-
-
 def test_lsh_cosine_rejects_dim_drift(spark, tmp_path):
-    """The LSH flatten carries the same guard: a corpus with dim != 64
+    """The LSH signature build guards the dim: a corpus with dim != 64
     errors instead of producing NULL-gated empty output."""
     from tpctools_spark.registry import spark_queries
 
@@ -73,6 +34,26 @@ def test_lsh_cosine_rejects_dim_drift(spark, tmp_path):
         spark_queries()["dedup_lsh_cosine"](spark, bad_dir)
     )
     assert "dedup_lsh_cosine" in msg and "got 4" in msg
+    spark.catalog.clearCache()
+
+
+@pytest.mark.parametrize(
+    "name",
+    ["dedup_embedding", "dedup_embedding_incremental", "dedup_semantic_prune"],
+)
+def test_cell_scans_reject_dim_drift(spark, tmp_path, name):
+    """The Arrow within-cell scans (``_cell_blocks``) reshape each cell
+    to n×64; a 4-dim corpus must raise, naming the observed dim, instead
+    of mis-reshaping into wrong cosines."""
+    from tpctools_spark.registry import spark_queries
+
+    bad_dir = str(tmp_path / "sfbad")
+    spark.createDataFrame(
+        [(i, i % 3, [0.1 * i, 0.2, 0.3, 0.4]) for i in range(1, 40)],
+        "vec_id bigint, label int, embedding array<float>",
+    ).write.parquet(f"{bad_dir}/embeddings.parquet")
+    msg = _collect_err(spark_queries()[name](spark, bad_dir))
+    assert "embedding dim != 64 (got 4)" in msg
     spark.catalog.clearCache()
 
 

@@ -139,83 +139,29 @@ def test_semantic_prune_is_deterministic_subset(spark, queries):
     assert 0 < len(a) <= total
 
 
-def test_prune_arrow_and_smj_paths_are_bit_identical(spark, queries, tmp_path):
-    """The r13 Arrow within-cell pair scan claims BIT-identical dropped
-    sets to the wide-column SMJ fallback (same IEEE ops in dim order —
-    the _lsh_sig_arrow argument), so a numpy/pyarrow change that broke
-    the accumulation order would be a silent oracle break. Pin full
-    output equality on a planted corpus exercising both paths."""
-    from tpctools_spark.generate_corpus import gen_embeddings_scattered
-    from tpctools_spark.queries import similarity as S
+def test_prune_and_embedding_arrow_scans_match_oracle(
+    planted_embeddings, oracle_parity
+):
+    """The Arrow within-cell pair scans claim BIT-identical results to
+    the DuckDB oracle (same IEEE ops in dim order — the _lsh_sig_arrow
+    argument), so a numpy/pyarrow change that broke the accumulation
+    order would be a silent oracle break. Pin exact output equality on
+    a planted corpus large enough to fill many cells, for the three
+    queries built on ``_cell_blocks``/``_pair_dot_block``."""
+    d, con = planted_embeddings
 
-    d = str(tmp_path / "parity")
-    gen_embeddings_scattered(spark, 3000, dim=64, parts=4).write.mode(
-        "overwrite"
-    ).parquet(f"{d}/embeddings.parquet")
+    kept = oracle_parity(con, d, "dedup_semantic_prune")
+    assert kept, "parity corpus pruned everything"
+    assert len(kept) < 3000, "parity corpus dropped nothing"
 
-    def rows():
-        out = sorted(
-            (r.vec_id, r.label, r.cent_cos)
-            for r in queries["dedup_semantic_prune"](spark, d).collect()
-        )
-        spark.catalog.clearCache()
-        return out
+    pairs = oracle_parity(con, d, "dedup_embedding")
+    assert pairs, "parity corpus produced no pairs"
 
-    arrow_rows = rows()
-    real = S._prune_dropped_arrow
-    S._prune_dropped_arrow = lambda *a, **k: None  # force the SMJ tail
-    try:
-        smj_rows = rows()
-    finally:
-        S._prune_dropped_arrow = real
-    assert arrow_rows, "parity corpus pruned everything"
-    assert len(arrow_rows) < 3000, "parity corpus dropped nothing"
-    assert arrow_rows == smj_rows
-
-    # dedup_embedding rides the same _cell_blocks/_pair_dot_block
-    # machinery — pin its pair-table parity on the same corpus.
-    def pair_rows():
-        out = sorted(
-            (r.vec_a, r.vec_b, r.cosine)
-            for r in queries["dedup_embedding"](spark, d).collect()
-        )
-        spark.catalog.clearCache()
-        return out
-
-    arrow_pairs = pair_rows()
-    real_pairs = S._emb_pairs_arrow
-    S._emb_pairs_arrow = lambda *a, **k: None  # force the SMJ pair join
-    try:
-        smj_pairs = pair_rows()
-    finally:
-        S._emb_pairs_arrow = real_pairs
-    assert arrow_pairs, "parity corpus produced no pairs"
-    assert arrow_pairs == smj_pairs
-
-    # dedup_embedding_incremental: the Arrow within-cell batch-probe
-    # counts must match the wide-column probe join row for row.
-    def incr_rows():
-        out = sorted(
-            (r.vec_id, r.decision, r.n_neighbors)
-            for r in queries["dedup_embedding_incremental"](
-                spark, d
-            ).collect()
-        )
-        spark.catalog.clearCache()
-        return out
-
-    arrow_incr = incr_rows()
-    real_incr = S._emb_incr_hits_arrow
-    S._emb_incr_hits_arrow = lambda *a, **k: None  # force the probe join
-    try:
-        join_incr = incr_rows()
-    finally:
-        S._emb_incr_hits_arrow = real_incr
-    assert arrow_incr, "parity corpus produced no batch rows"
-    assert any(r[1] == "near_dup" for r in arrow_incr), (
+    incr = oracle_parity(con, d, "dedup_embedding_incremental")
+    assert incr, "parity corpus produced no batch rows"
+    assert any(r.decision == "near_dup" for r in incr), (
         "parity corpus flagged nothing"
     )
-    assert arrow_incr == join_incr
 
 
 def test_chunk_cdc_chunks_cover_payload(spark, queries):

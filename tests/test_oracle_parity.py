@@ -8,13 +8,7 @@ sums, truncation, timezone pinning).
 
 from __future__ import annotations
 
-import os
-import sys
-
 import pytest
-
-sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(__file__)), "scripts"))
-from check_oracle import normalize  # noqa: E402
 
 SUBSET = [
     "agg_group_sum",
@@ -40,14 +34,5 @@ SUBSET = [
 
 
 @pytest.mark.parametrize("name", SUBSET)
-def test_matches_duckdb(spark, duck, sf_dir, name):
-    from tpctools_spark.registry import oracle_queries, spark_queries
-
-    sdf = spark_queries()[name](spark, sf_dir)
-    srows = [tuple(r) for r in sdf.collect()]
-    rel = duck.sql(oracle_queries()[name])
-    drows = rel.fetchall()
-
-    assert sorted(sdf.columns) == sorted(rel.columns), name
-    assert len(srows) == len(drows), f"{name}: {len(srows)} vs {len(drows)}"
-    assert normalize(srows, sdf.columns) == normalize(drows, list(rel.columns))
+def test_matches_duckdb(duck, sf_dir, oracle_parity, name):
+    oracle_parity(duck, sf_dir, name)

@@ -72,11 +72,18 @@ def test_readme_inventory_table_matches_registry():
     qs = spark_queries()
     os_ = oracle_queries()
     text = open("/root/repo/README.md").read()
-    rows = dict(
-        re.findall(r"^\| `([a-z0-9_]+)` \| (oracle|rows-only) \|", text, re.M)
+    found = re.findall(
+        r"^\| `([a-z0-9_]+)` \| (oracle|rows-only) \|", text, re.M
     )
+    rows = dict(found)
     missing = sorted(set(qs) - set(rows))
     assert not missing, f"README table missing: {missing[:10]}"
+    # Each query appears exactly once: a stale second copy of the table
+    # (left behind when a regeneration stopped at a hand-edited row)
+    # must fail here.
+    seen = [k for k, _ in found if k in qs]
+    dupes = sorted({k for k in seen if seen.count(k) > 1})
+    assert not dupes and len(seen) == len(qs), f"README rows repeated: {dupes[:10]}"
     for k in qs:
         want = "oracle" if k in os_ else "rows-only"
         assert rows[k] == want, (k, rows[k], want)

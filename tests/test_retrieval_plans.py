@@ -134,32 +134,30 @@ def test_hilbert_matches_reference_and_is_shuffle_free(spark):
     assert "Exchange" not in plan
 
 
-def test_pq_build_arrow_and_join_forms_are_value_identical(spark):
-    """r13: the Arrow argmin build (`_pq_build_arrow`) must emit
-    exactly the codebook and code table of the broadcast-join form it
-    replaced — all quantities are int64 (fixed-point vectors, squared
-    L2, partial sums), numpy argmin's first-minimal-index equals the
-    (d, c) struct-min tie-break over code-id-ordered rows, and the
-    toward-zero `div` stays in the JVM, so equality must be EXACT."""
-    from tpctools_spark.queries.retrieval import (
-        _pq_build_arrow,
-        _pq_build_joins,
-    )
+def test_pq_build_arrow_and_join_forms_are_value_identical(spark, duck):
+    """The Arrow argmin build (`_pq_build`) must emit exactly the
+    codebook and code table of the oracle's broadcast-join form
+    (`_pq_cte`'s ``cb`` and ``enc``) — all quantities are int64
+    (fixed-point vectors, squared L2, partial sums), numpy argmin's
+    first-minimal-index equals the (d, c) tie-break over code-id-ordered
+    rows, and the toward-zero `div` stays in the JVM, so equality must
+    be EXACT."""
+    from tpctools_spark.queries.retrieval import _pq_build, _pq_cte
 
-    acb, aenc = _pq_build_arrow(spark, SF)
-    assert acb is not None, "numpy/pyarrow ship in this environment"
-    jcb, jenc = _pq_build_joins(spark, SF)
+    cb, enc = _pq_build(spark, SF)
 
-    def canon(df, cols):
+    def canon(rows):
         return sorted(
-            tuple(
-                tuple(r[k]) if isinstance(r[k], list) else r[k]
-                for k in cols
-            )
-            for r in df.collect()
+            tuple(tuple(v) if isinstance(v, list) else v for v in r)
+            for r in rows
         )
 
-    assert canon(acb, ["cs", "c", "csv"]) == canon(jcb, ["cs", "c", "csv"])
-    assert canon(aenc, ["vec_id", "label", "s", "code"]) == canon(
-        jenc, ["vec_id", "label", "s", "code"]
+    def oracle(sql):
+        return canon(duck.sql(f"WITH {_pq_cte()} {sql}").fetchall())
+
+    got_cb = canon(cb.select("cs", "c", "csv").collect())
+    assert got_cb and got_cb == oracle("SELECT s, c, csv FROM cb")
+    got_enc = canon(enc.select("vec_id", "label", "s", "code").collect())
+    assert got_enc and got_enc == oracle(
+        "SELECT vec_id, label, s, code FROM enc"
     )

@@ -263,3 +263,19 @@ def test_components_chain_converges_logarithmically(spark):
     assert rounds <= _COMPONENTS_MAX_ROUNDS
     assert len(rows) == n + 1
     assert all(r["cluster_id"] == 0 for r in rows)
+
+
+def test_queries_have_no_import_fallbacks():
+    """numpy and pyarrow are declared dependencies (pyproject.toml), so
+    an ``except ImportError`` under ``queries/`` can only guard a second
+    implementation that never runs outside a parity test."""
+    from pathlib import Path
+
+    import tpctools_spark.queries as Q
+
+    offenders = [
+        p.name
+        for p in sorted(Path(Q.__file__).parent.rglob("*.py"))
+        if "except ImportError" in p.read_text()
+    ]
+    assert not offenders, f"dead import fallbacks in {offenders}"

@@ -321,30 +321,21 @@ def _minhash_band_structs(rows_per_band: int) -> F.Column:
 # conservative side of break-even so the JVM tail keeps every tier it
 # already wins.
 # Unknown stats gate OPEN (at 100 TB the gate must never fail closed).
-# TPCTOOLS_MINHASH_ARROW=1/0 forces the path (parity tests + A/Bs).
 _MINHASH_ARROW_MIN_BYTES = 16 * 1024 * 1024
 
 
 def _minhash_arrow_enabled(raw_docs: DataFrame) -> bool:
     """True when the Arrow within-bucket tail should serve
     ``dedup_minhash`` — see ``_MINHASH_ARROW_MIN_BYTES``."""
-    import os
-
-    forced = os.environ.get("TPCTOOLS_MINHASH_ARROW", "")
-    if forced == "1":
-        return True
-    if forced == "0":
-        return False
     nbytes = scan_size_bytes(raw_docs)
     return nbytes < 0 or nbytes >= _MINHASH_ARROW_MIN_BYTES
 
 
-def _minhash_pairs_arrow(bands: DataFrame) -> DataFrame | None:
+def _minhash_pairs_arrow(bands: DataFrame) -> DataFrame:
     """``dedup_minhash``'s candidate tail — (doc_a, doc_b, agree) with
     agree ≥ 16 of 32 — as ONE shuffle + an Arrow within-bucket
-    agreement scan; returns None when numpy/pyarrow are missing (the
-    caller falls back to the band self-join + distinct + two signature
-    rejoins, which is value-identical).
+    agreement scan. Value-identical to the band self-join + distinct +
+    two signature rejoins that serve below the size gate.
 
     Why (guide §2.3/§2.4 + the r13 cell-tail lesson): the JVM tail pays
     a two-sided band self-join, a pre-gate distinct over every band
@@ -386,11 +377,6 @@ def _minhash_pairs_arrow(bands: DataFrame) -> DataFrame | None:
     order-invariant, and every (band, bucket) group still lands in one
     worker via the repartition.
     """
-    try:
-        import numpy as np  # noqa: F401
-        import pyarrow as pa  # noqa: F401
-    except ImportError:  # pragma: no cover — both ship in this env
-        return None
     from pyspark.sql import types as spark_types
 
     def gen(batches):
@@ -504,18 +490,9 @@ def dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = spread_input(raw_docs)
     rows_per_band = N_MINHASH // MINHASH_BANDS
 
-    # r13: the candidate tail comes from the Arrow within-bucket
-    # agreement scan (one shuffle of int32-narrowed signatures, numpy
-    # pair agreements — see _minhash_pairs_arrow for the A/B and the
-    # exactness argument); the band self-join + rejoins below remain
-    # as the no-numpy fallback, value-identical (pinned by
-    # tests/test_dedup_invariants.py's parity test). One consumer →
-    # no signature cache on this path.
-    # r14: SIZE-GATED — the Arrow tail only pays past
-    # _MINHASH_ARROW_MIN_BYTES of corpus (see the constant's comment
-    # for the driver-measured small-tier losses it prevents); below it
-    # the JVM join tail serves, same values.
-    arrow_pairs = None
+    # Past _MINHASH_ARROW_MIN_BYTES of corpus the candidate tail is the
+    # Arrow within-bucket agreement scan (one consumer → no signature
+    # cache); below it the value-identical JVM join tail serves.
     if _minhash_arrow_enabled(raw_docs):
         bands_sig = _minhash_signatures(docs).select(
             "doc_id",
@@ -523,7 +500,6 @@ def dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.explode(_minhash_band_structs(rows_per_band)).alias("bb"),
         ).select("doc_id", "bb.band", "bb.bucket", "sig32")
         arrow_pairs = _minhash_pairs_arrow(bands_sig)
-    if arrow_pairs is not None:
         est = F.round(
             F.col("agree").cast("double") / F.lit(float(N_MINHASH)), 4
         )
@@ -1207,18 +1183,12 @@ def dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Per-pair cosines use ONE ordered-fold double dot product against
     precomputed norms: float·float is exact in double and both engines
-    fold the product list in the same left-to-right order (Spark
-    ``aggregate``, DuckDB ``list_reduce``), so the threshold cannot
-    flip on FP order — without paying per-pair decimal arithmetic in
-    the (bounded) within-cell hot path.
+    fold the product list in the same left-to-right order (the Arrow
+    scan's ``_pair_dot_block``, DuckDB ``list_reduce``), so the
+    threshold cannot flip on FP order — without paying per-pair decimal
+    arithmetic in the (bounded) within-cell hot path.
     """
-    from tpctools_spark.queries.similarity import (
-        _EMB_DIM,
-        _dot_chain,
-        _dotf,
-        _emb_pairs_arrow,
-        _wide_dims,
-    )
+    from tpctools_spark.queries.similarity import _dotf, _emb_pairs_arrow
 
     emb = table(spark, sf_dir, "embeddings")
     e = F.transform(F.col("embedding"), lambda x: x.cast("double"))
@@ -1226,58 +1196,12 @@ def dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     tagged = _embedding_cells(prep).withColumn(
         "nrm", F.sqrt(_dotf(F.col("e"), F.col("e")))
     )
-    # r13: the pair table comes from the Arrow within-cell pair scan
-    # (one shuffle, bounded numpy pair dots — see _emb_pairs_arrow for
-    # the A/B and the bit-exactness argument); the wide-column SMJ pair
-    # join below remains as the no-numpy fallback, value-identical
-    # (pinned by tests/test_estimator_accuracy.py's parity test).
-    arrow_pairs = _emb_pairs_arrow(tagged)
-    if arrow_pairs is not None:
-        return arrow_pairs.select(
-            "vec_a",
-            "vec_b",
-            trunc_digits(F.col("cosine_raw"), 4).alias("cosine"),
-        )
-    # Wide-column pair join (the r11 LSH shape): dims ride through the
-    # cell self-join as flat double columns so the per-pair dot —
-    # which is also the OUTPUT cosine's numerator — is one codegen
-    # chain whose association equals the 0.0-seeded fold (see
-    # similarity._dot_chain), keeping the value bit-identical to the
-    # oracle's list_reduce. Interleaved A/B (500k fixture, 5 reps):
-    # HOF 6.42 s -> wide 4.77 s min, sign-stable all reps, identical
-    # (total, planted) = (455062, 6770).
-    tagged = tagged.select(
-        "vec_id", "label", "subcell", "nrm",
-        *_wide_dims(tagged, "e", "w"),
-    )
-    ea_cols = [F.col(f"w{d}").alias(f"a{d}") for d in range(1, _EMB_DIM + 1)]
-    eb_cols = [F.col(f"w{d}").alias(f"x{d}") for d in range(1, _EMB_DIM + 1)]
-    a = tagged.select(
-        F.col("vec_id").alias("vec_a"),
-        F.col("label").alias("label_a"),
-        F.col("subcell").alias("cell_a"),
-        F.col("nrm").alias("na"),
-        *ea_cols,
-    )
-    b = tagged.select(
-        F.col("vec_id").alias("vec_b"),
-        F.col("label").alias("label_b"),
-        F.col("subcell").alias("cell_b"),
-        F.col("nrm").alias("nb"),
-        *eb_cols,
-    )
-    dot = _dot_chain("a", "x")
-    cosine = dot / (F.col("na") * F.col("nb"))
-    return (
-        a.join(
-            b,
-            (F.col("label_a") == F.col("label_b"))
-            & (F.col("cell_a") == F.col("cell_b"))
-            & (F.col("vec_a") < F.col("vec_b")),
-        )
-        .withColumn("cosine_raw", cosine)
-        .filter(F.col("cosine_raw") >= 0.3)
-        .select("vec_a", "vec_b", trunc_digits(F.col("cosine_raw"), 4).alias("cosine"))
+    # Pairs come from the Arrow within-cell pair scan: one shuffle,
+    # bounded numpy pair dots (OPTIMIZATION_r13.md §6).
+    return _emb_pairs_arrow(tagged).select(
+        "vec_a",
+        "vec_b",
+        trunc_digits(F.col("cosine_raw"), 4).alias("cosine"),
     )
 
 
@@ -1427,17 +1351,12 @@ def dedup_embedding_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-label bit counts/centroids (at 100 TB the standing corpus's
     cells and centroids are a persisted index, built once and reused
     per ingest); within-cell occupancy is held ≤ ~32 by construction,
-    so the probe join is O(batch · occupancy). Per-pair cosines use
-    the ordered-fold double dot (``_dotf``) against precomputed norms
-    — bitwise-reproducible across engines without per-pair decimals.
+    so the probe is O(batch · occupancy). Per-pair cosines use the
+    dim-ordered double dot (``_pair_dot_block``) against precomputed
+    norms — bitwise-reproducible across engines without per-pair
+    decimals.
     """
-    from tpctools_spark.queries.similarity import (
-        _EMB_DIM,
-        _dot_chain,
-        _dotf,
-        _emb_incr_hits_arrow,
-        _wide_dims,
-    )
+    from tpctools_spark.queries.similarity import _dotf, _emb_incr_hits_arrow
 
     emb = table(spark, sf_dir, "embeddings")
     e = F.transform(F.col("embedding"), lambda x: x.cast("double"))
@@ -1446,62 +1365,9 @@ def dedup_embedding_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         "nrm", F.sqrt(_dotf(F.col("e"), F.col("e")))
     )
     is_batch = (F.col("vec_id") % 9 == 0) & (F.col("vec_id") > 0)
-    # r13: neighbor counts come from the Arrow within-cell scan (one
-    # shuffle, bounded numpy batch×corpus dots — see
-    # _emb_incr_hits_arrow for the A/B and the bit-exactness
-    # argument); the wide-column probe join below remains as the
-    # no-numpy fallback, value-identical (pinned by
-    # tests/test_estimator_accuracy.py's parity test).
-    arrow_hits = _emb_incr_hits_arrow(tagged)
-    if arrow_hits is not None:
-        return (
-            prep.filter(is_batch)
-            .select("vec_id")
-            .join(arrow_hits, prep.vec_id == arrow_hits.bd, "left")
-            .select(
-                "vec_id",
-                F.when(F.col("n").isNotNull(), "near_dup")
-                .otherwise("accept")
-                .alias("decision"),
-                F.coalesce(F.col("n"), F.lit(0).cast("bigint")).alias(
-                    "n_neighbors"
-                ),
-            )
-        )
-    # Wide-column probe join — see dedup_embedding for the shape and
-    # the bit-identity argument (similarity._dot_chain).
-    tagged = tagged.select(
-        "vec_id", "label", "subcell", "nrm",
-        *_wide_dims(tagged, "e", "w"),
-    )
-    eb_cols = [F.col(f"w{d}").alias(f"a{d}") for d in range(1, _EMB_DIM + 1)]
-    ec_cols = [F.col(f"w{d}").alias(f"x{d}") for d in range(1, _EMB_DIM + 1)]
-    is_batch = (F.col("vec_id") % 9 == 0) & (F.col("vec_id") > 0)
-    b = tagged.filter(is_batch).select(
-        F.col("vec_id").alias("bd"),
-        F.col("label").alias("label_b"),
-        F.col("subcell").alias("cell_b"),
-        F.col("nrm").alias("nb"),
-        *eb_cols,
-    )
-    c = tagged.filter(~is_batch).select(
-        F.col("label").alias("label_c"),
-        F.col("subcell").alias("cell_c"),
-        F.col("nrm").alias("nc"),
-        *ec_cols,
-    )
-    dot = _dot_chain("a", "x")
-    cosine = dot / (F.col("nb") * F.col("nc"))
-    hits = (
-        b.join(
-            c,
-            (F.col("label_b") == F.col("label_c"))
-            & (F.col("cell_b") == F.col("cell_c")),
-        )
-        .filter(cosine >= 0.3)
-        .groupBy("bd")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n"))
-    )
+    # Neighbor counts come from the Arrow within-cell batch×corpus scan
+    # (OPTIMIZATION_r13.md §8).
+    hits = _emb_incr_hits_arrow(tagged)
     return (
         prep.filter(is_batch)
         .select("vec_id")
@@ -1876,41 +1742,24 @@ def _lsh_bits(n: int) -> int:
     return max(_LSH_MIN_BITS, b)
 
 
-def _lsh_sig_arrow(vecs: DataFrame, bits: int) -> DataFrame | None:
+def _lsh_sig_arrow(vecs: DataFrame, bits: int) -> DataFrame:
     """Plane signatures + band keys + fast sq-norm as ONE Arrow-batched
-    map over ``(vec_id, embedding)`` — returns None when numpy/pyarrow
-    are unavailable (callers fall back to the codegen sign chains,
-    which produce bit-identical values).
+    map over ``(vec_id, embedding)``.
 
-    Why Python in a hot path, against this repo's own rule: the r13
-    stage attribution (.scratch/prof_lsh13*.py) put ~21 s of the 500k
-    tier's ~23 s in the 64 plane-sign chains — 64 chains × 64 ± terms
-    generate methods so large that HotSpot's JIT limits leave them
-    running as INTERPRETED BYTECODE even when the stage compiles (WSCG
-    measured within noise; raising codegen.maxFields/hugeMethodLimit
-    recovered nothing). Measured on the 500k fixture, signature build
-    → noop: codegen chains 22.4 s, algebraic op-halving (T − 2·negsum)
-    9.2 s, THIS Arrow map 1.3 s warm (17×). The map is row-local and
-    Arrow-vectorized — the same batch shape as the multimodal family —
-    so the 100 TB posture (no shuffle before the band join) is
-    unchanged.
+    Why Python in a hot path: as codegen ± chains the 64 plane sums
+    produced methods too large for HotSpot's JIT and ran interpreted;
+    this map measured 17× faster on the signature build
+    (OPTIMIZATION_r13.md §1). It is row-local, so there is still no
+    shuffle before the band join.
 
-    Bit-exactness argument (why the oracle does not change): the JVM
-    chain computes ((±d1 ± d2) ± d3)…, i.e. products e_d·(±1) folded
-    left-to-right with first-element seeding; the numpy loop below
-    initializes acc = e₁·s₁ and adds e_d·s_d in the same dim order —
-    every step is the same IEEE-754 double op in the same order, so
-    every plane sum (and therefore every sign bit and band key) is
-    bit-identical to the chain form and to the DuckDB oracle's
-    list_reduce. nsq likewise accumulates d² in dim order, exactly the
-    flat square chain. float32→float64 casts are exact; ±1.0
-    multiplies are exact; int64 band-key packing is integer-exact.
+    Bit-exactness: each plane sum starts from e₁·s₁ and adds e_d·s_d in
+    dim order — the same IEEE-754 double ops in the same order as the
+    DuckDB oracle's first-element-seeded list_reduce — so every sign
+    bit and band key matches the oracle. nsq accumulates d² in dim
+    order. float32→float64 casts and ±1.0 multiplies are exact; int64
+    band-key packing is integer-exact.
     """
-    try:
-        import numpy as np
-        import pyarrow as pa  # noqa: F401
-    except ImportError:  # pragma: no cover — both ship in this env
-        return None
+    import numpy as np
     from pyspark.sql import types as spark_types
 
     planes = _LSH_BANDS * bits
@@ -1933,9 +1782,8 @@ def _lsh_sig_arrow(vecs: DataFrame, bits: int) -> DataFrame | None:
             idx_e = b.schema.get_field_index("embedding")
             emb = b.column(idx_e)
             n = b.num_rows
-            # Dim drift fails LOUDLY (mirrors the _dim_guard
-            # assert_true on the codegen path): ragged or null
-            # embeddings would otherwise silently mis-reshape.
+            # Dim drift fails LOUDLY: ragged or null embeddings would
+            # otherwise silently mis-reshape.
             if n:
                 offs = np.diff(emb.offsets.to_numpy())
                 if emb.null_count or not (offs == dim).all():
@@ -2004,8 +1852,7 @@ def _lsh_sq_norm(col: F.Column) -> F.Column:
 def _lsh_pairs_from_bands(prep: DataFrame, bands: DataFrame) -> DataFrame:
     """Shared LSH tail: band self-join → in-join 0.45 double-dot gate →
     distinct → exact DECIMAL(25,16) rescore. ``bands`` must carry
-    (vec_id, nsq, d1..d64, band, band_key); both the Arrow and the
-    codegen-chain signature builders produce exactly that shape.
+    (vec_id, nsq, d1..d64, band, band_key).
     ``prep`` carries (vec_id, embedding) only — the exact decimal
     sq_norm is computed HERE, per survivor (r13: keeping it in the
     500k-row prep cache cost ~1.2 s/pass of interpreted decimal folds
@@ -2155,26 +2002,18 @@ def dedup_lsh_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     (P[match] = 1-(1-(1-θ/π)^bits)^bands). Plane signs are a two-round
     square-and-mix hash of (plane, dim) (``_lsh_sign_pos``; see the
     constants block for why one multiplicative round collapsed band-key
-    entropy) — a pure function of two plan-time constants — so they
-    are BAKED IN as literal ± terms:
-    each plane sum is one flat left-to-right chain of 64 add/negate
-    ops inside whole-stage codegen, not an interpreted higher-order
-    fold (the fold form was the signature bottleneck: 4b folds × 64
-    lambda evals per row). The chain's association ((t1+t2)+t3)…
-    is exactly DuckDB ``list_reduce``'s first-element seeding, and
-    IEEE-identical to a 0.0-seeded fold since 0.0 + x == x (a -0.0
-    vs +0.0 residue can only arise when every term is a signed zero,
-    and the ``>= 0`` sign test treats both zeros equally) — so Spark
-    and DuckDB build bit-identical signatures, and the whole pipeline,
-    including the corpus-adaptive bit count (``_lsh_bits``: one
-    metadata-cheap count), is oracle-checked.
+    entropy) — a pure function of two plan-time constants. Each plane
+    sum folds the 64 signed terms in dim order, exactly DuckDB
+    ``list_reduce``'s first-element seeding, so Spark and DuckDB build
+    bit-identical signatures, and the whole pipeline, including the
+    corpus-adaptive bit count (``_lsh_bits``: one metadata-cheap
+    count), is oracle-checked.
 
     Scale: signatures are ROW-LOCAL (one Arrow-batched map over the
-    scan — see ``_lsh_sig_arrow`` — or the codegen-chain projection
-    fallback; no shuffle before the band join); the self-join touches
-    only
-    same-bucket pairs, and b grows ~log N to hold expected bucket
-    occupancy at ``_LSH_BUCKET_TARGET`` (8: expected candidate volume
+    scan, ``_lsh_sig_arrow``; no shuffle before the band join); the
+    self-join touches only same-bucket pairs, and b grows ~log N to
+    hold expected bucket occupancy at ``_LSH_BUCKET_TARGET`` (8:
+    expected candidate volume
     ≈ N·(occ-1)/2·bands ≈ 14·N — at target 32 the full pair
     enumeration at 500k vectors was ~30M pairs and dominated the
     runtime; planted-dup recall at ≥0.999 cosine stays ≥99.8% because
@@ -2213,16 +2052,11 @@ def dedup_lsh_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     # anyway, and the signature projection below builds FROM that cache
     # — the r11 shape paid three separate scans (count, prep, sigw).
     bits = _lsh_bits(prep.count())
-    planes = _LSH_BANDS * bits
 
-    # Plane signs at PLAN time (pure function of (plane, dim)); the
-    # oracle recomputes the same two-round hash inside its sig CTE.
-    _sign_pos = _lsh_sign_pos
-
-    # Dimension drift fails LOUDLY (r11 ADVICE, same guard as
-    # similarity._wide_dims): element_at past the end would return
-    # NULL and silently drop pairs; instead d1 rides an assert_true on
-    # size(embedding) == _LSH_DIM — row-local, identity when right.
+    # Dimension drift fails LOUDLY (r11 ADVICE): element_at past the end
+    # would return NULL and silently drop pairs; instead d1 rides an
+    # assert_true on size(embedding) == _LSH_DIM — row-local, identity
+    # when right.
     _dim_guard = F.assert_true(
         F.size(F.col("embedding")) == _LSH_DIM,
         F.concat(
@@ -2231,13 +2065,8 @@ def dedup_lsh_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(")"),
         ),
     )
-    # r12 A/B NEGATIVE — float dims through the join: flattening to
-    # FLOAT columns (cast to double per arithmetic reference) looked
-    # like it should halve the join payload, but UnsafeRow stores every
-    # fixed-width field in an 8-byte slot, so sort/shuffle bytes do not
-    # shrink at all and the ~3G extra float→double conversions cost
-    # -25% sign-stable (20.97 vs 26.18 s min, 3 interleaved reps,
-    # identical pairs). Dims flatten to DOUBLE once, here.
+    # Dims flatten to DOUBLE once, here: FLOAT columns do not shrink
+    # UnsafeRow's 8-byte slots and measured 25% slower (r12 A/B).
     dim_exprs = [
         F.when(_dim_guard.isNull(), F.element_at(F.col("embedding"), 1))
         .cast("double")
@@ -2247,143 +2076,37 @@ def dedup_lsh_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
         for d in range(2, _LSH_DIM + 1)
     ]
 
-    # r13: the signature build (plane signs + band keys + fast nsq)
-    # runs as ONE Arrow-batched numpy map — see _lsh_sig_arrow's
-    # docstring for the attribution (the codegen ± chains were ~21 s
-    # of the ~23 s tier: generated methods too large for HotSpot's
-    # JIT, so they ran as interpreted bytecode) and the bit-exactness
-    # argument (same IEEE ops in the same order → identical signs,
-    # keys, and nsq; the oracle is unchanged). Full-query interleaved
-    # A/B at 500k (.scratch/ab_lsh13.out): Arrow min 9.5 s vs chains
-    # min 30.3 s — 3.2×, sign-stable 4/4 pairs, identical output
-    # fingerprint (xxhash64 sum over all 19433 rows) and identical
-    # 7142/7142 planted recall. Per-stage: sig build 22.4 → 1.3 s.
-    # The chain form below remains as the no-numpy fallback,
-    # value-identical.
-    sig_arrow = _lsh_sig_arrow(prep.select("vec_id", "embedding"), bits)
-    if sig_arrow is not None:
-        sigw = sig_arrow.select(
+    # The dims ride THROUGH the band self-join as flat double columns,
+    # so the 0.45 dot gate is evaluated inside the join stage (see
+    # ``_lsh_pairs_from_bands``).
+    sigw = (
+        _lsh_sig_arrow(prep.select("vec_id", "embedding"), bits)
+        .select(
             "vec_id",
             *[F.col(f"k{g}") for g in range(_LSH_BANDS)],
             F.col("nsq"),
             *dim_exprs,
-        ).cache()
-        band_structs = F.array(
-            *[
-                F.struct(
-                    F.lit(g).alias("band"),
-                    F.col(f"k{g}").alias("band_key"),
-                )
-                for g in range(_LSH_BANDS)
-            ]
-        )
-        dim_cols = [F.col(f"d{d}") for d in range(1, _LSH_DIM + 1)]
-        bands_tbl = sigw.select(
-            "vec_id", "nsq", *dim_cols, F.explode(band_structs).alias("bk")
-        ).select(
-            "vec_id", "nsq", *dim_cols,
-            F.col("bk.band").alias("band"),
-            F.col("bk.band_key").alias("band_key"),
-        )
-        return _lsh_pairs_from_bands(prep, bands_tbl)
-
-    def _plane_sum(p: int) -> F.Column:
-        # Flat left-to-right ± chain — codegen, no per-element lambda.
-        acc = F.col("d1") if _sign_pos(p, 1) else -F.col("d1")
-        for d in range(2, _LSH_DIM + 1):
-            term = F.col(f"d{d}") if _sign_pos(p, d) else -F.col(f"d{d}")
-            acc = acc + term
-        return acc
-
-    # Wide-payload shape (r11): the 64 dims ride THROUGH the band
-    # self-join as flat double columns, so the 0.45 dot gate is one
-    # 64-term codegen chain evaluated INSIDE the join stage — the
-    # ~14·N candidate bulk never hits a distinct shuffle, never
-    # re-joins prep, and never pays a per-pair higher-order-function
-    # fold (the r10 narrow shape spent ~23 s of the 500k tier's 61 s
-    # on exactly those three). A double sq-norm (flat square chain)
-    # rides along for the gate's denominator; the EXACT decimal norm
-    # still comes from prep at rescore time, so output values are
-    # bit-identical to the r10 shape (verified: identical collect()
-    # at 30k scattered, identical total/found 19433/7142 at 500k).
-    # Interleaved A/B (scripts/bench_ab.py, emb500k fixture, 3 reps):
-    # narrow 62.8 s vs wide 27.2 s min — 2.31×, sign-stable all reps.
-    # Shuffle volume: N·bands wide rows per side (O(N·dim), the same
-    # asymptotic as Spark's own BucketedRandomProjectionLSH
-    # payload-through-join) versus r10's 14·N-pair distinct + two
-    # 14·N-row prep joins — strictly less data movement at any N.
-    # Sign bits stay SEPARATE columns here (one small splittable
-    # expression each) and the band keys are assembled inside the
-    # Generate below: folding 16 64-term chains into one band-key
-    # expression produced a single ~1024-leaf expression that blew
-    # Janino's 64 KB method limit (the r10-ADVICE codegen-fallback
-    # risk, observed as a hard InternalCompilerException at 50k
-    # during the r11 A/B; the split form compiles at every tier).
-    # Residual fallback note (r10 ADVICE, checked r11): at SMALL
-    # corpora the WHOLE-STAGE unit fusing scan+dims+signs can still
-    # top 64 KB (stage fusion differs per tier); Spark then drops
-    # that one stage to the non-WSCG path — a row-based codegen'd
-    # projection WITH method splitting, not interpreted tree-walk —
-    # so it stays fast and correct (sf0.01 oracle green under the
-    # plain driver session). At the 500k bench tier, where perf
-    # matters, no fallback is logged and the gate's join stage
-    # compiles fused.
-    nsq_fast = sum(F.col(f"d{d}") * F.col(f"d{d}") for d in range(1, _LSH_DIM + 1))
-    # Cache-content A/Bs (r12, 500k tier): dropping the 64 sign-bit
-    # columns from this cache and recomputing the plane chains on each
-    # join side measured inside noise (27.9 vs 29.7 s min over 2 reps
-    # with 12s spread — not sign-stable, not shipped); skipping the
-    # signature cache entirely (both sides projecting chains straight
-    # off the prep cache) ballooned the driver heap to OOM. Pre-
-    # partitioning + pre-sorting the exploded bands table into a cache
-    # (hoping the self-join would elide both exchanges/sorts via the
-    # cache's preserved outputPartitioning) also measured a small LOSS
-    # (5.90 vs 5.54 s on the post-prep section, not sign-stable): the
-    # executed plan kept its exchanges anyway — AQE re-plans
-    # InMemoryTableScan reads — so the extra repartition was pure cost.
-    # The cached (sign bits + nsq + dims) row stays.
-    sigw = (
-        prep.select("vec_id", *dim_exprs)
-        .select(
-            "vec_id",
-            *[
-                (_plane_sum(p) >= 0).cast("bigint").alias(f"b{p}")
-                for p in range(planes)
-            ],
-            nsq_fast.alias("nsq"),
-            *[F.col(f"d{d}") for d in range(1, _LSH_DIM + 1)],
         )
         .cache()
     )
-
-    # r12 A/B NEGATIVE — first-match-band emit: carrying all 4 band
-    # keys on both join sides (to emit each pair only from its first
-    # matching band and drop the post-gate distinct) measured -15.7%
-    # (20.86 vs 24.12 s min, 3 interleaved reps, identical pairs): the
-    # distinct it removes runs over only the ~63k gate SURVIVORS, while
-    # the 8 extra bigints widen every one of the 2M×2 sort rows. The
-    # r11 shape (distinct after the gate) stays.
     band_structs = F.array(
         *[
             F.struct(
                 F.lit(g).alias("band"),
-                sum(
-                    F.col(f"b{g * bits + j}") * (1 << j)
-                    for j in range(bits)
-                ).alias("band_key"),
+                F.col(f"k{g}").alias("band_key"),
             )
             for g in range(_LSH_BANDS)
         ]
     )
     dim_cols = [F.col(f"d{d}") for d in range(1, _LSH_DIM + 1)]
-    bands = sigw.select(
+    bands_tbl = sigw.select(
         "vec_id", "nsq", *dim_cols, F.explode(band_structs).alias("bk")
     ).select(
         "vec_id", "nsq", *dim_cols,
         F.col("bk.band").alias("band"),
         F.col("bk.band_key").alias("band_key"),
     )
-    return _lsh_pairs_from_bands(prep, bands)
+    return _lsh_pairs_from_bands(prep, bands_tbl)
 
 
 @query(

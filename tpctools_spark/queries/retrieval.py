@@ -279,30 +279,12 @@ def _pq_sql() -> str:
 def _pq_sq_l2(a, b):
     # r13 fold sweep: stays a fold — every call site is constant-size
     # (codebook LUT rows and the ~100-row exact-rescore shortlist), so
-    # the interpreted per-element cost never multiplies with the data;
-    # the data-sized N*M*K assignment joins already use
-    # _pq_sq_l2_unrolled (measured ~2x).
+    # the interpreted per-element cost never multiplies with the data.
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
         F.lit(0).cast("bigint"),
         lambda acc, x: acc + x,
     )
-
-
-def _pq_sq_l2_unrolled(a: str, b: str, dim: int):
-    """Squared L2 as a fully unrolled scalar expression — ``dim``
-    element_at accesses instead of materializing a zipped struct array
-    and folding it. On the two corpus×codebook assignment joins
-    (N·M·K candidate rows) the HOF form allocates ~25M temporary
-    arrays per pass at the 50k bench point; the unrolled form stays in
-    flat whole-stage-codegen arithmetic (measured ~2× on the PQ
-    pipeline end to end). Values are bit-identical."""
-    terms = " + ".join(
-        f"(element_at({a}, {i}) - element_at({b}, {i})) * "
-        f"(element_at({a}, {i}) - element_at({b}, {i}))"
-        for i in range(1, dim + 1)
-    )
-    return F.expr(f"cast({terms} as bigint)")
 
 
 def _pq_fx(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -343,49 +325,23 @@ def _pq_build(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
     amortize the build across probes — ``bench.py`` times build and
     probe separately on exactly this seam.
 
-    r13: the two N·M×K assignment steps run as Arrow within-partition
-    argmin scans (`_pq_build_arrow`) when numpy/pyarrow are present;
-    the broadcast-join form below is the value-identical fallback,
-    pinned by tests/test_retrieval_plans.py."""
-    arrow = _pq_build_arrow(spark, sf_dir)
-    if arrow is not None:
-        return arrow
-    return _pq_build_joins(spark, sf_dir)
-
-
-def _pq_build_arrow(
-    spark: SparkSession, sf_dir: str
-) -> tuple[DataFrame, DataFrame] | None:
-    """The assignment steps of `_pq_build` as Arrow batch scans —
-    returns None when numpy/pyarrow are missing (callers fall back to
-    `_pq_build_joins`, which produces bit-identical tables).
-
-    Why (guide §2.3/§4.2 + the r13 LSH Arrow lesson): the join form
-    materializes N·M×K = 25.6M candidate rows through a broadcast join
-    and a 400k-group struct-min TWICE (Lloyd assign + encode), plus a
-    3.2M-row posexplode for the centroid means — all to compute
-    argmins and integer sums that one numpy pass per partition
-    produces directly. Interleaved A/B at the 50k bench fixture
-    (.scratch/ab_pq_build.py): **faster 6/6 pairs, min 5.04 → 2.96 s**
-    (cb + enc noop-materialized), cb and enc row sets EXACTLY equal.
+    The two N·M×K assignment steps (Lloyd assign + encode) run as Arrow
+    within-partition argmin scans instead of 25.6M-row broadcast joins
+    and struct-mins (OPTIMIZATION_r13.md §11).
 
     Bit-exactness is trivial: every quantity is int64 (fixed-point
     vectors, squared-L2 distances, partial sums/counts) and numpy
     int64 arithmetic is exact like the JVM's; `np.argmin` returns the
     FIRST minimal index, which over code-id-ordered rows is the lowest
-    code id among minima — the same (d, c) struct-min tie-break; and
-    the toward-zero floor division stays in the JVM (`sum(psum) div
+    code id among minima — the oracle's (d, c) tie-break; and the
+    toward-zero floor division stays in the JVM (`sum(psum) div
     sum(pcnt)` over the summed partials — integer sums are
     partition-invariant, so retries/repartitions cannot change the
     refined centroids). Driver state is constant-size: the K seed
     vectors and the M×K refined codebook (the kmeans-centroid
     pattern); the corpus never collects.
     """
-    try:
-        import numpy as np
-        import pyarrow as pa  # noqa: F401
-    except ImportError:  # pragma: no cover — both ship in this env
-        return None
+    import numpy as np
     from pyspark.sql import types as spark_types
 
     fx = _pq_fx(spark, sf_dir)
@@ -396,7 +352,7 @@ def _pq_build_arrow(
         .collect()
     )
     # Seed-contiguity guard (r13 ADVICE): seed_mat's ROW INDEX is used
-    # as the code id below, while the join fallback and cb0 key on the
+    # as the code id below, while cb0 and the oracle key on the
     # actual vec_id — a fixture with a gap or duplicate in the first K
     # ids would silently misalign argmin codes against the codebook.
     # Fail loudly instead, like the dim-drift guards elsewhere.
@@ -404,7 +360,7 @@ def _pq_build_arrow(
         r["vec_id"] != i for i, r in enumerate(seed_rows)
     ):
         raise ValueError(
-            f"_pq_build_arrow: seed vec_ids must be exactly "
+            f"_pq_build: seed vec_ids must be exactly "
             f"0..{_PQ_K - 1} (got {len(seed_rows)} rows: "
             f"{[r['vec_id'] for r in seed_rows[:8]]}…)"
         )
@@ -495,8 +451,7 @@ def _pq_build_arrow(
         F.col("s").alias("cs"), F.col("vec_id").alias("c"), F.col("sv").alias("csv")
     )
     # Empty cells (a seed shadowed by an identical lower-id seed) keep
-    # their seed centroid — same LEFT-join COALESCE as the join form
-    # and the oracle.
+    # their seed centroid — same LEFT-join COALESCE as the oracle.
     cb = (
         cb0.join(
             F.broadcast(avg),
@@ -548,67 +503,6 @@ def _pq_build_arrow(
                 )
 
     enc = fx.select("vec_id", "label", "q").mapInArrow(encode, enc_schema)
-    return cb, enc
-
-
-def _pq_build_joins(
-    spark: SparkSession, sf_dir: str
-) -> tuple[DataFrame, DataFrame]:
-    """The broadcast-join form of `_pq_build` — the no-numpy fallback,
-    value-identical to `_pq_build_arrow` (parity-pinned in
-    tests/test_retrieval_plans.py)."""
-    fx = _pq_fx(spark, sf_dir)
-    subs = _pq_subs(fx)
-    cb0 = subs.filter(F.col("vec_id") < _PQ_K).select(
-        F.col("s").alias("cs"), F.col("vec_id").alias("c"), F.col("sv").alias("csv")
-    )
-    # One Lloyd round: assign every subvector to its nearest seed
-    # (struct-min carries (d, c, sv); (d, c) is unique per group so sv
-    # never drives the comparison), then element-wise floor-average
-    # per (subspace, cell). Spark `div` and DuckDB `//` both truncate
-    # toward zero, so the refined centroids are bit-identical.
-    a0 = (
-        subs.join(F.broadcast(cb0), subs.s == cb0.cs)
-        .select(
-            "vec_id", "s", "sv", "c",
-            _pq_sq_l2_unrolled("sv", "csv", _PQ_SUBDIM).alias("d"),
-        )
-        .groupBy("vec_id", "s")
-        .agg(F.min(F.struct("d", "c", "sv")).alias("m"))
-        .select("s", F.col("m.c").alias("c"), F.col("m.sv").alias("sv"))
-    )
-    avg = (
-        a0.select("s", "c", F.posexplode("sv").alias("i", "val"))
-        .groupBy("s", "c", "i")
-        .agg(F.expr("sum(val) div count(1)").alias("cv"))
-        .groupBy(F.col("s").alias("a_s"), F.col("c").alias("a_c"))
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("i", "cv"))),
-                lambda t: t["cv"],
-            ).alias("csv1")
-        )
-    )
-    # Empty cells (a seed shadowed by an identical lower-id seed) keep
-    # their seed centroid — same LEFT-join COALESCE in the oracle.
-    cb = (
-        cb0.join(
-            F.broadcast(avg),
-            (cb0.cs == avg.a_s) & (cb0.c == avg.a_c),
-            "left",
-        )
-        .select("cs", "c", F.coalesce("csv1", "csv").alias("csv"))
-    )
-    enc = (
-        subs.join(F.broadcast(cb), subs.s == cb.cs)
-        .select(
-            "vec_id", "label", "s", "c",
-            _pq_sq_l2_unrolled("sv", "csv", _PQ_SUBDIM).alias("d"),
-        )
-        .groupBy("vec_id", "label", "s")
-        .agg(F.min(F.struct("d", "c")).alias("m"))
-        .select("vec_id", "label", "s", F.col("m.c").alias("code"))
-    )
     return cb, enc
 
 

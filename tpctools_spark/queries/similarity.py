@@ -65,9 +65,9 @@ def _dot(a: Column, b: Column) -> Column:
     dedup.py sq_norm, .scratch/prof_lsh13.out) measured the flat
     decimal chain 3× SLOWER than this interpreted fold (6.2 s vs
     2.0 s per 500k rows) — decimal codegen ops allocate per step, so
-    chains only pay off for DOUBLE/BIGINT arithmetic (_dot_chain,
-    _pq_sq_l2_unrolled). Exact-decimal dots are also per-corpus-row
-    ×O(1) here (probe/centroid scoring), never per-pair.
+    chains only pay off for DOUBLE/BIGINT arithmetic. Exact-decimal
+    dots are also per-corpus-row ×O(1) here (probe/centroid scoring),
+    never per-pair.
     """
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: (x * y).cast("decimal(25,16)")),
@@ -783,7 +783,6 @@ def _dotf(a: Column, b: Column) -> Column:
     # measured a sign-stable 3/3 LOSS (.scratch/ab_prune13.out,
     # 4.73 → 7.09 s at 500k, identical output): fused into the wide
     # flatten, the ~600-op projection hits the JIT-size pathology.
-    # Per-PAIR dots (the data-squared term) use _dot_chain instead.
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: x * y),
         F.lit(0.0),
@@ -791,54 +790,9 @@ def _dotf(a: Column, b: Column) -> Column:
     )
 
 
-# The embeddings fixture dimension — the wide-column pair-join form
-# (below) flattens arrays to this many columns, exactly as
-# dedup.dedup_lsh_cosine does with _LSH_DIM.
+# The embeddings fixture dimension; the Arrow within-cell scans
+# (``_cell_blocks``) reject any other width.
 _EMB_DIM = 64
-
-
-def _wide_dims(df: DataFrame, arr: str, prefix: str) -> list[Column]:
-    """Flatten ``arr`` (array<double>) into ``_EMB_DIM`` named double
-    columns — the payload that rides THROUGH a pair join so the
-    per-pair dot can be a flat codegen chain instead of a per-pair
-    higher-order fold (the r11 LSH lesson: the HOF fold was ~23 s of
-    the 61 s 500k LSH tier).
-
-    Dimension drift fails LOUDLY (r11 ADVICE): unlike the old
-    length-adaptive ``zip_with`` folds, ``element_at`` past the end
-    returns NULL (shorter input) or silently ignores extra dims
-    (longer), which would drop pairs instead of erroring. The first
-    flattened column therefore rides an ``assert_true`` on
-    ``size(arr) == _EMB_DIM`` — row-local (one array-length read per
-    row, no extra job), identity when the dim is right, and a runtime
-    error naming the observed dim when it is not."""
-    guard = F.assert_true(
-        F.size(F.col(arr)) == _EMB_DIM,
-        F.concat(
-            F.lit(f"_wide_dims: embedding dim != {_EMB_DIM} (got "),
-            F.size(F.col(arr)).cast("string"),
-            F.lit(")"),
-        ),
-    )
-    first = F.when(guard.isNull(), F.element_at(F.col(arr), 1)).alias(
-        f"{prefix}1"
-    )
-    return [first] + [
-        F.element_at(F.col(arr), d).alias(f"{prefix}{d}")
-        for d in range(2, _EMB_DIM + 1)
-    ]
-
-
-def _dot_chain(pa: str, pb: str) -> Column:
-    """Flat left-to-right product chain over two wide-column vectors:
-    ((a1·b1 + a2·b2) + a3·b3) + … — the SAME association as the
-    0.0-seeded ``_dotf`` fold and DuckDB ``list_reduce``'s
-    first-element seeding (0.0 + x == x), so values are bit-identical
-    to the fold form and oracle thresholds/outputs cannot flip."""
-    acc = F.col(f"{pa}1") * F.col(f"{pb}1")
-    for d in range(2, _EMB_DIM + 1):
-        acc = acc + F.col(f"{pa}{d}") * F.col(f"{pb}{d}")
-    return acc
 
 
 def _sorted_region_stream(batches, key_a, key_b, min_rows=65536):
@@ -859,9 +813,8 @@ def _sorted_region_stream(batches, key_a, key_b, min_rows=65536):
     tiers behave exactly like the r13 whole-partition form while the
     bound still holds at scale). Run-scan outputs are unchanged —
     every run still arrives whole (the repartition keys contain the
-    run keys) and per-run results are order-invariant.
-
-    Worker-side only — numpy/pyarrow imports are the caller's guard.
+    run keys) and per-run results are order-invariant. Worker-side
+    only.
     """
     import numpy as np
     import pyarrow as pa
@@ -909,9 +862,9 @@ def _cell_blocks(tab):
     and yield ``(ids, E, slice)`` views per cell with ≥ 2 members.
 
     ``E`` is the n×`_EMB_DIM` float64 matrix of the whole partition
-    (dim drift fails LOUDLY, mirroring ``_wide_dims``'s assert_true);
+    (dim drift fails LOUDLY: a ragged row would otherwise mis-reshape);
     each yielded slice addresses one contiguous cell. Runs inside
-    ``mapInArrow`` — numpy/pyarrow imports are the caller's guard.
+    ``mapInArrow``.
     """
     import numpy as np
     import pyarrow.compute as pc
@@ -952,9 +905,9 @@ def _cell_blocks(tab):
 def _pair_dot_block(E, blk):
     """All-pairs dot matrix of one cell, accumulated IN DIM ORDER —
     acc starts at e₁ᵃ·e₁ᵇ and adds e_dᵃ·e_dᵇ per dim, the same IEEE
-    double op sequence as the left-assoc ``_dot_chain`` / the oracle's
-    0.0-seeded ``list_reduce``, so every pair dot is bit-identical to
-    the codegen-chain form (the ``_lsh_sig_arrow`` argument)."""
+    double op sequence as the oracle's ``list_reduce``, so every pair
+    dot is bit-identical to the oracle's (the ``_lsh_sig_arrow``
+    argument)."""
     import numpy as np
 
     Ec = E[blk]
@@ -964,35 +917,22 @@ def _pair_dot_block(E, blk):
     return acc
 
 
-def _prune_dropped_arrow(scored: DataFrame) -> DataFrame | None:
+def _prune_dropped_arrow(scored: DataFrame) -> DataFrame:
     """The semantic-prune dropped set as ONE shuffle + an Arrow-batched
-    within-cell pair scan — returns None when numpy/pyarrow are missing
-    (callers fall back to the wide-column SMJ tail, which produces the
-    bit-identical set).
+    within-cell pair scan.
 
-    Why (guide §2.1/§2.2 + the r13 LSH Arrow lesson): the wide tail
-    shuffles BOTH self-join sides (500k × 64 double cols ≈ 2×280 MB),
-    sorts both for the SMJ, evaluates 12.7M chain dots, and pays a
-    distinct exchange — all to derive ≤ n_cells·occupancy dropped ids.
-    This form shuffles the slim scored cache ONCE (repartition on the
-    cell key), runs the bounded per-cell pair scan in numpy, and emits
-    only the dropped ids. Interleaved full-query A/B at 500k
-    (.scratch/ab_prune_full.py, JVM-quiesced reps): old min 6.98 s vs
-    new min 4.26 s, sign-stable 4/4, identical 230658-row output
-    fingerprint; tail-only 2.17 → 1.11 s (the SHJ hint was neutral).
+    Shuffles the slim scored cache ONCE (repartition on the cell key),
+    runs the bounded per-cell pair scan in numpy, and emits only the
+    dropped ids (OPTIMIZATION_r13.md §6: 6.98 → 4.26 s at 500k over
+    the wide-column sort-merge-join tail it replaced).
 
     Bit-exactness: per-pair dots accumulate in dim order
     (``_pair_dot_block``); cosine divides by the same nrm product
     (np.outer = one multiply per pair); tau/diversity comparisons are
-    the same IEEE predicates — membership of the dropped set cannot
-    differ from the chain form. A vec_id belongs to exactly one cell,
-    so per-cell uniqueness replaces the global distinct.
+    the same IEEE predicates as the oracle's. A vec_id belongs to
+    exactly one cell, so per-cell uniqueness replaces a global
+    distinct.
     """
-    try:
-        import numpy as np  # noqa: F401
-        import pyarrow as pa  # noqa: F401
-    except ImportError:  # pragma: no cover — both ship in this env
-        return None
     from pyspark.sql import types as spark_types
 
     tau = _SEMANTIC_TAU
@@ -1043,28 +983,17 @@ def _prune_dropped_arrow(scored: DataFrame) -> DataFrame | None:
     )
 
 
-def _emb_pairs_arrow(tagged: DataFrame) -> DataFrame | None:
+def _emb_pairs_arrow(tagged: DataFrame) -> DataFrame:
     """``dedup_embedding``'s ≥0.3-cosine pair table as ONE shuffle + an
-    Arrow-batched within-cell pair scan — returns None when
-    numpy/pyarrow are missing (the caller falls back to the wide-column
-    SMJ pair join, which is bit-identical).
+    Arrow-batched within-cell pair scan (OPTIMIZATION_r13.md §6).
 
-    Same reasoning and bit-exactness argument as
-    ``_prune_dropped_arrow`` (dots accumulate in dim order via
-    ``_pair_dot_block``; products/divisions are commutative-identical
-    either pair orientation, so emitting vec_a = min id matches the
-    JVM join's a<b side assignment). Interleaved full-query A/B at
-    500k (.scratch/ab_emb_full.py, JVM-quiesced reps): old min 5.16 s
-    vs new min 3.61 s, sign-stable 4/4, identical 455062-pair output
-    fingerprint.
+    Same bit-exactness argument as ``_prune_dropped_arrow`` (dots
+    accumulate in dim order via ``_pair_dot_block``; products/divisions
+    are commutative-identical either pair orientation, so emitting
+    vec_a = min id matches the oracle's a<b side assignment).
 
     Input must carry (vec_id, label, subcell, nrm, e).
     """
-    try:
-        import numpy as np  # noqa: F401
-        import pyarrow as pa  # noqa: F401
-    except ImportError:  # pragma: no cover — both ship in this env
-        return None
     from pyspark.sql import types as spark_types
 
     def gen(batches):
@@ -1126,25 +1055,16 @@ def _emb_pairs_arrow(tagged: DataFrame) -> DataFrame | None:
 def _emb_incr_hits_arrow(tagged: DataFrame) -> DataFrame | None:
     """``dedup_embedding_incremental``'s per-batch-vector neighbor
     counts — (bd, n) for batch vectors with ≥1 same-cell ≥0.3-cosine
-    corpus neighbor — as ONE shuffle + an Arrow within-cell scan;
-    returns None when numpy/pyarrow are missing (the caller falls back
-    to the wide-column probe join, which is value-identical).
+    corpus neighbor — as ONE shuffle + an Arrow within-cell scan
+    (OPTIMIZATION_r13.md §8).
 
     Same machinery and bit-exactness argument as ``_emb_pairs_arrow``
     (dim-order dots via ``_pair_dot_block``; the batch×corpus slice of
-    the cell's cosine matrix is the probe join's pair set, and the
-    count is an integer). Interleaved full-query A/B at 500k
-    (.scratch/ab_emb_incr.py, JVM-quiesced reps): old min 5.42 s vs
-    new min 3.99 s, sign-stable 5/5, identical 55555-row output
-    fingerprint.
+    the cell's cosine matrix is the oracle's probe pair set, and the
+    count is an integer).
 
     Input must carry (vec_id, label, subcell, nrm, e).
     """
-    try:
-        import numpy as np  # noqa: F401
-        import pyarrow as pa  # noqa: F401
-    except ImportError:  # pragma: no cover — both ship in this env
-        return None
     from pyspark.sql import types as spark_types
 
     def gen(batches):
@@ -1274,24 +1194,6 @@ def dedup_semantic_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     tagged = _embedding_cells(prep)
     cent = _cell_centroids(prep)
-    # Wide-column pair join (the r11 LSH shape): dims ride through the
-    # cell self-join as flat double columns so the per-pair dot is one
-    # codegen chain, not a per-pair HOF fold; the chain association
-    # equals the fold's (see _dot_chain), so the tau decision is
-    # bit-identical. Interleaved A/B (500k fixture, 5 reps): HOF
-    # 4.66 s -> wide 2.77 s min, sign-stable all reps, identical
-    # 230658-row output.
-    # r13 A/B NEGATIVE — per-vector chain scores
-    # (.scratch/ab_prune13.out): replacing the four per-row _dotf
-    # folds (cent·e, e·e ×2, cent·cent) with flat element_at chains
-    # fused into the wide-flatten projection measured a sign-stable
-    # LOSS at the 500k tier: old folds min 4.73 s vs chains 7.09 s,
-    # 3/3 interleaved pairs, identical 230658-row output fingerprint.
-    # The fused ~600-op projection (3 chains + 64 wide columns) hits
-    # the same JIT-size pathology the LSH sign chains did, while the
-    # fold shape splits score and flatten into two small projections.
-    # The interpreted folds stay; per-PAIR dots (the data-squared
-    # term) remain chains via _dot_chain below.
     cent_norm = F.sqrt(_dotf(F.col("centroid"), F.col("centroid")))
     scored = (
         tagged.join(F.broadcast(cent), tagged.label == cent.cell)
@@ -1307,68 +1209,12 @@ def dedup_semantic_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sqrt(_dotf(F.col("e"), F.col("e"))).alias("nrm"),
         )
     )
-    # r13: the dropped set comes from the Arrow within-cell pair scan
-    # (one shuffle, bounded numpy pair dots — see _prune_dropped_arrow
-    # for the A/B and the bit-exactness argument); the wide-column SMJ
-    # tail below remains as the no-numpy fallback, value-identical
-    # (pinned by tests/test_estimator_accuracy.py's parity test).
+    # The dropped set comes from the Arrow within-cell pair scan: one
+    # shuffle, bounded numpy pair dots (OPTIMIZATION_r13.md §6).
     scored = scored.select(
         "vec_id", "label", "subcell", "cent_cos", "nrm", "e"
     ).cache()
     dropped = _prune_dropped_arrow(scored)
-    if dropped is not None:
-        return scored.join(dropped, "vec_id", "left_anti").select(
-            "vec_id",
-            "label",
-            trunc_digits(F.col("cent_cos"), 4).alias("cent_cos"),
-        )
-    scored = scored.select(
-        "vec_id", "label", "subcell", "cent_cos", "nrm",
-        *_wide_dims(scored, "e", "w"),
-    ).cache()
-    _pair_cols_a = [
-        F.col(f"w{d}").alias(f"a{d}") for d in range(1, _EMB_DIM + 1)
-    ]
-    _pair_cols_b = [
-        F.col(f"w{d}").alias(f"x{d}") for d in range(1, _EMB_DIM + 1)
-    ]
-    a = scored.select(
-        F.col("vec_id").alias("a_id"),
-        F.col("label").alias("a_label"),
-        F.col("subcell").alias("a_cell"),
-        F.col("cent_cos").alias("a_cc"),
-        F.col("nrm").alias("a_nrm"),
-        *_pair_cols_a,
-    )
-    b = scored.select(
-        F.col("vec_id").alias("b_id"),
-        F.col("label").alias("b_label"),
-        F.col("subcell").alias("b_cell"),
-        F.col("cent_cos").alias("b_cc"),
-        F.col("nrm").alias("b_nrm"),
-        *_pair_cols_b,
-    )
-    pair_cos = _dot_chain("a", "x") / (F.col("a_nrm") * F.col("b_nrm"))
-    dropped = (
-        a.join(
-            b,
-            (F.col("a_label") == F.col("b_label"))
-            & (F.col("a_cell") == F.col("b_cell"))
-            & (F.col("a_id") != F.col("b_id")),
-        )
-        .filter(
-            (pair_cos >= _SEMANTIC_TAU)
-            & (
-                (F.col("b_cc") < F.col("a_cc"))
-                | (
-                    (F.col("b_cc") == F.col("a_cc"))
-                    & (F.col("b_id") < F.col("a_id"))
-                )
-            )
-        )
-        .select(F.col("a_id").alias("vec_id"))
-        .distinct()
-    )
     return scored.join(dropped, "vec_id", "left_anti").select(
         "vec_id",
         "label",
