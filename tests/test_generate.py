@@ -109,10 +109,10 @@ def test_orders_totalprice_equals_lineitem_sum(spark):
 
 
 def test_generate_writes_parquet(spark, tmp_path):
-    from tpctools_spark.generate import generate
+    from tpctools_spark.benchmark import TpcH
 
     out = str(tmp_path / "gen")
-    timings = generate(spark, SCALE, 2, out, tables=["region", "nation", "supplier"])
+    timings = TpcH().generate(spark, SCALE, 2, out, tables=["region", "nation", "supplier"])
     assert set(timings) == {"region", "nation", "supplier"}
     assert spark.read.parquet(f"{out}/supplier.parquet").count() == int(
         ROWS_PER_SF["supplier"] * SCALE
@@ -181,10 +181,10 @@ def test_corpus_generator_plants_near_dups(spark):
 
 
 def test_corpus_cli_generate(spark, tmp_path):
-    from tpctools_spark.generate_corpus import generate
+    from tpctools_spark.benchmark import create_benchmark
 
     out = str(tmp_path / "corpus")
-    timings = generate(spark, 0.0002, 3, out)
+    timings = create_benchmark("corpus").generate(spark, 0.0002, 3, out)
     assert set(timings) == {"documents", "embeddings", "events"}
     assert spark.read.parquet(f"{out}/documents.parquet").count() == 10
     assert spark.read.parquet(f"{out}/events.parquet").count() == 200
@@ -197,12 +197,12 @@ def test_corpus_dir_is_fixture_drop_in(spark, tmp_path):
     value, props, float embeddings) must run over it unchanged."""
     from pyspark.sql import functions as F
 
+    from tpctools_spark.benchmark import create_benchmark
     from tpctools_spark.catalog import table
-    from tpctools_spark.generate_corpus import generate
     from tpctools_spark.registry import spark_queries
 
     out = str(tmp_path / "corpus")
-    generate(spark, 0.001, 3, out)
+    create_benchmark("corpus").generate(spark, 0.001, 3, out)
 
     fixture_sf = "/root/testdata/sf0.001"
     for name in ["documents", "embeddings", "events"]:

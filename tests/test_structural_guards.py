@@ -279,3 +279,25 @@ def test_queries_have_no_import_fallbacks():
         if "except ImportError" in p.read_text()
     ]
     assert not offenders, f"dead import fallbacks in {offenders}"
+
+
+def test_env_reads_are_the_documented_ones():
+    """Every environment variable the library reads is a documented
+    deployment or scale hook; a knob that nothing sets is dead code."""
+    import re
+    from pathlib import Path
+
+    import tpctools_spark
+
+    allowed = {
+        "SPARK_GRAFT_CPUS", "SPARK_GRAFT_DRIVER_MEM", "SPARK_GRAFT_SF_DIR",
+        "TPCTOOLS_TPCH_DIR", "TPCTOOLS_TPCDS_DIR", "TPCTOOLS_NO_CHECKPOINT",
+    }
+    read = re.compile(r"""(?:environ(?:\.get|\.pop|\.setdefault)?|getenv)\s*[(\[]\s*(["']?)(\w*)""")
+    stray = sorted(
+        f"{p.name}: {name if quote else '<computed name>'}"
+        for p in Path(tpctools_spark.__file__).parent.rglob("*.py")
+        for quote, name in read.findall(p.read_text())
+        if not quote or name not in allowed
+    )
+    assert not stray, f"undocumented environment reads: {stray}"

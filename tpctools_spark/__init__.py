@@ -14,14 +14,22 @@ Layout
 - :mod:`tpctools_spark.catalog`    — table loaders over the parquet fixtures
 - :mod:`tpctools_spark.registry`   — query/oracle registration (driver contract)
 - :mod:`tpctools_spark.queries`    — the declared operator inventory (§2.B)
+- :mod:`tpctools_spark.benchmark`  — the one module that knows a benchmark
+  (``Tpc``: name, text extension, schemas, ``build_table``; ``tpch``,
+  ``tpcds``, ``corpus``), the ``create_benchmark`` dispatch, the table
+  writer loop shared by generate and convert, and the generate-once
+  ``materialize`` (``src/lib.rs:28-43``, ``src/main.rs:113-118``)
 - :mod:`tpctools_spark.generate`   — deterministic partition-parallel TPC-H
   generation (replaces dbgen shell-out, ``src/tpch.rs:35-132``)
 - :mod:`tpctools_spark.generate_tpcds` — schema-driven TPC-DS generation
   (replaces dsdgen shell-out, ``src/tpcds.rs:34-104``)
+- :mod:`tpctools_spark.generate_corpus` — LLM-corpus tables (documents,
+  embeddings, events) in the fixture schemas
 - :mod:`tpctools_spark.schemas_tpcds`  — all 24 TPC-DS schemas
   (``src/tpcds.rs:135-636``)
-- :mod:`tpctools_spark.convert`    — typed CSV → Parquet conversion
+- :mod:`tpctools_spark.convert`    — typed CSV scan → Parquet/CSV conversion
   (``src/lib.rs:45-217``)
+- :mod:`tpctools_spark.benchfix`   — the sf1 materializations ``bench.py`` reads
 - :mod:`tpctools_spark.cli`        — generate/convert CLI (``src/main.rs``)
 - :mod:`tpctools_spark.queries.streaming_demo` — Structured Streaming demos
 """

@@ -4,8 +4,7 @@ Both ``bench.py`` (the driver-run suite) and ``scripts/bench_ab.py``
 (the interleaved A/B harness) need the same pre-materialized sf1
 parquet directories. Materialization is a pure function of
 (table, sf), so the directories are built once and reused across
-rounds; marker files make the check cheap and crash-safe (a partial
-write never leaves a marker behind).
+rounds (:func:`tpctools_spark.benchmark.materialize`).
 """
 
 from __future__ import annotations
@@ -14,46 +13,19 @@ import os
 
 from pyspark.sql import SparkSession
 
+from tpctools_spark.benchmark import TpcDs, TpcH, materialize
+
 SCRATCH = os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
     ".scratch",
     "bench_sf1",
 )
 
-TPCH_TABLES = (
-    "region",
-    "nation",
-    "supplier",
-    "customer",
-    "part",
-    "partsupp",
-    "orders",
-    "lineitem",
-)
-
 
 def ensure_tpcds_sf1(spark: SparkSession) -> str:
     """Materialize all TPC-DS sf1 tables once; return the directory
     usable as ``TPCTOOLS_TPCDS_DIR``."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    from tpctools_spark.generate_tpcds import build_tpcds_table
-    from tpctools_spark.queries.tpcds_demo import _GEN_TABLES
-
-    out = os.path.join(SCRATCH, "tpcds")
-    marker = os.path.join(out, f"_ALL_TABLES_OK_{len(_GEN_TABLES)}")
-    if not os.path.exists(marker):
-
-        def _mat(t: str) -> None:
-            build_tpcds_table(spark, t, 1.0, 32).write.mode(
-                "overwrite"
-            ).parquet(os.path.join(out, t))
-
-        with ThreadPoolExecutor(8) as ex:
-            list(ex.map(_mat, _GEN_TABLES))
-        with open(marker, "w") as f:
-            f.write("ok\n")
-    return out
+    return materialize(spark, TpcDs(), 1.0, os.path.join(SCRATCH, "tpcds"), 32)
 
 
 def ensure_tpch_sf1(spark: SparkSession) -> tuple[str, str]:
@@ -62,19 +34,9 @@ def ensure_tpch_sf1(spark: SparkSession) -> tuple[str, str]:
     serves the fixture-form queries via their ``sf_dir`` argument;
     generator layout (``<t>/``) serves the spec-form queries via
     ``TPCTOOLS_TPCH_DIR``."""
-    from tpctools_spark.generate import build_table
-
-    for t in TPCH_TABLES:
+    tpch = TpcH()
+    for t in tpch.table_names():
         p = os.path.join(SCRATCH, f"{t}.parquet")
         if not os.path.exists(os.path.join(p, "_SUCCESS")):
-            build_table(spark, t, 1.0, 32).write.mode("overwrite").parquet(p)
-    gen_dir = os.path.join(SCRATCH, "tpch_gen")
-    marker = os.path.join(gen_dir, "_ALL_TABLES_OK")
-    if not os.path.exists(marker):
-        for t in TPCH_TABLES:
-            build_table(spark, t, 1.0, 32).write.mode("overwrite").parquet(
-                os.path.join(gen_dir, t)
-            )
-        with open(marker, "w") as f:
-            f.write("ok\n")
-    return SCRATCH, gen_dir
+            tpch.build_table(spark, t, 1.0, 32).write.mode("overwrite").parquet(p)
+    return SCRATCH, materialize(spark, tpch, 1.0, os.path.join(SCRATCH, "tpch_gen"), 32)

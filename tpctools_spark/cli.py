@@ -3,38 +3,27 @@
 Mirrors the reference's StructOpt surface (``/root/reference/src/main.rs:22-119``):
 
     python -m tpctools_spark.cli generate --benchmark tpch -s 0.01 \\
-        -n 8 --output /tmp/raw [--format parquet|csv]
+        -n 8 --output /tmp/raw --format csv
     python -m tpctools_spark.cli convert --benchmark tpch \\
         --input /tmp/raw --output /tmp/pq \\
         --format parquet --compression snappy
 
 Differences by design: no ``--generator-path`` (no external dbgen/dsdgen
-binary — generation is native Spark, SURVEY.md §2.A A8/A9), and
+binary — generation is native Spark, SURVEY.md §2.A A8/A9),
 ``generate`` can emit parquet directly (the reference needs a separate
-convert pass).
+convert pass), and ``convert`` reads the text layout ``generate --format
+csv`` writes (``<table>.csv/part-*.csv``). ``corpus`` generates the
+LLM-pipeline tables; it has no text layout, so ``convert`` refuses it.
 """
 
 from __future__ import annotations
 
 import argparse
 import sys
+import time
 
-
-def _benchmark_tables(name: str) -> list[str]:
-    # Dispatch parity: create_benchmark, src/main.rs:113-118.
-    if name.lower() in ("tpch", "tpc-h"):
-        from tpctools_spark.schemas import TPCH_TABLE_NAMES
-
-        return TPCH_TABLE_NAMES
-    if name.lower() in ("tpcds", "tpc-ds"):
-        from tpctools_spark.schemas_tpcds import TPCDS_TABLE_NAMES
-
-        return TPCDS_TABLE_NAMES
-    if name.lower() == "corpus":
-        from tpctools_spark.generate_corpus import CORPUS_TABLE_NAMES
-
-        return CORPUS_TABLE_NAMES
-    raise SystemExit(f"invalid benchmark name: {name}")
+from tpctools_spark.benchmark import BENCHMARKS, create_benchmark
+from tpctools_spark.session import get_spark
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -42,15 +31,20 @@ def main(argv: list[str] | None = None) -> int:
     sub = p.add_subparsers(dest="cmd", required=True)
 
     g = sub.add_parser("generate", help="Generate benchmark data (src/main.rs:24-43)")
-    g.add_argument("--benchmark", default="tpch")
+    g.add_argument("--benchmark", default="tpch", type=str.lower, choices=list(BENCHMARKS))
     g.add_argument("-s", "--scale", type=float, required=True)
     g.add_argument("-n", "--partitions", type=int, required=True)
     g.add_argument("--output", required=True)
     g.add_argument("--format", default="parquet", choices=["parquet", "csv"])
     g.add_argument("--compression", default="snappy")
 
-    c = sub.add_parser("convert", help="Convert .tbl dirs to parquet/csv (src/main.rs:45-58)")
-    c.add_argument("--benchmark", default="tpch")
+    c = sub.add_parser(
+        "convert", help="Convert generated csv dirs to parquet/csv (src/main.rs:45-58)"
+    )
+    c.add_argument(
+        "--benchmark", default="tpch", type=str.lower,
+        choices=[name for name, b in BENCHMARKS.items() if b.table_ext],
+    )
     c.add_argument("--input", required=True)
     c.add_argument("--output", required=True)
     c.add_argument("--format", default="parquet", choices=["parquet", "csv"])
@@ -82,12 +76,8 @@ def main(argv: list[str] | None = None) -> int:
             return 0
         if args.name not in queries:
             raise SystemExit(f"unknown query: {args.name} (try --list)")
-        from tpctools_spark.session import get_spark
-
         spark = get_spark(f"tpctools-query-{args.name}")
         spark.sparkContext.setLogLevel("ERROR")
-        import time
-
         t0 = time.perf_counter()
         df = queries[args.name](spark, args.sf_dir)
         if args.output:
@@ -99,37 +89,17 @@ def main(argv: list[str] | None = None) -> int:
             print(f"query {args.name}: {time.perf_counter() - t0:.3f}s")
         return 0
 
-    tables = _benchmark_tables(args.benchmark)
-
-    from tpctools_spark.session import get_spark
-
+    tpc = create_benchmark(args.benchmark)
     spark = get_spark(f"tpctools-{args.cmd}")
-    tpcds = args.benchmark.lower() in ("tpcds", "tpc-ds")
     if args.cmd == "generate":
-        if args.benchmark.lower() == "corpus":
-            from tpctools_spark.generate_corpus import generate as gen
-        elif tpcds:
-            from tpctools_spark.generate_tpcds import generate_tpcds as gen
-        else:
-            from tpctools_spark.generate import generate as gen
-
-        timings = gen(
+        timings = tpc.generate(
             spark, args.scale, args.partitions, args.output,
-            tables=tables, fmt=args.format, compression=args.compression,
+            fmt=args.format, compression=args.compression,
         )
     else:
-        from tpctools_spark.convert import convert_to_parquet
-
-        schemas = None
-        table_ext = ".tbl"
-        if tpcds:
-            from tpctools_spark.schemas_tpcds import TPCDS
-
-            schemas, table_ext = TPCDS, ".dat"  # dsdgen layout, src/tpcds.rs:89-99
-        timings = convert_to_parquet(
-            spark, args.input, args.output,
-            tables=tables, schemas=schemas, fmt=args.format,
-            compression=args.compression, table_ext=table_ext,
+        timings = tpc.convert(
+            spark, args.input, args.output, fmt=args.format,
+            compression=args.compression, table_ext=".csv",
         )
     for name, dt in timings.items():
         # Wall-time print parity: src/lib.rs:214, src/tpch.rs:87-90.

@@ -18,34 +18,20 @@ Spark-first deviations, by design (SURVEY.md §1.3, §3.2):
   those reference code paths disappear;
 - compression codec validation mirrors ``src/lib.rs:186-200`` but on
   Spark's codec set (lzo is not shipped; zstd/gzip are, and the
-  reference's commented-out codecs come for free).
+  reference's commented-out codecs come for free). The sink, the codec
+  check and the per-table timing are :func:`tpctools_spark.benchmark.write_tables`,
+  shared with generation.
 """
 
 from __future__ import annotations
 
 import os
-import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
+from tpctools_spark.benchmark import write_tables
 from tpctools_spark.schemas import TPCH_REFERENCE
-
-# Parity with the reference's match arm (src/lib.rs:186-200), extended to
-# the codecs Spark ships. "lzo" (reference-supported) needs a native lib
-# Spark doesn't bundle → rejected with the same kind of error the
-# reference raises for unknown codecs.
-SUPPORTED_COMPRESSION = {"none", "uncompressed", "snappy", "gzip", "lz4", "zstd", "brotli"}
-
-
-def _check_compression(compression: str) -> str:
-    c = compression.lower()
-    if c not in SUPPORTED_COMPRESSION:
-        raise ValueError(
-            f"unsupported compression {compression!r}; "
-            f"expected one of {sorted(SUPPORTED_COMPRESSION)}"
-        )
-    return "uncompressed" if c == "none" else c
 
 
 def scan_tbl(
@@ -59,13 +45,13 @@ def scan_tbl(
     Reference: ``CsvReadOptions::new().schema(&schema).delimiter(b'|')
     .has_header(false).file_extension(ext)`` (src/lib.rs:55-58, 181).
     """
-    reader = (
+    return (
         spark.read.schema(schema)
         .option("delimiter", "|")
         .option("header", "false")
         .option("pathGlobFilter", f"*{file_ext}*")
+        .csv(path)
     )
-    return reader.csv(path)
 
 
 def convert_table(
@@ -84,23 +70,11 @@ def convert_table(
     split converts independently, so this scales linearly with executors
     at any table size.
     """
-    codec = _check_compression(compression)
-    df = scan_tbl(spark, input_path, schema, file_ext)
-    if "ignore" in df.columns:
-        df = df.drop("ignore")
-    writer = df.write.mode("errorifexists").option("compression", codec)
-    if fmt == "parquet":
-        writer.parquet(output_path)
-    elif fmt == "csv":
-        writer.option("delimiter", "|").csv(output_path)
-    elif fmt == "orc":
-        # beyond the reference (parquet/csv only, src/lib.rs:206-212):
-        # Spark's native columnar/row formats come for free
-        writer.orc(output_path)
-    elif fmt == "json":
-        writer.json(output_path)
-    else:
-        raise ValueError(f"unsupported output format {fmt!r}")  # src/lib.rs:206-212
+    name = os.path.basename(output_path)
+    write_tables(
+        lambda _: scan_tbl(spark, input_path, schema, file_ext).drop("ignore"),
+        {name: output_path}, {name: schema}, fmt, compression, mode="errorifexists",
+    )
 
 
 def convert_to_parquet(
@@ -112,46 +86,34 @@ def convert_to_parquet(
     fmt: str = "parquet",
     compression: str = "snappy",
     table_ext: str = ".tbl",
-    file_ext: str | None = None,
     parallel: int = 4,
 ) -> dict[str, float]:
-    """All tables of a benchmark: the reference's per-table loop
+    """All tables of a benchmark: ``<input_dir>/<table><table_ext>`` →
+    ``<output_dir>/<table>.<fmt>``, the reference's per-table loop
     (src/lib.rs:45-120), with Spark parallelizing within each table
     AND across tables.
 
     The reference converts tables serially and left cross-table
-    parallelism abandoned in comments (``src/lib.rs:94, 104``); here a
-    thread pool submits ``parallel`` concurrent write jobs to the one
-    SparkSession — threads only drive job submission, the cluster
-    schedules tasks from all jobs at once, so small tables no longer
-    serialize behind large ones. ``parallel=1`` restores the
+    parallelism abandoned in comments (``src/lib.rs:94, 104``); here
+    ``parallel`` write jobs run at once. ``parallel=1`` restores the
     reference's serial behavior.
 
     Missing input directories fail fast (the reference panics,
     src/lib.rs:60-64); pre-existing outputs fail via Spark's
     ``errorifexists`` mode (reference panics, src/lib.rs:67-71).
     """
-    from concurrent.futures import ThreadPoolExecutor
-
     schemas = schemas or TPCH_REFERENCE
     names = tables or list(schemas)
-    jobs: list[tuple[str, str, str]] = []
-    for name in names:
-        in_path = os.path.join(input_dir, f"{name}{table_ext}")
+    inputs = {name: os.path.join(input_dir, f"{name}{table_ext}") for name in names}
+    for in_path in inputs.values():
         if not os.path.exists(in_path):
             raise FileNotFoundError(f"input path {in_path} does not exist")
-        suffix = "parquet" if fmt == "parquet" else "csv"
-        jobs.append((name, in_path, os.path.join(output_dir, f"{name}.{suffix}")))
-
-    def run(job: tuple[str, str, str]) -> tuple[str, float]:
-        name, in_path, out_path = job
-        t0 = time.perf_counter()
-        convert_table(
-            spark, in_path, schemas[name], out_path, fmt, compression,
-            file_ext if file_ext is not None else table_ext,
-        )
-        return name, time.perf_counter() - t0
-
-    with ThreadPoolExecutor(max_workers=max(1, parallel)) as pool:
-        results = list(pool.map(run, jobs))
-    return dict(results)
+    return write_tables(
+        lambda name: scan_tbl(spark, inputs[name], schemas[name], table_ext).drop("ignore"),
+        {name: os.path.join(output_dir, f"{name}.{fmt}") for name in names},
+        {name: schemas[name] for name in names},
+        fmt,
+        compression,
+        mode="errorifexists",
+        parallel=parallel,
+    )

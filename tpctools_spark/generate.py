@@ -30,8 +30,6 @@ minus the ``ignore`` CSV artifact column (SURVEY.md §1.3 deviation).
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -107,11 +105,6 @@ def _uh(h: Column, shift: int, n: int) -> Column:
     return F.pmod(s, F.lit(n))
 
 
-def _pick(seed: int, words: list[str], *cols: Column) -> Column:
-    arr = F.array(*[F.lit(w) for w in words])
-    return F.element_at(arr, (_u(seed, len(words), *cols) + 1).cast("int"))
-
-
 def _pick_h(h: Column, shift: int, words: list[str]) -> Column:
     arr = F.array(*[F.lit(w) for w in words])
     return F.element_at(arr, (_uh(h, shift, len(words)) + 1).cast("int"))
@@ -175,16 +168,6 @@ def _line_discount(o: Column, j: Column) -> Column:
 
 def _line_tax(o: Column, j: Column) -> Column:
     return (_uh(_line_h(o, j), 46, 9).cast("decimal(13,0)") / 100).cast("decimal(4,2)")
-
-
-def _line_total(o: Column, j: Column) -> Column:
-    """price·(1-disc)·(1+tax), rounded to cents — one canonical rounding
-    both the lineitem rows and the orders fold share."""
-    return (
-        _line_price(o, j)
-        * (F.lit(1).cast("decimal(4,2)") - _line_discount(o, j))
-        * (F.lit(1).cast("decimal(4,2)") + _line_tax(o, j))
-    ).cast("decimal(17,2)")
 
 
 def _n_lines(o: Column) -> Column:
@@ -390,33 +373,3 @@ def build_table(
         )
 
     raise ValueError(f"unknown table {name!r}; expected one of {list(TPCH_REFERENCE)}")
-
-
-def generate(
-    spark: SparkSession,
-    scale: float,
-    partitions: int,
-    output_dir: str,
-    tables: list[str] | None = None,
-    fmt: str = "parquet",
-    compression: str = "snappy",
-) -> dict[str, float]:
-    """Generate tables to ``<output_dir>/<table>.parquet`` (or ``.csv``).
-
-    Reference CLI parity: ``tpctools generate --benchmark tpch -s SF -n P``
-    (``src/main.rs:22-43``); wall-time per table is returned the way the
-    reference prints it (``src/tpch.rs:87-90``).
-    """
-    timings: dict[str, float] = {}
-    for name in tables or list(TPCH_REFERENCE):
-        t0 = time.perf_counter()
-        df = build_table(spark, name, scale, partitions)
-        writer = df.write.mode("overwrite").option("compression", compression)
-        if fmt == "parquet":
-            writer.parquet(f"{output_dir}/{name}.parquet")
-        elif fmt == "csv":
-            writer.option("delimiter", "|").csv(f"{output_dir}/{name}.csv")
-        else:
-            raise ValueError(f"unsupported format {fmt!r}")
-        timings[name] = time.perf_counter() - t0
-    return timings

@@ -242,40 +242,10 @@ CORPUS_ROWS_PER_SF = {
     "events": 1_000_000,
 }
 
-CORPUS_TABLE_NAMES = list(CORPUS_ROWS_PER_SF)
 
-
-def generate(
-    spark: SparkSession,
-    scale: float,
-    partitions: int,
-    output_dir: str,
-    tables: list | None = None,
-    fmt: str = "parquet",
-    compression: str = "snappy",
-) -> dict:
-    """Generate corpus tables to ``<output_dir>/<table>.parquet`` —
-    the same CLI contract as the TPC generators (tpctools_spark.generate),
-    extended to the corpus domain: per-table wall times returned, any
-    partition count, identical bytes regardless of it."""
-    import os
-    import time
-
-    builders = {
-        "documents": lambda n: gen_documents(spark, n, parts=partitions),
-        "embeddings": lambda n: gen_embeddings(spark, n, parts=partitions),
-        "events": lambda n: gen_events(spark, n, parts=partitions),
-    }
-    timings: dict = {}
-    for name in tables or CORPUS_TABLE_NAMES:
-        n_rows = max(1, int(CORPUS_ROWS_PER_SF[name] * scale))
-        t0 = time.perf_counter()
-        df = builders[name](n_rows)
-        writer = df.write.mode("overwrite").option("compression", compression)
-        path = os.path.join(output_dir, f"{name}.{fmt}")
-        if fmt == "parquet":
-            writer.parquet(path)
-        else:
-            writer.option("header", "true").csv(path)
-        timings[name] = time.perf_counter() - t0
-    return timings
+def build_corpus_table(
+    spark: SparkSession, name: str, scale: float, partitions: int
+) -> DataFrame:
+    """One corpus table at ``scale``, sized by ``CORPUS_ROWS_PER_SF``."""
+    build = {"documents": gen_documents, "embeddings": gen_embeddings, "events": gen_events}
+    return build[name](spark, max(1, int(CORPUS_ROWS_PER_SF[name] * scale)), parts=partitions)

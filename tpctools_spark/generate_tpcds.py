@@ -32,7 +32,6 @@ predicates select realistic slices.
 
 from __future__ import annotations
 
-import time
 import zlib
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -392,31 +391,3 @@ def build_tpcds_table(
             c = _synth(name, f.name, f.dataType, f.nullable, key, scale, pk_name)
         cols.append(c.cast(f.dataType).alias(f.name))
     return df.select(*cols)
-
-
-def generate_tpcds(
-    spark: SparkSession,
-    scale: float,
-    partitions: int,
-    output_dir: str,
-    tables: list[str] | None = None,
-    fmt: str = "parquet",
-    compression: str = "snappy",
-) -> dict[str, float]:
-    """Generate TPC-DS tables to ``<out>/<table>.parquet`` (or ``.csv``).
-
-    CLI parity: ``tpctools generate --benchmark tpcds`` (src/main.rs:113-118
-    dispatch; src/tpcds.rs:34-104 generation)."""
-    timings: dict[str, float] = {}
-    for name in tables or list(TPCDS):
-        t0 = time.perf_counter()
-        df = build_tpcds_table(spark, name, scale, partitions)
-        writer = df.write.mode("overwrite").option("compression", compression)
-        if fmt == "parquet":
-            writer.parquet(f"{output_dir}/{name}.parquet")
-        elif fmt == "csv":
-            writer.option("delimiter", "|").csv(f"{output_dir}/{name}.csv")
-        else:
-            raise ValueError(f"unsupported format {fmt!r}")
-        timings[name] = time.perf_counter() - t0
-    return timings

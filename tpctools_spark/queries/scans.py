@@ -95,14 +95,13 @@ def _stable_scratch(tag: str) -> str:
     on disk so the returned DataFrame stays lazily readable (no collect/
     createDataFrame rebuild — the plan is a real file scan).
 
-    Keyed per process (overridable via SPARK_GRAFT_SCRATCH_KEY) so two
+    Keyed per process so two
     concurrent sessions — e.g. the driver's correctness run and a judge
     session — can never race each other's mode=overwrite on the same
     directory. Stable WITHIN a process, which is all the lazy read-back
     needs."""
     _sweep_dead_scratch()
-    key = os.environ.get("SPARK_GRAFT_SCRATCH_KEY", f"pid{os.getpid()}")
-    path = os.path.join(_SCRATCH, f"{tag}-{key}")
+    path = os.path.join(_SCRATCH, f"{tag}-pid{os.getpid()}")
     os.makedirs(_SCRATCH, exist_ok=True)
     return path
 

@@ -21,11 +21,12 @@ never via engine-native AVG, whose intermediate typing differs.
 from __future__ import annotations
 
 import os
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from tpctools_spark.generate_tpcds import build_tpcds_table
+from tpctools_spark.benchmark import TpcDs, materialize, parquet_ctes
 from tpctools_spark.queries._util import sql_trunc_digits, trunc_digits
 from tpctools_spark.registry import query
 
@@ -35,31 +36,6 @@ _GEN_DIR = os.path.join(
     ".scratch",
     "tpcds_gen_sf0001",
 )
-_GEN_TABLES = [
-    "store_sales", "catalog_sales", "web_sales", "inventory",
-    "store_returns", "catalog_returns", "web_returns",
-    "date_dim", "time_dim", "item", "store", "warehouse",
-    "customer", "customer_address", "customer_demographics",
-    "household_demographics", "promotion", "catalog_page", "web_page",
-    "reason", "ship_mode", "web_site", "call_center", "income_band",
-]
-
-
-def _materialize(spark: SparkSession) -> None:
-    """Write the generated TPC-DS tables to scratch once (pure function
-    of (table, scale) — reusable across sessions and by DuckDB). The
-    marker name carries the table count so extending _GEN_TABLES
-    invalidates stale materializations."""
-    marker = os.path.join(_GEN_DIR, f"_ALL_TABLES_OK_{len(_GEN_TABLES)}")
-    if os.path.exists(marker):
-        return
-    p = spark.sparkContext.defaultParallelism
-    for name in _GEN_TABLES:
-        build_tpcds_table(spark, name, _SCALE, p).write.mode("overwrite").parquet(
-            os.path.join(_GEN_DIR, name)
-        )
-    with open(marker, "w") as f:
-        f.write("ok\n")
 
 
 def _t(spark: SparkSession, name: str) -> DataFrame:
@@ -67,20 +43,13 @@ def _t(spark: SparkSession, name: str) -> DataFrame:
     # table directory (bench.py's sf1 suite), read it instead of the
     # default sf0.001 scratch materialization. Query logic is
     # scale-blind either way.
-    override = os.environ.get("TPCTOOLS_TPCDS_DIR")
-    if override:
-        return spark.read.parquet(os.path.join(override, name))
-    _materialize(spark)
-    return spark.read.parquet(os.path.join(_GEN_DIR, name))
-
-
-def _with(*tables: str) -> str:
-    """WITH prefix registering generated-table parquet as DuckDB CTEs."""
-    ctes = ", ".join(
-        f"{t} AS (SELECT * FROM read_parquet('{_GEN_DIR}/{t}/*.parquet'))"
-        for t in tables
+    root = os.environ.get("TPCTOOLS_TPCDS_DIR") or materialize(
+        spark, TpcDs(), _SCALE, _GEN_DIR, spark.sparkContext.defaultParallelism
     )
-    return f"WITH {ctes}"
+    return spark.read.parquet(os.path.join(root, name))
+
+
+_with = partial(parquet_ctes, _GEN_DIR)
 
 
 def _avg4(sum_col: F.Column, count_col: F.Column) -> F.Column:

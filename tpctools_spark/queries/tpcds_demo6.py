@@ -542,36 +542,12 @@ def tpcds_q72(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = F.broadcast(_t(spark, "warehouse").select("w_warehouse_sk", "w_warehouse_name"))
     it = F.broadcast(_t(spark, "item").select("i_item_sk", "i_item_desc"))
     promo = F.broadcast(_t(spark, "promotion").select("p_promo_sk"))
-    # SHUFFLE_HASH hint on the cs-week side (r11): the main join's
-    # stream side is INVENTORY — ~9x the rows of catalog_sales and
-    # growing faster with sf (items x warehouses x weeks). The default
-    # SortMergeJoin sorts that side, and the r11 sf10 probe showed the
-    # sort dominating: q72 scaled 23.5x from sf1 while every other
-    # top-ten query scaled 1.2-5.7x. Building a shuffled-hash table on
-    # the cs side streams the 133M inventory rows unsorted.
-    # Interleaved A/Bs: sf10 min 32.3 -> 10.6 s (3.1x, sign-stable all
-    # 3 reps); sf1 min 3.07 -> 1.82 s (4/5 reps positive); identical
-    # 128740-group output. Scale note (corrected, r11 ADVICE): vanilla
-    # Spark's SHJ build-side HashedRelation does NOT spill — if one
-    # shuffle partition's cs-x-week build side outgrows task memory it
-    # raises SparkOutOfMemoryError rather than degrading. The hint is
-    # therefore a measured trade: it removes the n log n sort on the
-    # ~9x-larger, faster-growing inventory stream side (the proven
-    # sf10 bottleneck) in exchange for a residual hard-OOM risk at
-    # scales well beyond the tested sf10. Mitigation at larger sf:
-    # shuffle-partition count must scale with sf (keeping per-partition
-    # build bytes roughly constant — cs x week is uniformly hash-
-    # partitioned on item_sk, no skewed key), and AQE's runtime
-    # partition coalescing/splitting already targets a fixed
-    # advisory partition size; above a known-safe scale, set
-    # SPARK_GRAFT_Q72_SHJ=0 to drop the hint and fall back to the
-    # spill-safe SMJ default (r12 ADVICE: the fallback must be
-    # reachable without a code edit).
-    import os as _os
-
-    cs_week = cs.join(d1, cs.cs_sold_date_sk == d1.d1_sk)
-    if _os.environ.get("SPARK_GRAFT_Q72_SHJ", "1") != "0":
-        cs_week = cs_week.hint("shuffle_hash")
+    # SHUFFLE_HASH hint on the cs-week side: the main join's stream
+    # side is INVENTORY (~9x the rows of catalog_sales, growing faster
+    # with sf), and the default SortMergeJoin's sort of it dominated q72
+    # at sf10 (3.1x faster with the hint, identical output).
+    # OOM if one shuffle partition's cs x week rows outgrow task memory (SHJ builds never spill).
+    cs_week = cs.join(d1, cs.cs_sold_date_sk == d1.d1_sk).hint("shuffle_hash")
     joined = (
         cs_week
         .join(

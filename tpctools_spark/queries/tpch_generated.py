@@ -29,11 +29,12 @@ identical.
 from __future__ import annotations
 
 import os
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from tpctools_spark.generate import build_table
+from tpctools_spark.benchmark import TpcH, materialize, parquet_ctes
 from tpctools_spark.queries._util import trunc_digits
 from tpctools_spark.registry import query
 
@@ -43,28 +44,6 @@ _GEN_DIR = os.path.join(
     ".scratch",
     "tpch_gen_sf001",
 )
-_GEN_TABLES = [
-    "region", "nation", "supplier", "customer",
-    "part", "partsupp", "orders", "lineitem",
-]
-
-
-def _materialize(spark: SparkSession) -> None:
-    """Write the generated tables to the stable scratch dir once.
-
-    Generation is a pure function of (table, scale) — partition- and
-    run-invariant — so an existing materialization is always identical
-    to a fresh one and can be reused across sessions and by the DuckDB
-    oracle side."""
-    marker = os.path.join(_GEN_DIR, "_ALL_TABLES_OK")
-    if os.path.exists(marker):
-        return
-    for name in _GEN_TABLES:
-        build_table(
-            spark, name, _SCALE, spark.sparkContext.defaultParallelism
-        ).write.mode("overwrite").parquet(os.path.join(_GEN_DIR, name))
-    with open(marker, "w") as f:
-        f.write("ok\n")
 
 
 def _t(spark: SparkSession, name: str) -> DataFrame:
@@ -72,20 +51,13 @@ def _t(spark: SparkSession, name: str) -> DataFrame:
     # table directory (bench.py's sf1 suite), read it instead of the
     # default sf0.01 scratch materialization. Query logic is
     # scale-blind either way.
-    override = os.environ.get("TPCTOOLS_TPCH_DIR")
-    if override:
-        return spark.read.parquet(os.path.join(override, name))
-    _materialize(spark)
-    return spark.read.parquet(os.path.join(_GEN_DIR, name))
-
-
-def _with(*tables: str) -> str:
-    """WITH prefix registering generated-table parquet as DuckDB CTEs."""
-    ctes = ", ".join(
-        f"{t} AS (SELECT * FROM read_parquet('{_GEN_DIR}/{t}/*.parquet'))"
-        for t in tables
+    root = os.environ.get("TPCTOOLS_TPCH_DIR") or materialize(
+        spark, TpcH(), _SCALE, _GEN_DIR, spark.sparkContext.defaultParallelism
     )
-    return f"WITH {ctes}"
+    return spark.read.parquet(os.path.join(root, name))
+
+
+_with = partial(parquet_ctes, _GEN_DIR)
 
 
 def _round2(c: F.Column) -> F.Column:

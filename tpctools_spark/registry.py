@@ -51,13 +51,7 @@ def _round_seed() -> int:
     current round number, inferred from the ``CORRECTNESS_r*.json``
     artifacts the driver itself commits at the repo root — no clock,
     no randomness, and the order is stable for the whole round.
-    ``SPARK_GRAFT_ROUND`` overrides for tests.
     """
-    import os
-
-    env = os.environ.get("SPARK_GRAFT_ROUND")
-    if env is not None:
-        return int(env)
     from pathlib import Path
 
     root = Path(__file__).resolve().parents[1]

@@ -31,9 +31,7 @@ def get_spark(
     runs unchanged — only ``master`` and sizing configs differ.
     """
     master = master or f"local[{DEFAULT_CPUS}]"
-    shuffle_partitions = shuffle_partitions or int(
-        os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", DEFAULT_CPUS)
-    )
+    shuffle_partitions = shuffle_partitions or int(DEFAULT_CPUS)
     b = (
         SparkSession.builder.appName(app_name)
         .master(master)
