@@ -39,21 +39,30 @@ def test_lsh_cosine_rejects_dim_drift(spark, tmp_path):
 
 @pytest.mark.parametrize(
     "name",
-    ["dedup_embedding", "dedup_embedding_incremental", "dedup_semantic_prune"],
+    [
+        "dedup_embedding",
+        "dedup_embedding_incremental",
+        "dedup_semantic_prune",
+        "sim_pq_topk",
+    ],
 )
 def test_cell_scans_reject_dim_drift(spark, tmp_path, name):
-    """The Arrow within-cell scans (``_cell_blocks``) reshape each cell
-    to n×64; a 4-dim corpus must raise, naming the observed dim, instead
-    of mis-reshaping into wrong cosines."""
+    """The Arrow scans read embeddings as n×64 matrices
+    (``_runscan.fixed_width``); a 4-dim corpus must raise, naming the
+    observed dim, instead of mis-reshaping into wrong cosines or codes.
+    The corpus holds vec_ids 0..79 so that PQ's seed vectors 0..63
+    exist; PQ fails while building its codebook, inside the query
+    call."""
     from tpctools_spark.registry import spark_queries
 
     bad_dir = str(tmp_path / "sfbad")
     spark.createDataFrame(
-        [(i, i % 3, [0.1 * i, 0.2, 0.3, 0.4]) for i in range(1, 40)],
+        [(i, i % 3, [0.1 * i, 0.2, 0.3, 0.4]) for i in range(80)],
         "vec_id bigint, label int, embedding array<float>",
     ).write.parquet(f"{bad_dir}/embeddings.parquet")
-    msg = _collect_err(spark_queries()[name](spark, bad_dir))
-    assert "embedding dim != 64 (got 4)" in msg
+    with pytest.raises(Exception) as ei:
+        spark_queries()[name](spark, bad_dir).collect()
+    assert "embedding dim != 64 (got 4)" in str(ei.value)
     spark.catalog.clearCache()
 
 

@@ -147,7 +147,7 @@ def test_prune_and_embedding_arrow_scans_match_oracle(
     argument), so a numpy/pyarrow change that broke the accumulation
     order would be a silent oracle break. Pin exact output equality on
     a planted corpus large enough to fill many cells, for the three
-    queries built on ``_cell_blocks``/``_pair_dot_block``."""
+    queries built on ``similarity._cell_cosines``."""
     d, con = planted_embeddings
 
     kept = oracle_parity(con, d, "dedup_semantic_prune")

@@ -333,13 +333,13 @@ def test_aqe_splits_planted_skew_join(spark):
 
 
 def test_fixture_embedding_dim_matches_km_constant(spark):
-    """_KM_DIM is baked into the generated k-means/medoid oracle SQL —
+    """EMB_DIM is baked into the generated k-means/medoid oracle SQL —
     if the fixture dimensionality ever drifts, fail HERE, not with a
     silent hash mismatch."""
     from pyspark.sql import functions as F
 
     from tpctools_spark.catalog import table
-    from tpctools_spark.queries.similarity import _KM_DIM
+    from tpctools_spark.queries.similarity import EMB_DIM
 
     dims = (
         table(spark, "/root/testdata/sf0.001", "embeddings")
@@ -347,7 +347,7 @@ def test_fixture_embedding_dim_matches_km_constant(spark):
         .distinct()
         .collect()
     )
-    assert [r.d for r in dims] == [_KM_DIM]
+    assert [r.d for r in dims] == [EMB_DIM]
 
 
 def test_global_rank_property_random_shapes(spark):

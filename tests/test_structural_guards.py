@@ -290,7 +290,7 @@ def test_env_reads_are_the_documented_ones():
     import tpctools_spark
 
     allowed = {
-        "SPARK_GRAFT_CPUS", "SPARK_GRAFT_DRIVER_MEM", "SPARK_GRAFT_SF_DIR",
+        "SPARK_GRAFT_CPUS", "SPARK_GRAFT_DRIVER_MEM",
         "TPCTOOLS_TPCH_DIR", "TPCTOOLS_TPCDS_DIR", "TPCTOOLS_NO_CHECKPOINT",
     }
     read = re.compile(r"""(?:environ(?:\.get|\.pop|\.setdefault)?|getenv)\s*[(\[]\s*(["']?)(\w*)""")
@@ -301,3 +301,64 @@ def test_env_reads_are_the_documented_ones():
         if not quote or name not in allowed
     )
     assert not stray, f"undocumented environment reads: {stray}"
+
+
+def test_library_modules_define_each_top_level_name_once():
+    """A second top-level ``def``/``class`` of the same name silently
+    rebinds the first; anything registered through the first (a query's
+    oracle, a decorator's target) then disagrees with what the module
+    exports."""
+    import ast
+    from collections import Counter
+    from pathlib import Path
+
+    import tpctools_spark
+
+    kinds = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+    twice = []
+    for p in sorted(Path(tpctools_spark.__file__).parent.rglob("*.py")):
+        defs = Counter(
+            n.name
+            for n in ast.parse(p.read_text()).body
+            if isinstance(n, kinds)
+        )
+        twice += [f"{p.name}: {name}" for name, k in defs.items() if k > 1]
+    assert not twice, f"top-level names defined twice: {twice}"
+
+
+def test_query_module_imports_are_acyclic():
+    """Each decision lives in one query module: the graph of
+    ``from tpctools_spark.queries.X import`` edges between
+    ``queries/*.py``, module-level and function-level alike, has no
+    cycle."""
+    import ast
+    from pathlib import Path
+
+    import tpctools_spark.queries as Q
+
+    prefix = "tpctools_spark.queries."
+    deps = {
+        p.stem: {
+            n.module[len(prefix):].split(".")[0]
+            for n in ast.walk(ast.parse(p.read_text()))
+            if isinstance(n, ast.ImportFrom)
+            and (n.module or "").startswith(prefix)
+        }
+        - {p.stem}
+        for p in Path(Q.__file__).parent.glob("*.py")
+    }
+    done: set[str] = set()
+
+    def visit(mod: str, path: list[str]) -> None:
+        if mod in path:
+            raise AssertionError(
+                "import cycle: " + " -> ".join(path[path.index(mod):] + [mod])
+            )
+        if mod in done:
+            return
+        for dep in sorted(deps.get(mod, ())):
+            visit(dep, path + [mod])
+        done.add(mod)
+
+    for mod in sorted(deps):
+        visit(mod, [])

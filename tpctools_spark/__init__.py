@@ -14,6 +14,8 @@ Layout
 - :mod:`tpctools_spark.catalog`    — table loaders over the parquet fixtures
 - :mod:`tpctools_spark.registry`   — query/oracle registration (driver contract)
 - :mod:`tpctools_spark.queries`    — the declared operator inventory (§2.B)
+- :mod:`tpctools_spark.queries._runscan` — the one sorted-run Arrow scan
+  (JVM-sorted runs → numpy kernels) behind the dedup/similarity pair scans
 - :mod:`tpctools_spark.benchmark`  — the one module that knows a benchmark
   (``Tpc``: name, text extension, schemas, ``build_table``; ``tpch``,
   ``tpcds``, ``corpus``), the ``create_benchmark`` dispatch, the table

@@ -15,8 +15,6 @@ from pyspark.sql.types import LongType, TimestampNTZType
 
 from tpctools_spark.schemas import TESTDATA_TABLE_NAMES
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one fixture table as a lazy DataFrame.

@@ -44,11 +44,6 @@ def davg(c: Column) -> Column:
     return trunc_digits(F.sum(money(c)).cast("double") / F.count(c), 2)
 
 
-def dsum_expr(c: Column) -> Column:
-    """SUM of an already-decimal expression → rounded double."""
-    return F.round(F.sum(c).cast("double"), 2)
-
-
 def trunc_digits(c: Column, k: int) -> Column:
     """Truncate a raw double to k decimals: ``floor(x·10^k)/10^k``.
 
@@ -77,11 +72,6 @@ def sql_trunc_digits(expr: str, k: int) -> str:
     # identity for every other double.
     scale = 10**k
     return f"(0.0 + CAST(floor(({expr}) * {scale}) AS DOUBLE) / {scale})"
-
-
-# DuckDB-side twins (string templates for oracle SQL).
-def sql_dsum(expr: str) -> str:
-    return f"ROUND(CAST(SUM(CAST({expr} AS DECIMAL(12,2))) AS DOUBLE), 2)"
 
 
 def global_rank(df, order_by, rn="rn", cumsums=None, partitions=None):

@@ -25,11 +25,23 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from tpctools_spark.catalog import table
+from tpctools_spark.queries._runscan import fixed_width, run_scan
 from tpctools_spark.queries._util import (
     release_local_checkpoint as _release_local_checkpoint,
     scan_size_bytes,
     spread_input,
     trunc_digits,
+)
+# The embedding blocking lives in similarity; _embedding_cells is
+# re-exported for callers that read it from dedup (bench.py).
+from tpctools_spark.queries.similarity import (  # noqa: F401
+    CELL_KEYS,
+    EMB_DIM,
+    _EMB_CELL_TARGET,
+    _emb_incr_kernel,
+    _emb_pairs_kernel,
+    _embedding_cells,
+    _tagged_cells,
 )
 from tpctools_spark.registry import query
 
@@ -360,110 +372,49 @@ def _minhash_pairs_arrow(bands: DataFrame) -> DataFrame:
 
     Input must carry (doc_id, band, bucket, sig32).
 
-    r14 memory bound (the r13 ADVICE item): the r13 form concatenated
-    the WHOLE shuffle partition in the Python worker, Python-sorted it,
-    and materialized the full O(total-pairs) i/j index arrays before
-    the chunked comparison — worker memory scaled with partition size
-    and with one hot bucket's pair count. Now the (band, bucket) sort
-    happens in the JVM (``sortWithinPartitions`` on the same exchange —
-    spillable, no extra shuffle), the worker STREAMS Arrow batches and
-    flushes complete bucket runs as they close (carry = the one
-    possibly-straddling tail bucket), and pair indices are derived per
-    4M-pair chunk from the per-row prefix counts (``searchsorted`` over
-    the cumulative pair counts) instead of being enumerated up front —
-    peak worker memory is O(flushed region + chunk), independent of
-    partition size and of any single bucket's O(m²) pair count.
-    Outputs are unchanged: pair membership and agreement counts are
-    order-invariant, and every (band, bucket) group still lands in one
-    worker via the repartition.
+    Memory: the (band, bucket) sort runs in the JVM and the worker
+    streams complete bucket runs (``_runscan.split_runs``); pair indices
+    are derived per 4M-pair chunk, so peak worker memory is O(region +
+    chunk), independent of any single bucket's O(m²) pair count.
     """
-    from pyspark.sql import types as spark_types
+    return run_scan(
+        bands,
+        ("band", "bucket"),
+        _minhash_agreements,
+        "doc_a bigint, doc_b bigint, agree int",
+    ).distinct()
 
-    def gen(batches):
-        import numpy as np
-        import pyarrow as pa
 
-        def flush(tab):
-            """Emit ≥16-agreement pairs of COMPLETE (band, bucket) runs
-            — ``tab`` is sorted by (band, bucket) (JVM sort)."""
-            n = tab.num_rows
-            sc = tab.column("sig32").combine_chunks()
-            offs = np.diff(sc.offsets.to_numpy())
-            if sc.null_count or not (offs == N_MINHASH).all():
-                raise ValueError(
-                    "_minhash_pairs_arrow: signature arity drift"
-                )
-            S = (
-                sc.flatten()
-                .to_numpy(zero_copy_only=False)
-                .reshape(n, N_MINHASH)
-            )
-            ids = tab.column("doc_id").to_numpy()
-            band = tab.column("band").to_numpy()
-            bucket = tab.column("bucket").to_numpy()
-            change = np.empty(n, dtype=bool)
-            change[0] = True
-            change[1:] = (band[1:] != band[:-1]) | (
-                bucket[1:] != bucket[:-1]
-            )
-            # Row r (bucket position pos[r]) pairs, as the right
-            # element, with the pos[r] rows before it — vectorized, no
-            # per-bucket Python loop. cumpos[r] = #pairs whose right
-            # element is ≤ r, so pair id p maps to j = first row with
-            # cumpos[j] > p and i = run start + offset within j's run.
-            starts_per_row = np.maximum.accumulate(
-                np.where(change, np.arange(n), 0)
-            )
-            pos = np.arange(n) - starts_per_row
-            cumpos = np.cumsum(pos)
-            total = int(cumpos[-1])
-            if total == 0:
-                return None
-            oa, ob, oc = [], [], []
-            chunk = 4_000_000  # bounds index + comparison buffers
-            for s in range(0, total, chunk):
-                pid = np.arange(s, min(s + chunk, total), dtype=np.int64)
-                jj = np.searchsorted(cumpos, pid, side="right")
-                ii = starts_per_row[jj] + (pid - (cumpos[jj] - pos[jj]))
-                agree = (S[ii] == S[jj]).sum(axis=1, dtype=np.int32)
-                keep = agree >= N_MINHASH // 2
-                if keep.any():
-                    a, b = ids[ii[keep]], ids[jj[keep]]
-                    oa.append(np.minimum(a, b))
-                    ob.append(np.maximum(a, b))
-                    oc.append(agree[keep])
-            if not oa:
-                return None
-            return pa.RecordBatch.from_pydict(
-                {
-                    "doc_a": pa.array(np.concatenate(oa), type=pa.int64()),
-                    "doc_b": pa.array(np.concatenate(ob), type=pa.int64()),
-                    "agree": pa.array(np.concatenate(oc), type=pa.int32()),
-                }
-            )
+def _minhash_agreements(tab, starts):
+    """Kernel of ``_minhash_pairs_arrow``: (doc_a, doc_b, agree) for
+    every same-bucket pair of one table of complete (band, bucket)
+    runs with ≥ 16 of 32 signature slots equal."""
+    import numpy as np
 
-        from tpctools_spark.queries.similarity import (
-            _sorted_region_stream,
-        )
-
-        for region in _sorted_region_stream(batches, "band", "bucket"):
-            out = flush(region)
-            if out is not None:
-                yield out
-
-    schema = spark_types.StructType(
-        [
-            spark_types.StructField("doc_a", spark_types.LongType()),
-            spark_types.StructField("doc_b", spark_types.LongType()),
-            spark_types.StructField("agree", spark_types.IntegerType()),
-        ]
+    n = tab.num_rows
+    S = fixed_width(
+        tab.column("sig32"), N_MINHASH, "_minhash_pairs_arrow: signature arity"
     )
-    return (
-        bands.repartition(F.col("band"), F.col("bucket"))
-        .sortWithinPartitions("band", "bucket")
-        .mapInArrow(gen, schema)
-        .distinct()
-    )
+    ids = tab.column("doc_id").to_numpy()
+    # Row r (bucket position pos[r]) pairs, as the right element, with
+    # the pos[r] rows before it — vectorized, no per-bucket Python
+    # loop. cumpos[r] = #pairs whose right element is ≤ r, so pair id p
+    # maps to j = first row with cumpos[j] > p and i = run start +
+    # offset within j's run.
+    starts_per_row = np.repeat(starts, np.diff(np.append(starts, n)))
+    pos = np.arange(n) - starts_per_row
+    cumpos = np.cumsum(pos)
+    total = int(cumpos[-1])
+    chunk = 4_000_000  # bounds index + comparison buffers
+    for s in range(0, total, chunk):
+        pid = np.arange(s, min(s + chunk, total), dtype=np.int64)
+        jj = np.searchsorted(cumpos, pid, side="right")
+        ii = starts_per_row[jj] + (pid - (cumpos[jj] - pos[jj]))
+        agree = (S[ii] == S[jj]).sum(axis=1, dtype=np.int32)
+        keep = agree >= N_MINHASH // 2
+        if keep.any():
+            a, b = ids[ii[keep]], ids[jj[keep]]
+            yield np.minimum(a, b), np.maximum(a, b), agree[keep]
 
 
 @query("dedup_minhash", oracle=_MINHASH_ORACLE)
@@ -1062,65 +1013,6 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Target within-cell occupancy for dedup_embedding's blocking. Each
-# label splits into 2^b sign-bit sub-cells with b = ceil(log2(n/32)),
-# so expected occupancy stays in (16, 32] no matter how large the
-# corpus grows — the quadratic within-cell pair join is bounded.
-_EMB_CELL_TARGET = 32
-
-# Bit-packed sign-bit sub-cell id: bit i is (e[i] >= centroid[i]).
-# All-integer (shiftleft/IF) so both engines agree bitwise; b = 0
-# (label at/below target size) short-circuits to one sub-cell because
-# Spark's sequence(0, -1) would count DOWN, not produce an empty list.
-# r13 A/B NEGATIVE — unrolled codegen chain (.scratch/ab_subcell.py):
-# a 40-term IF(i < least(b,size(e)) AND e[i+1] >= c[i+1], 1<<i, 0)
-# chain produced bit-identical subcells but measured 3.18 s vs the
-# fold's 2.42 s at 500k, slower in 4/4 interleaved pairs — b is
-# data-dependent (~11 here), so the chain evaluates ~4x the terms the
-# fold iterates, and each dead term still pays two element_at calls.
-# The interpreted fold stays: it runs exactly least(b, size(e)) steps.
-_SUBCELL_EXPR = (
-    "IF(least(b, size(e)) = 0, 0L,"
-    " aggregate(sequence(0, least(b, size(e)) - 1), 0L, (acc, i) -> acc"
-    " + IF(element_at(e, int(i) + 1) >= element_at(centroid, int(i) + 1),"
-    " shiftleft(1L, int(i)), 0L)))"
-)
-
-
-def _embedding_cells(prep: DataFrame) -> DataFrame:
-    """Tag each vector with a bounded-occupancy blocking cell.
-
-    Input: ``(vec_id, label, e: array<double>)``. Output adds
-    ``subcell`` (bigint). Within each label, b = min bits such that
-    32·2^b ≥ n_label; bit i of the sub-cell is the sign of component
-    i versus the label's decimal-exact mean component (the same
-    centroid arithmetic as ``similarity._cell_centroids``, so the
-    comparison is bitwise-reproducible across engines). Label counts
-    and centroids are label-cardinality tables — broadcast; assignment
-    is one row-local pass, O(N·b) total, no candidate generation here.
-    """
-    from tpctools_spark.queries.similarity import _cell_centroids
-
-    bits = (
-        prep.groupBy("label")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(
-            "label",
-            F.expr(
-                "element_at(filter(sequence(0, 40),"
-                f" i -> {_EMB_CELL_TARGET} * shiftleft(1L, int(i)) >= n), 1)"
-            ).alias("b"),
-        )
-    )
-    cents = _cell_centroids(prep).withColumnRenamed("cell", "label")
-    return (
-        prep.join(F.broadcast(bits), "label")
-        .join(F.broadcast(cents), "label")
-        .withColumn("subcell", F.expr(_SUBCELL_EXPR))
-        .drop("b", "centroid")
-    )
-
-
 @query(
     "dedup_embedding",
     oracle=f"""
@@ -1184,21 +1076,20 @@ def dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     Per-pair cosines use ONE ordered-fold double dot product against
     precomputed norms: float·float is exact in double and both engines
     fold the product list in the same left-to-right order (the Arrow
-    scan's ``_pair_dot_block``, DuckDB ``list_reduce``), so the
+    scan's ``similarity._cell_cosines``, DuckDB ``list_reduce``), so the
     threshold cannot flip on FP order — without paying per-pair decimal
     arithmetic in the (bounded) within-cell hot path.
     """
-    from tpctools_spark.queries.similarity import _dotf, _emb_pairs_arrow
-
-    emb = table(spark, sf_dir, "embeddings")
-    e = F.transform(F.col("embedding"), lambda x: x.cast("double"))
-    prep = emb.select("vec_id", "label", e.alias("e"))
-    tagged = _embedding_cells(prep).withColumn(
-        "nrm", F.sqrt(_dotf(F.col("e"), F.col("e")))
-    )
+    _, tagged = _tagged_cells(spark, sf_dir)
     # Pairs come from the Arrow within-cell pair scan: one shuffle,
     # bounded numpy pair dots (OPTIMIZATION_r13.md §6).
-    return _emb_pairs_arrow(tagged).select(
+    pairs = run_scan(
+        tagged,
+        CELL_KEYS,
+        _emb_pairs_kernel,
+        "vec_a bigint, vec_b bigint, cosine_raw double",
+    )
+    return pairs.select(
         "vec_a",
         "vec_b",
         trunc_digits(F.col("cosine_raw"), 4).alias("cosine"),
@@ -1352,22 +1243,15 @@ def dedup_embedding_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     cells and centroids are a persisted index, built once and reused
     per ingest); within-cell occupancy is held ≤ ~32 by construction,
     so the probe is O(batch · occupancy). Per-pair cosines use the
-    dim-ordered double dot (``_pair_dot_block``) against precomputed
-    norms — bitwise-reproducible across engines without per-pair
-    decimals.
+    dim-ordered double dot (``similarity._cell_cosines``) against
+    precomputed norms — bitwise-reproducible across engines without
+    per-pair decimals.
     """
-    from tpctools_spark.queries.similarity import _dotf, _emb_incr_hits_arrow
-
-    emb = table(spark, sf_dir, "embeddings")
-    e = F.transform(F.col("embedding"), lambda x: x.cast("double"))
-    prep = emb.select("vec_id", "label", e.alias("e"))
-    tagged = _embedding_cells(prep).withColumn(
-        "nrm", F.sqrt(_dotf(F.col("e"), F.col("e")))
-    )
+    prep, tagged = _tagged_cells(spark, sf_dir)
     is_batch = (F.col("vec_id") % 9 == 0) & (F.col("vec_id") > 0)
     # Neighbor counts come from the Arrow within-cell batch×corpus scan
     # (OPTIMIZATION_r13.md §8).
-    hits = _emb_incr_hits_arrow(tagged)
+    hits = run_scan(tagged, CELL_KEYS, _emb_incr_kernel, "bd bigint, n bigint")
     return (
         prep.filter(is_batch)
         .select("vec_id")
@@ -1703,7 +1587,6 @@ def dedup_cluster_components(spark: SparkSession, sf_dir: str) -> DataFrame:
 # corpus is small enough to afford small b).
 _LSH_BANDS = 4
 _LSH_MIN_BITS = 4
-_LSH_DIM = 64
 _LSH_BUCKET_TARGET = 8
 
 # Plane-sign hash: the generator's two-round square-and-mix (_h) over
@@ -1760,14 +1643,12 @@ def _lsh_sig_arrow(vecs: DataFrame, bits: int) -> DataFrame:
     band-key packing is integer-exact.
     """
     import numpy as np
-    from pyspark.sql import types as spark_types
 
     planes = _LSH_BANDS * bits
-    dim = _LSH_DIM
     sgn = np.array(
         [
             [1.0 if _lsh_sign_pos(p, d) else -1.0 for p in range(planes)]
-            for d in range(1, dim + 1)
+            for d in range(1, EMB_DIM + 1)
         ]
     )
     pow2 = 1 << np.arange(bits, dtype=np.int64)
@@ -1781,33 +1662,15 @@ def _lsh_sig_arrow(vecs: DataFrame, bits: int) -> DataFrame:
             idx_v = b.schema.get_field_index("vec_id")
             idx_e = b.schema.get_field_index("embedding")
             emb = b.column(idx_e)
-            n = b.num_rows
-            # Dim drift fails LOUDLY: ragged or null embeddings would
-            # otherwise silently mis-reshape.
-            if n:
-                offs = np.diff(emb.offsets.to_numpy())
-                if emb.null_count or not (offs == dim).all():
-                    bad = (
-                        "null"
-                        if emb.null_count
-                        else int(offs[offs != dim][0])
-                    )
-                    raise ValueError(
-                        f"dedup_lsh_cosine: embedding dim != {dim} "
-                        f"(got {bad})"
-                    )
-            e32 = emb.flatten().to_numpy(zero_copy_only=False)
-            e = e32.astype(np.float64).reshape(n, dim)
-            if n:
-                acc = e[:, 0:1] * sgn[0]
-                nsq = e[:, 0] * e[:, 0]
-                for d in range(1, dim):
-                    acc += e[:, d : d + 1] * sgn[d]
-                    nsq += e[:, d] * e[:, d]
-                sbits = (acc >= 0.0).astype(np.int64)
-            else:
-                sbits = np.zeros((0, planes), dtype=np.int64)
-                nsq = np.zeros(0)
+            e = fixed_width(
+                emb, EMB_DIM, "dedup_lsh_cosine: embedding dim"
+            ).astype(np.float64)
+            acc = e[:, 0:1] * sgn[0]
+            nsq = e[:, 0] * e[:, 0]
+            for d in range(1, EMB_DIM):
+                acc += e[:, d : d + 1] * sgn[d]
+                nsq += e[:, d] * e[:, d]
+            sbits = (acc >= 0.0).astype(np.int64)
             out = {"vec_id": b.column(idx_v), "embedding": emb}
             for g in range(bands):
                 out[f"k{g}"] = pa.array(
@@ -1817,19 +1680,10 @@ def _lsh_sig_arrow(vecs: DataFrame, bits: int) -> DataFrame:
             out["nsq"] = pa.array(nsq, type=pa.float64())
             yield pa.RecordBatch.from_pydict(out)
 
-    schema = spark_types.StructType(
-        [
-            spark_types.StructField("vec_id", spark_types.LongType()),
-            spark_types.StructField(
-                "embedding",
-                spark_types.ArrayType(spark_types.FloatType()),
-            ),
-        ]
-        + [
-            spark_types.StructField(f"k{g}", spark_types.LongType())
-            for g in range(bands)
-        ]
-        + [spark_types.StructField("nsq", spark_types.DoubleType())]
+    schema = ", ".join(
+        ["vec_id bigint", "embedding array<float>"]
+        + [f"k{g} bigint" for g in range(bands)]
+        + ["nsq double"]
     )
     return vecs.mapInArrow(gen, schema)
 
@@ -1862,15 +1716,15 @@ def _lsh_pairs_from_bands(prep: DataFrame, bands: DataFrame) -> DataFrame:
     lhs = bands.select(
         F.col("vec_id").alias("vec_a"), "band", "band_key",
         F.col("nsq").alias("nsq_a"),
-        *[F.col(f"d{d}").alias(f"a{d}") for d in range(1, _LSH_DIM + 1)],
+        *[F.col(f"d{d}").alias(f"a{d}") for d in range(1, EMB_DIM + 1)],
     )
     rhs = bands.select(
         F.col("vec_id").alias("vec_b"), "band", "band_key",
         F.col("nsq").alias("nsq_b"),
-        *[F.col(f"d{d}").alias(f"x{d}") for d in range(1, _LSH_DIM + 1)],
+        *[F.col(f"d{d}").alias(f"x{d}") for d in range(1, EMB_DIM + 1)],
     )
     dot_gate = sum(
-        F.col(f"a{d}") * F.col(f"x{d}") for d in range(1, _LSH_DIM + 1)
+        F.col(f"a{d}") * F.col(f"x{d}") for d in range(1, EMB_DIM + 1)
     )
     # r11 A/B NEUTRAL: hint("shuffle_hash") on this self-join (the q72
     # sort-side lesson) measured a wash at the 500k tier once the
@@ -1960,7 +1814,7 @@ def _lsh_pairs_from_bands(prep: DataFrame, bands: DataFrame) -> DataFrame:
     ), sig AS (
       SELECT vec_id, g.b AS b,
              list_transform(range(0, {_LSH_BANDS} * g.b), p ->
-               CASE WHEN list_reduce(list_transform(range(1, {_LSH_DIM + 1}), d ->
+               CASE WHEN list_reduce(list_transform(range(1, {EMB_DIM + 1}), d ->
                       e[d] * {_LSH_SQL_SIGN}),
                       (acc, x) -> acc + x) >= 0
                     THEN 1 ELSE 0 END) AS s
@@ -2053,27 +1907,13 @@ def dedup_lsh_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     # — the r11 shape paid three separate scans (count, prep, sigw).
     bits = _lsh_bits(prep.count())
 
-    # Dimension drift fails LOUDLY (r11 ADVICE): element_at past the end
-    # would return NULL and silently drop pairs; instead d1 rides an
-    # assert_true on size(embedding) == _LSH_DIM — row-local, identity
-    # when right.
-    _dim_guard = F.assert_true(
-        F.size(F.col("embedding")) == _LSH_DIM,
-        F.concat(
-            F.lit(f"dedup_lsh_cosine: embedding dim != {_LSH_DIM} (got "),
-            F.size(F.col("embedding")).cast("string"),
-            F.lit(")"),
-        ),
-    )
     # Dims flatten to DOUBLE once, here: FLOAT columns do not shrink
-    # UnsafeRow's 8-byte slots and measured 25% slower (r12 A/B).
+    # UnsafeRow's 8-byte slots and measured 25% slower (r12 A/B). The
+    # signature map upstream has already rejected any row whose dim is
+    # not EMB_DIM, so element_at never reads past the end.
     dim_exprs = [
-        F.when(_dim_guard.isNull(), F.element_at(F.col("embedding"), 1))
-        .cast("double")
-        .alias("d1")
-    ] + [
         F.element_at(F.col("embedding"), d).cast("double").alias(f"d{d}")
-        for d in range(2, _LSH_DIM + 1)
+        for d in range(1, EMB_DIM + 1)
     ]
 
     # The dims ride THROUGH the band self-join as flat double columns,
@@ -2098,7 +1938,7 @@ def dedup_lsh_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
             for g in range(_LSH_BANDS)
         ]
     )
-    dim_cols = [F.col(f"d{d}") for d in range(1, _LSH_DIM + 1)]
+    dim_cols = [F.col(f"d{d}") for d in range(1, EMB_DIM + 1)]
     bands_tbl = sigw.select(
         "vec_id", "nsq", *dim_cols, F.explode(band_structs).alias("bk")
     ).select(

@@ -1072,7 +1072,7 @@ def events_rate_limit(spark: SparkSession, sf_dir: str) -> DataFrame:
 _BPE_ROUNDS = 3
 
 
-def _bpe_oracle() -> str:
+def _bpe_merge_rounds_oracle() -> str:
     """DuckDB twin: the same 3 merge rounds as chained CTEs."""
     parts = ["""
     tok0 AS (
@@ -1111,7 +1111,7 @@ def _bpe_oracle() -> str:
     )
 
 
-@query("mining_bpe_merge_rounds", oracle=_bpe_oracle())
+@query("mining_bpe_merge_rounds", oracle=_bpe_merge_rounds_oracle())
 def mining_bpe_merge_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BPE tokenizer training, first 3 merge rounds, fully relational:
     count adjacent symbol pairs → adopt the most frequent pair as a

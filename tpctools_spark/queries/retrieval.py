@@ -41,7 +41,15 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from tpctools_spark.catalog import table
+from tpctools_spark.queries._runscan import fixed_width
 from tpctools_spark.queries._util import sql_trunc_digits, trunc_digits
+from tpctools_spark.queries.similarity import (
+    EMB_DIM,
+    PROBE_VEC_ID,
+    TOP_K,
+    _SQL_DOT,
+    sim_cosine_topk,
+)
 from tpctools_spark.registry import query
 
 # ---------------------------------------------------------------------------
@@ -171,7 +179,7 @@ def text_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 # sim_pq_topk
 
 _PQ_M = 8  # subspaces (64-dim vectors → 8 dims each)
-_PQ_SUBDIM = 8
+_PQ_SUBDIM = EMB_DIM // _PQ_M
 _PQ_K = 64  # centroids per subspace codebook
 _PQ_PROBE = 42
 _PQ_TOPK = 10
@@ -377,9 +385,8 @@ def _pq_build(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
         return np.argmin(d, axis=1)
 
     def _q_matrix(tab):
-        col = tab.column("q").combine_chunks()
-        return np.asarray(col.flatten()).reshape(tab.num_rows, -1).astype(
-            np.int64
+        return fixed_width(
+            tab.column("q"), EMB_DIM, "_pq_build: embedding dim"
         )
 
     part_schema = spark_types.StructType(
@@ -818,12 +825,6 @@ _RRF_TOPK = 10
 
 
 def _rrf_sql() -> str:
-    from tpctools_spark.queries.similarity import (
-        PROBE_VEC_ID,
-        TOP_K,
-        _SQL_DOT,
-    )
-
     dot_ep = _SQL_DOT.format(a="e", b="pe")
     dot_ee = _SQL_DOT.format(a="e", b="e")
     return f"""
@@ -875,8 +876,6 @@ def text_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     each leg scales independently (inverted postings vs ANN index);
     the fusion cost never grows past k+k rows.
     """
-    from tpctools_spark.queries.similarity import sim_cosine_topk
-
     bm = text_bm25_search(spark, sf_dir).select(
         F.col("doc_id"), F.col("rank").alias("rb")
     )

@@ -20,11 +20,13 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from tpctools_spark.catalog import table
+from tpctools_spark.queries._runscan import fixed_width, run_scan
 from tpctools_spark.queries._util import trunc_digits
 from tpctools_spark.registry import query
 
 PROBE_VEC_ID = 0
 TOP_K = 10
+EMB_DIM = 64  # the embeddings fixture's dimension (FIXTURES.md)
 
 # Exact-decimal dot product oracle fragment (a, b are double lists).
 _SQL_DOT = (
@@ -104,6 +106,158 @@ def _cell_centroids(prep: DataFrame) -> DataFrame:
             F.transform("pc", lambda s: s.getField("c")).alias("centroid"),
         )
     )
+
+
+# Target within-cell occupancy of the embedding blocking cells. Each
+# label splits into 2^b sign-bit sub-cells with b = ceil(log2(n/32)),
+# so expected occupancy stays in (16, 32] no matter how large the
+# corpus grows — the quadratic within-cell pair scan is bounded.
+_EMB_CELL_TARGET = 32
+
+# Bit-packed sign-bit sub-cell id: bit i is (e[i] >= centroid[i]).
+# All-integer (shiftleft/IF) so both engines agree bitwise; b = 0
+# (label at/below target size) short-circuits to one sub-cell because
+# Spark's sequence(0, -1) would count DOWN, not produce an empty list.
+# The interpreted fold runs exactly least(b, size(e)) steps; an
+# unrolled 40-term chain measured slower (OPTIMIZATION_r13.md).
+_SUBCELL_EXPR = (
+    "IF(least(b, size(e)) = 0, 0L,"
+    " aggregate(sequence(0, least(b, size(e)) - 1), 0L, (acc, i) -> acc"
+    " + IF(element_at(e, int(i) + 1) >= element_at(centroid, int(i) + 1),"
+    " shiftleft(1L, int(i)), 0L)))"
+)
+
+# The blocking cell: the scans below see each cell as one sorted run.
+CELL_KEYS = ("label", "subcell")
+
+
+def _embedding_cells(prep: DataFrame) -> DataFrame:
+    """Tag each vector with a bounded-occupancy blocking cell.
+
+    Input: ``(vec_id, label, e: array<double>)``. Output adds
+    ``subcell`` (bigint). Within each label, b = min bits such that
+    32·2^b ≥ n_label; bit i of the sub-cell is the sign of component
+    i versus the label's decimal-exact mean component
+    (``_cell_centroids``, so the comparison is bitwise-reproducible
+    across engines). Label counts and centroids are label-cardinality
+    tables — broadcast; assignment is one row-local pass, O(N·b) total,
+    no candidate generation here.
+    """
+    bits = (
+        prep.groupBy("label")
+        .agg(F.count(F.lit(1)).alias("n"))
+        .select(
+            "label",
+            F.expr(
+                "element_at(filter(sequence(0, 40),"
+                f" i -> {_EMB_CELL_TARGET} * shiftleft(1L, int(i)) >= n), 1)"
+            ).alias("b"),
+        )
+    )
+    cents = _cell_centroids(prep).withColumnRenamed("cell", "label")
+    return (
+        prep.join(F.broadcast(bits), "label")
+        .join(F.broadcast(cents), "label")
+        .withColumn("subcell", F.expr(_SUBCELL_EXPR))
+        .drop("b", "centroid")
+    )
+
+
+def _tagged_cells(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame]:
+    """The embeddings as ``(vec_id, label, e: array<double>)``, and the
+    same vectors as a cell scan's input ``(vec_id, label, subcell, nrm,
+    e)``, ``nrm`` being the ordered-fold double norm."""
+    emb = table(spark, sf_dir, "embeddings")
+    prep = emb.select(
+        "vec_id", "label", _as_double(F.col("embedding")).alias("e")
+    )
+    tagged = _embedding_cells(prep).withColumn(
+        "nrm", F.sqrt(_dotf(F.col("e"), F.col("e")))
+    )
+    return prep, tagged.select("vec_id", "label", "subcell", "nrm", "e")
+
+
+def _cell_cosines(tab, starts, need=None):
+    """Yield ``(cell, ids, cos)`` for every cell of ≥ 2 vectors in one
+    table of complete (label, subcell) runs: the cell's row slice, its
+    vec_ids and its all-pairs cosine matrix. ``need(ids)`` may skip a
+    cell before its cosines are computed.
+
+    Bit-exactness: each pair dot starts at e₁ᵃ·e₁ᵇ and adds e_dᵃ·e_dᵇ in
+    dim order, the IEEE double op sequence of the oracle's
+    ``list_reduce``, and divides by the same norm product (one multiply
+    per pair), so every cosine equals the oracle's bit for bit.
+    """
+    import numpy as np
+
+    E = fixed_width(tab.column("e"), EMB_DIM, "cell scan: embedding dim")
+    ids = tab.column("vec_id").to_numpy()
+    nrm = tab.column("nrm").to_numpy()
+    for s0, s1 in zip(starts, np.append(starts[1:], tab.num_rows)):
+        cell = slice(int(s0), int(s1))
+        if s1 - s0 < 2 or (need is not None and not need(ids[cell])):
+            continue
+        Ec = E[cell]
+        acc = np.outer(Ec[:, 0], Ec[:, 0])
+        for d in range(1, EMB_DIM):
+            acc += np.outer(Ec[:, d], Ec[:, d])
+        yield cell, ids[cell], acc / np.outer(nrm[cell], nrm[cell])
+
+
+def _emb_pairs_kernel(tab, starts):
+    """``dedup_embedding``: every same-cell pair at cosine ≥ 0.3 as
+    (vec_a, vec_b, cosine_raw), vec_a the smaller id (the oracle's
+    a < b side; the cosine is symmetric bit for bit)."""
+    import numpy as np
+
+    for _, ic, cos in _cell_cosines(tab, starts):
+        iu, ju = np.triu_indices(len(ic), 1)
+        cv = cos[iu, ju]
+        keep = cv >= 0.3
+        if keep.any():
+            va, vb = ic[iu[keep]], ic[ju[keep]]
+            yield np.minimum(va, vb), np.maximum(va, vb), cv[keep]
+
+
+def _is_batch(ids):
+    """``dedup_embedding_incremental``'s incoming batch: vec_id ≡ 0
+    (mod 9), vec_id > 0."""
+    return (ids % 9 == 0) & (ids > 0)
+
+
+def _emb_incr_kernel(tab, starts):
+    """``dedup_embedding_incremental``: (bd, n) for each batch vector
+    with n ≥ 1 same-cell corpus vectors at cosine ≥ 0.3 (the oracle's
+    batch×corpus probe pairs)."""
+    import numpy as np
+
+    def mixed(ic):
+        return 0 < _is_batch(ic).sum() < len(ic)
+
+    for _, ic, cos in _cell_cosines(tab, starts, need=mixed):
+        b = _is_batch(ic)
+        hits = (cos[np.ix_(b, ~b)] >= 0.3).sum(axis=1)
+        keep = hits > 0
+        if keep.any():
+            yield ic[b][keep], hits[keep].astype(np.int64)
+
+
+def _prune_kernel(tab, starts):
+    """``dedup_semantic_prune``'s dropped vec_ids: a vector drops when a
+    same-cell neighbour at cosine ≥ tau is more diverse (lower
+    ``cent_cos``, ties to the lower id). A vec_id lives in exactly one
+    cell, so no global distinct is needed."""
+    cc = tab.column("cent_cos").to_numpy()
+    for cell, ic, cos in _cell_cosines(tab, starts):
+        ci = cc[cell]
+        better = (ci[None, :] < ci[:, None]) | (
+            (ci[None, :] == ci[:, None]) & (ic[None, :] < ic[:, None])
+        )
+        drop = ((cos >= _SEMANTIC_TAU) & better).any(axis=1)
+        if drop.any():
+            yield (ic[drop],)
 
 
 @query(
@@ -256,7 +410,6 @@ K_CLUSTERS = 8
 KMEANS_ITERS = 3
 
 
-_KM_DIM = 64  # fixture embedding dimensionality (FIXTURES.md)
 _KM_SHIFT = 1000  # makes every quantized component positive (|e| < 1)
 
 # Quantized-fixed-point prep, shared by kmeans and medoid oracles:
@@ -272,7 +425,7 @@ _SQL_FX_PTS = f"""pts AS (
       FROM embeddings
     )"""
 _SQL_FX_D2 = (
-    "list_sum(list_transform(range(1, " + str(_KM_DIM + 1) + "), "
+    "list_sum(list_transform(range(1, " + str(EMB_DIM + 1) + "), "
     "j -> (1000 * {p}.x[j] - {c}.c[j]) * (1000 * {p}.x[j] - {c}.c[j])))"
 )
 
@@ -301,7 +454,7 @@ def _kmeans_oracle() -> str:
       ) WHERE rn = 1
     ), s{i} AS (
       SELECT k, j, SUM(x[j]) AS s, COUNT(*) AS n
-      FROM a{i}, range(1, {_KM_DIM + 1}) t(j)
+      FROM a{i}, range(1, {EMB_DIM + 1}) t(j)
       GROUP BY k, j
     ), u{i} AS (
       SELECT k, list((1000 * s) // n ORDER BY j) AS c
@@ -424,7 +577,7 @@ _MEDOID_ORACLE = f"""
     WITH {_SQL_FX_PTS.replace("SELECT vec_id,", "SELECT vec_id, label,")},
     sums AS (
       SELECT label, j, SUM(x[j]) AS s, COUNT(*) AS n
-      FROM pts, range(1, {_KM_DIM + 1}) t(j)
+      FROM pts, range(1, {EMB_DIM + 1}) t(j)
       GROUP BY label, j
     ), cent AS (
       SELECT label, list((1000 * s) // n ORDER BY j) AS c, MAX(n) AS n
@@ -790,331 +943,6 @@ def _dotf(a: Column, b: Column) -> Column:
     )
 
 
-# The embeddings fixture dimension; the Arrow within-cell scans
-# (``_cell_blocks``) reject any other width.
-_EMB_DIM = 64
-
-
-def _sorted_region_stream(batches, key_a, key_b, min_rows=65536):
-    """Yield pyarrow Tables of COMPLETE (key_a, key_b) runs from a
-    stream of Arrow record batches that arrive SORTED by those keys
-    (the caller adds ``sortWithinPartitions`` on the same exchange).
-
-    The r14 memory bound (r13 VERDICT item 3): the r13 Arrow scans
-    ``pa.concat_tables``'d the WHOLE shuffle partition before sorting
-    and scanning, so Python-worker memory scaled with partition size —
-    unbounded at 100 TB, where one shuffle partition is arbitrarily
-    large. Streaming holds at most ``min_rows`` plus one batch plus
-    the one possibly-straddling tail run, regardless of partition
-    size; the sort itself moves to the JVM, which spills. ``min_rows``
-    amortizes the per-flush numpy column conversions over many Arrow
-    batches (a per-10k-batch flush measured ~7% slower at the 500k
-    minhash tier; 64k ≈ half a 32-lane 500k-tier partition, so small
-    tiers behave exactly like the r13 whole-partition form while the
-    bound still holds at scale). Run-scan outputs are unchanged —
-    every run still arrives whole (the repartition keys contain the
-    run keys) and per-run results are order-invariant. Worker-side
-    only.
-    """
-    import numpy as np
-    import pyarrow as pa
-
-    buf: list = []  # accumulated tables: carry run + fresh batches
-    nbuf = 0
-
-    def concat():
-        return (
-            pa.concat_tables(buf).combine_chunks()
-            if len(buf) > 1
-            else buf[0]
-        )
-
-    for b in batches:
-        if b.num_rows == 0:
-            continue
-        buf.append(pa.Table.from_batches([b]))
-        nbuf += b.num_rows
-        if nbuf < min_rows:
-            continue
-        t = concat()
-        ka = t.column(key_a).to_numpy(zero_copy_only=False)
-        kb = t.column(key_b).to_numpy(zero_copy_only=False)
-        change = (ka[1:] != ka[:-1]) | (kb[1:] != kb[:-1])
-        nz = np.flatnonzero(change)
-        if nz.size == 0:
-            buf = [t]  # one giant run — must keep accumulating
-            nbuf = t.num_rows
-            continue
-        last_start = int(nz[-1]) + 1
-        yield t.slice(0, last_start)
-        tail = t.slice(last_start)
-        buf = [tail]
-        nbuf = tail.num_rows
-    if buf:
-        t = concat()
-        if t.num_rows:
-            yield t
-
-
-def _cell_blocks(tab):
-    """Worker-side scaffolding for the Arrow within-cell pair scans:
-    sort an Arrow table of one shuffle partition by (label, subcell)
-    and yield ``(ids, E, slice)`` views per cell with ≥ 2 members.
-
-    ``E`` is the n×`_EMB_DIM` float64 matrix of the whole partition
-    (dim drift fails LOUDLY: a ragged row would otherwise mis-reshape);
-    each yielded slice addresses one contiguous cell. Runs inside
-    ``mapInArrow``.
-    """
-    import numpy as np
-    import pyarrow.compute as pc
-
-    n = tab.num_rows
-    idx = pc.sort_indices(
-        tab, sort_keys=[("label", "ascending"), ("subcell", "ascending")]
-    )
-    tab = tab.take(idx)
-    emb_col = tab.column("e").combine_chunks()
-    offs = np.diff(emb_col.offsets.to_numpy())
-    if emb_col.null_count or not (offs == _EMB_DIM).all():
-        bad = (
-            "null"
-            if emb_col.null_count
-            else int(offs[offs != _EMB_DIM][0])
-        )
-        raise ValueError(
-            f"_cell_blocks: embedding dim != {_EMB_DIM} (got {bad})"
-        )
-    E = emb_col.flatten().to_numpy(zero_copy_only=False).reshape(n, _EMB_DIM)
-    sub = tab.column("subcell").to_numpy()
-    lab_codes = (
-        pc.dictionary_encode(tab.column("label"))
-        .combine_chunks()
-        .indices.to_numpy(zero_copy_only=False)
-    )
-    change = np.empty(n, dtype=bool)
-    change[0] = True
-    change[1:] = (lab_codes[1:] != lab_codes[:-1]) | (sub[1:] != sub[:-1])
-    starts = np.flatnonzero(change)
-    ends = np.append(starts[1:], n)
-    for s0, s1 in zip(starts, ends):
-        if s1 - s0 >= 2:
-            yield tab, E, slice(int(s0), int(s1))
-
-
-def _pair_dot_block(E, blk):
-    """All-pairs dot matrix of one cell, accumulated IN DIM ORDER —
-    acc starts at e₁ᵃ·e₁ᵇ and adds e_dᵃ·e_dᵇ per dim, the same IEEE
-    double op sequence as the oracle's ``list_reduce``, so every pair
-    dot is bit-identical to the oracle's (the ``_lsh_sig_arrow``
-    argument)."""
-    import numpy as np
-
-    Ec = E[blk]
-    acc = np.outer(Ec[:, 0], Ec[:, 0])
-    for d in range(1, _EMB_DIM):
-        acc += np.outer(Ec[:, d], Ec[:, d])
-    return acc
-
-
-def _prune_dropped_arrow(scored: DataFrame) -> DataFrame:
-    """The semantic-prune dropped set as ONE shuffle + an Arrow-batched
-    within-cell pair scan.
-
-    Shuffles the slim scored cache ONCE (repartition on the cell key),
-    runs the bounded per-cell pair scan in numpy, and emits only the
-    dropped ids (OPTIMIZATION_r13.md §6: 6.98 → 4.26 s at 500k over
-    the wide-column sort-merge-join tail it replaced).
-
-    Bit-exactness: per-pair dots accumulate in dim order
-    (``_pair_dot_block``); cosine divides by the same nrm product
-    (np.outer = one multiply per pair); tau/diversity comparisons are
-    the same IEEE predicates as the oracle's. A vec_id belongs to
-    exactly one cell, so per-cell uniqueness replaces a global
-    distinct.
-    """
-    from pyspark.sql import types as spark_types
-
-    tau = _SEMANTIC_TAU
-
-    def gen(batches):
-        import numpy as np
-        import pyarrow as pa
-
-        # r14: stream complete (label, subcell) runs instead of
-        # concatenating the whole partition — see _sorted_region_stream
-        # for the memory bound; per-run outputs are order-invariant.
-        for tab in _sorted_region_stream(batches, "label", "subcell"):
-            out = []
-            ids_all = None
-            for stab, E, blk in _cell_blocks(tab):
-                if ids_all is None:
-                    ids_all = stab.column("vec_id").to_numpy()
-                    cc_all = stab.column("cent_cos").to_numpy()
-                    nrm_all = stab.column("nrm").to_numpy()
-                cos = _pair_dot_block(E, blk) / np.outer(
-                    nrm_all[blk], nrm_all[blk]
-                )
-                ci = cc_all[blk]
-                ic = ids_all[blk]
-                better = (ci[None, :] < ci[:, None]) | (
-                    (ci[None, :] == ci[:, None])
-                    & (ic[None, :] < ic[:, None])
-                )
-                drop = ((cos >= tau) & better).any(axis=1)
-                if drop.any():
-                    out.append(ic[drop])
-            if out:
-                yield pa.RecordBatch.from_pydict(
-                    {
-                        "vec_id": pa.array(
-                            np.concatenate(out), type=pa.int64()
-                        )
-                    }
-                )
-
-    schema = spark_types.StructType(
-        [spark_types.StructField("vec_id", spark_types.LongType())]
-    )
-    return (
-        scored.repartition(F.col("label"), F.col("subcell"))
-        .sortWithinPartitions("label", "subcell")
-        .mapInArrow(gen, schema)
-    )
-
-
-def _emb_pairs_arrow(tagged: DataFrame) -> DataFrame:
-    """``dedup_embedding``'s ≥0.3-cosine pair table as ONE shuffle + an
-    Arrow-batched within-cell pair scan (OPTIMIZATION_r13.md §6).
-
-    Same bit-exactness argument as ``_prune_dropped_arrow`` (dots
-    accumulate in dim order via ``_pair_dot_block``; products/divisions
-    are commutative-identical either pair orientation, so emitting
-    vec_a = min id matches the oracle's a<b side assignment).
-
-    Input must carry (vec_id, label, subcell, nrm, e).
-    """
-    from pyspark.sql import types as spark_types
-
-    def gen(batches):
-        import numpy as np
-        import pyarrow as pa
-
-        # r14: stream complete (label, subcell) runs instead of
-        # concatenating the whole partition — see _sorted_region_stream
-        # for the memory bound; pair sets are order-invariant.
-        for tab in _sorted_region_stream(batches, "label", "subcell"):
-            oa, ob, oc = [], [], []
-            ids_all = None
-            for stab, E, blk in _cell_blocks(tab):
-                if ids_all is None:
-                    ids_all = stab.column("vec_id").to_numpy()
-                    nrm_all = stab.column("nrm").to_numpy()
-                cos = _pair_dot_block(E, blk) / np.outer(
-                    nrm_all[blk], nrm_all[blk]
-                )
-                ic = ids_all[blk]
-                iu, ju = np.triu_indices(ic.shape[0], 1)
-                cv = cos[iu, ju]
-                keep = cv >= 0.3
-                if keep.any():
-                    va, vb = ic[iu[keep]], ic[ju[keep]]
-                    oa.append(np.minimum(va, vb))
-                    ob.append(np.maximum(va, vb))
-                    oc.append(cv[keep])
-            if oa:
-                yield pa.RecordBatch.from_pydict(
-                    {
-                        "vec_a": pa.array(
-                            np.concatenate(oa), type=pa.int64()
-                        ),
-                        "vec_b": pa.array(
-                            np.concatenate(ob), type=pa.int64()
-                        ),
-                        "cosine_raw": pa.array(
-                            np.concatenate(oc), type=pa.float64()
-                        ),
-                    }
-                )
-
-    schema = spark_types.StructType(
-        [
-            spark_types.StructField("vec_a", spark_types.LongType()),
-            spark_types.StructField("vec_b", spark_types.LongType()),
-            spark_types.StructField("cosine_raw", spark_types.DoubleType()),
-        ]
-    )
-    return (
-        tagged.select("vec_id", "label", "subcell", "nrm", "e")
-        .repartition(F.col("label"), F.col("subcell"))
-        .sortWithinPartitions("label", "subcell")
-        .mapInArrow(gen, schema)
-    )
-
-
-def _emb_incr_hits_arrow(tagged: DataFrame) -> DataFrame | None:
-    """``dedup_embedding_incremental``'s per-batch-vector neighbor
-    counts — (bd, n) for batch vectors with ≥1 same-cell ≥0.3-cosine
-    corpus neighbor — as ONE shuffle + an Arrow within-cell scan
-    (OPTIMIZATION_r13.md §8).
-
-    Same machinery and bit-exactness argument as ``_emb_pairs_arrow``
-    (dim-order dots via ``_pair_dot_block``; the batch×corpus slice of
-    the cell's cosine matrix is the oracle's probe pair set, and the
-    count is an integer).
-
-    Input must carry (vec_id, label, subcell, nrm, e).
-    """
-    from pyspark.sql import types as spark_types
-
-    def gen(batches):
-        import numpy as np
-        import pyarrow as pa
-
-        # r14: stream complete (label, subcell) runs instead of
-        # concatenating the whole partition — see _sorted_region_stream
-        # for the memory bound; per-vector counts are order-invariant.
-        for tab in _sorted_region_stream(batches, "label", "subcell"):
-            ob, on = [], []
-            ids_all = None
-            for stab, E, blk in _cell_blocks(tab):
-                if ids_all is None:
-                    ids_all = stab.column("vec_id").to_numpy()
-                    nrm_all = stab.column("nrm").to_numpy()
-                ic = ids_all[blk]
-                bmask = (ic % 9 == 0) & (ic > 0)
-                if not bmask.any() or bmask.all():
-                    continue
-                cos = _pair_dot_block(E, blk) / np.outer(
-                    nrm_all[blk], nrm_all[blk]
-                )
-                hits = (cos[np.ix_(bmask, ~bmask)] >= 0.3).sum(axis=1)
-                keep = hits > 0
-                if keep.any():
-                    ob.append(ic[bmask][keep])
-                    on.append(hits[keep].astype(np.int64))
-            if ob:
-                yield pa.RecordBatch.from_pydict(
-                    {
-                        "bd": pa.array(np.concatenate(ob), type=pa.int64()),
-                        "n": pa.array(np.concatenate(on), type=pa.int64()),
-                    }
-                )
-
-    schema = spark_types.StructType(
-        [
-            spark_types.StructField("bd", spark_types.LongType()),
-            spark_types.StructField("n", spark_types.LongType()),
-        ]
-    )
-    return (
-        tagged.select("vec_id", "label", "subcell", "nrm", "e")
-        .repartition(F.col("label"), F.col("subcell"))
-        .sortWithinPartitions("label", "subcell")
-        .mapInArrow(gen, schema)
-    )
-
-
 @query(
     "dedup_semantic_prune",
     oracle=f"""
@@ -1186,8 +1014,6 @@ def dedup_semantic_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     both engines, so the drop decision stays bitwise-reproducible
     without per-pair decimal arithmetic.
     """
-    from tpctools_spark.queries.dedup import _embedding_cells
-
     emb = table(spark, sf_dir, "embeddings")
     prep = emb.select(
         "vec_id", "label", _as_double(F.col("embedding")).alias("e")
@@ -1214,7 +1040,7 @@ def dedup_semantic_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = scored.select(
         "vec_id", "label", "subcell", "cent_cos", "nrm", "e"
     ).cache()
-    dropped = _prune_dropped_arrow(scored)
+    dropped = run_scan(scored, CELL_KEYS, _prune_kernel, "vec_id bigint")
     return scored.join(dropped, "vec_id", "left_anti").select(
         "vec_id",
         "label",

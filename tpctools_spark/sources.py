@@ -154,12 +154,6 @@ class SensorStreamSource(DataSource):
 # Write path: a JSON-lines directory sink on the same Python API.
 
 
-class _JsonDirCommit:  # WriterCommitMessage payload (picklable)
-    def __init__(self, path: str, n_rows: int):
-        self.path = path
-        self.n_rows = n_rows
-
-
 class JsonDirWriter(DataSourceWriter):
     """Executor-side writer with a staged exactly-once commit protocol.
 
