@@ -470,3 +470,29 @@ def test_embedding_cell_occupancy_bounded(spark):
     assert c2 > c1
     # and doubling the corpus must not double the worst cell
     assert m2 <= 1.8 * m1
+
+
+def test_bucketed_tables_live_in_swept_scratch(spark):
+    """The bucketed copies that join_bucketed and scan_bucket_pruned
+    write land in a pid-tagged dir under the library scratch root, which
+    a later process sweeps once this one is gone, never in ``/tmp``."""
+    import os
+
+    from tpctools_spark.queries.scans import _SCRATCH
+    from tpctools_spark.registry import spark_queries
+
+    before = {t.name for t in spark.catalog.listTables()}
+    for name in ("join_bucketed", "scan_bucket_pruned"):
+        spark_queries()[name](spark, "/root/testdata/sf0.001")
+    new = {t.name for t in spark.catalog.listTables()} - before
+    assert len(new) == 3, new
+    scratch = os.path.realpath(_SCRATCH)
+    for name in new:
+        loc = (
+            spark.sql(f"DESCRIBE TABLE EXTENDED {name}")
+            .filter("col_name = 'Location'")
+            .first()["data_type"]
+        )
+        path = os.path.realpath(loc.removeprefix("file:"))
+        assert os.path.commonpath([path, scratch]) == scratch, path
+        assert f"-pid{os.getpid()}-" in path, path

@@ -362,3 +362,90 @@ def test_query_module_imports_are_acyclic():
 
     for mod in sorted(deps):
         visit(mod, [])
+
+
+def test_library_modules_share_no_private_helper_name():
+    """A private helper is defined in one library module. Two modules
+    each defining ``_x`` are either copies of one body (import it) or
+    different functions under one name (rename one)."""
+    import ast
+    from collections import defaultdict
+    from pathlib import Path
+
+    import tpctools_spark
+
+    root = Path(tpctools_spark.__file__).parent
+    where: dict[str, list[str]] = defaultdict(list)
+    for p in sorted(root.rglob("*.py")):
+        for n in ast.parse(p.read_text()).body:
+            if (
+                isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))
+                and n.name.startswith("_")
+                and not n.name.startswith("__")
+            ):
+                where[n.name].append(str(p.relative_to(root)))
+    shared = {name: mods for name, mods in where.items() if len(mods) > 1}
+    assert not shared, f"private helpers defined in two modules: {shared}"
+
+
+# Functions whose schema-less parquet read is the point: each reads back
+# a path the same query just wrote, or tests what inference returns.
+_INFERRED_READS = {
+    "scan_schema_evolution",
+    "join_dpp_partitioned",
+    "sink_parquet_snappy",
+    "sink_compact_small_files",
+    "sink_partitioned_prune",
+    "sink_sorted_stats_prune",
+    "sink_parquet_bloom",
+    "merge_batch",
+    "read_merge_view",
+    "stream_incremental_dedup",
+    "_dsir_route_read",
+}
+
+
+def test_parquet_reads_are_typed():
+    """Every table is read with a schema (``catalog.read_table``): a
+    ``read.parquet`` without ``.schema(...)`` in its call chain starts a
+    Spark job to infer one, and takes whatever the session's inference
+    confs say. Only the allowlisted read-backs may infer."""
+    import ast
+    from pathlib import Path
+
+    import tpctools_spark
+
+    def chain(node):
+        while isinstance(node, (ast.Call, ast.Attribute)):
+            if isinstance(node, ast.Attribute):
+                yield node.attr
+                node = node.value
+            else:
+                node = node.func
+
+    def visit(node, func, out):
+        for child in ast.iter_child_nodes(node):
+            inner = func
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                inner = child.name
+            elif (
+                isinstance(child, ast.Call)
+                and isinstance(child.func, ast.Attribute)
+                and child.func.attr == "parquet"
+            ):
+                names = set(chain(child.func.value))
+                if names & {"read", "readStream"} and "schema" not in names:
+                    out.append((inner, child.lineno))
+            visit(child, inner, out)
+
+    root = Path(tpctools_spark.__file__).parent
+    untyped = []
+    for p in sorted(root.rglob("*.py")):
+        reads: list = []
+        visit(ast.parse(p.read_text()), "<module>", reads)
+        untyped += [
+            f"{p.relative_to(root)}:{line} in {func}"
+            for func, line in reads
+            if func not in _INFERRED_READS
+        ]
+    assert not untyped, f"schema-less parquet reads: {untyped}"

@@ -9,7 +9,8 @@ generator it replaces, its schemas and a native, partition-invariant
 materializations the queries read all go through this module:
 
 - :func:`write_tables` — build → sink → per-table wall time;
-- :func:`materialize` — write a benchmark's tables once, marker last.
+- :func:`materialize` — write a benchmark's tables once, marker last;
+- :func:`materialized_table` — read one such table back, typed.
 """
 
 from __future__ import annotations
@@ -24,6 +25,7 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import ArrayType, MapType, StructType
 
+from tpctools_spark.catalog import read_table
 from tpctools_spark.generate import build_table
 from tpctools_spark.generate_corpus import CORPUS_ROWS_PER_SF, build_corpus_table
 from tpctools_spark.generate_tpcds import build_tpcds_table
@@ -192,6 +194,22 @@ def materialize(
         with open(marker, "w") as f:
             f.write("ok\n")
     return out_dir
+
+
+def materialized_table(
+    override: Callable[[], str | None], tpc: Tpc, scale: float, out_dir: str,
+    spark: SparkSession, name: str,
+) -> DataFrame:
+    """Table ``name`` of ``tpc``, read through :func:`catalog.read_table`.
+
+    ``override()`` is a scale hook: a pre-materialized table directory
+    (bench.py's sf1 suites) read instead of the scale-``scale``
+    materialization in ``out_dir``. Query logic is scale-blind either
+    way."""
+    root = override() or materialize(
+        spark, tpc, scale, out_dir, spark.sparkContext.defaultParallelism
+    )
+    return read_table(spark, os.path.join(root, name))
 
 
 def parquet_ctes(out_dir: str, *tables: str) -> str:

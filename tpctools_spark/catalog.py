@@ -3,91 +3,99 @@
 One call per table; scans stay lazy so Catalyst prunes columns and pushes
 predicates into the parquet reader (verify with
 ``df.explain("formatted")`` → ``PushedFilters`` / ``ReadSchema``).
+
+Every table is read with the schema of its own parquet footer, the way
+the reference hands each table's schema to its reader
+(``src/lib.rs:55-58``). Taking it from the file rather than from the
+registry matters because the same table names come in two physical
+layouts: the driver fixture (``TESTDATA``) and the generator's
+(``TPCH_REFERENCE``). The footer is read on the driver, so no Spark
+job is started and no session conf is consulted.
 """
 
 from __future__ import annotations
 
+import json
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow.parquet as pq
+from pyspark.sql import DataFrame, DataFrameReader, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType, TimestampNTZType
+from pyspark.sql.pandas.types import from_arrow_schema
+from pyspark.sql.streaming import DataStreamReader
+from pyspark.sql.types import LongType, StructField, StructType
 
 from tpctools_spark.schemas import TESTDATA_TABLE_NAMES
+
+
+def read_schema(path: str) -> tuple[StructType, list[str]]:
+    """The Spark read schema of the parquet table at ``path`` and its
+    ``TIMESTAMP(NANOS)`` columns.
+
+    ``path`` is a parquet file or a flat directory of part files. Like
+    Spark's own inference, one footer is read: that of the directory's
+    first data file, skipping ``_``/``.`` names.
+
+    Timestamps map to ``timestamp`` (LTZ), never ``timestamp_ntz``, so
+    epoch arithmetic (``unix_micros``) resolves on every table. Spark
+    cannot read nanosecond timestamps as timestamps, so those columns
+    are typed ``bigint`` here. They are recognised by their parquet
+    type, INT64 with a nanosecond unit: pyarrow also reports Spark's
+    INT96 timestamps as ``timestamp[ns]``, and those read natively.
+    """
+    if os.path.isdir(path):
+        path = os.path.join(path, min(n for n in os.listdir(path) if n[0] not in "_."))
+    f = pq.ParquetFile(path)
+    nanos = [
+        c.path
+        for c in (f.schema.column(i) for i in range(len(f.schema)))
+        if c.physical_type == "INT64"
+        and c.logical_type.type == "TIMESTAMP"
+        and json.loads(c.logical_type.to_json())["timeUnit"] == "nanoseconds"
+    ]
+    schema = StructType(
+        [
+            StructField(s.name, LongType(), s.nullable) if s.name in nanos else s
+            for s in from_arrow_schema(f.schema_arrow)
+        ]
+    )
+    return schema, nanos
+
+
+def typed_read(reader: DataFrameReader | DataStreamReader, path: str) -> DataFrame:
+    """``reader`` (batch or streaming) over the parquet table at
+    ``path``, typed by :func:`read_schema`.
+
+    Each nanosecond column is truncated to microseconds, the same
+    truncation DuckDB applies when it reads nanos, so both engines see
+    the same instants.
+    """
+    schema, nanos = read_schema(path)
+    df = reader.schema(schema).parquet(path)
+    for c in nanos:
+        df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))
+    return df
+
+
+def read_table(spark: SparkSession, path: str) -> DataFrame:
+    """Read the parquet table at ``path`` with its footer schema."""
+    return typed_read(spark.read, path)
 
 
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one fixture table as a lazy DataFrame.
 
     Pins the session timezone to UTC: the fixtures' timestamps are naive
-    UTC wall-clock (what DuckDB sees), and events.ts is reconstructed
-    from epoch nanos as an LTZ value — without this pin a non-UTC caller
-    session would render every event-time output shifted.
+    UTC wall-clock (what DuckDB sees) and are read as LTZ values, so a
+    non-UTC caller session would render every event-time output shifted.
     """
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    # Fixture timestamps are physical timestamp[us] with no timezone tag.
-    # Spark 4 infers those as TIMESTAMP_NTZ by default, which poisons
-    # epoch arithmetic (unix_micros rejects NTZ) and diverges from the
-    # LTZ semantics every query was validated under.  Under the UTC pin
-    # the two types are value-identical, so read them as LTZ; unlike a
-    # post-scan cast this keeps predicate pushdown on timestamp columns.
-    try:
-        spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    except Exception:  # noqa: BLE001 — conf may be pinned by the caller
-        pass
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    if name == "events":
-        return _ltz(_events(spark, path))
-    return _ltz(spark.read.parquet(path))
-
-
-def _ltz(df: DataFrame) -> DataFrame:
-    """Defense-in-depth: cast any TIMESTAMP_NTZ column to TIMESTAMP (LTZ).
-
-    Normally a no-op — the inferTimestampNTZ pin above makes the scan
-    produce LTZ directly, preserving timestamp predicate pushdown. But a
-    caller-owned session can pin that conf (or reject conf.set), and an
-    NTZ column then poisons every epoch-arithmetic expression downstream
-    (``unix_micros`` rejects NTZ — the round-3 driver run lost two
-    queries to exactly this). Under the UTC session pin the cast is
-    value-identical.
-    """
-    ntz = [f.name for f in df.schema.fields if isinstance(f.dataType, TimestampNTZType)]
-    for c in ntz:
-        df = df.withColumn(c, F.col(c).cast("timestamp"))
-    return df
-
-
-def _events(spark: SparkSession, path: str) -> DataFrame:
-    """events.ts is parquet TIMESTAMP(NANOS), which Spark's reader rejects.
-
-    Read the physical int64 via ``nanosAsLong`` and truncate ns→µs into a
-    proper timestamp — the identical truncation DuckDB applies when it
-    reads nanos, so both engines see the same microsecond instants.
-    """
-    try:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    except Exception:  # noqa: BLE001 — conf may be pinned by the caller
-        pass
-    df = spark.read.parquet(path)
-    if isinstance(df.schema["ts"].dataType, LongType):
-        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    return df
-
-
-def tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Load every fixture table present in ``sf_dir`` (through
-    :func:`table`, so events gets its nanos handling)."""
-    out: dict[str, DataFrame] = {}
-    for name in TESTDATA_TABLE_NAMES:
-        path = os.path.join(sf_dir, f"{name}.parquet")
-        if os.path.exists(path):
-            out[name] = table(spark, sf_dir, name)
-    return out
+    return read_table(spark, os.path.join(sf_dir, f"{name}.parquet"))
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register each fixture table as a temp view for ``spark.sql`` —
-    the raw-SQL entry point of the engine."""
-    for name, df in tables(spark, sf_dir).items():
-        df.createOrReplaceTempView(name)
+    """Register each fixture table present in ``sf_dir`` as a temp view
+    for ``spark.sql`` — the raw-SQL entry point of the engine."""
+    for name in TESTDATA_TABLE_NAMES:
+        if os.path.exists(os.path.join(sf_dir, f"{name}.parquet")):
+            table(spark, sf_dir, name).createOrReplaceTempView(name)

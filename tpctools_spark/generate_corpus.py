@@ -46,7 +46,7 @@ _BASE_US = 1_700_000_000_000_000  # 2023-11-14T22:13:20Z in epoch micros
 _SPAN_US = 7 * 24 * 3600 * 1_000_000  # one week
 
 
-def _h(i: Column, salt) -> Column:
+def _row_hash(i: Column, salt) -> Column:
     """Arithmetic row hash — exact integers, SQL-replicable.
 
     Two rounds: a 2-universal linear pass, then a square-and-mix. The
@@ -91,7 +91,7 @@ def gen_documents(
     i = F.col("id")
     # near-dup: content derives from base_id; copies append one marker
     base = F.when((i % 7 == 0) & (i > 0), i - 1).otherwise(i)
-    n_words = (_h(base, 0) % 60 + 20).cast("int")
+    n_words = (_row_hash(base, 0) % 60 + 20).cast("int")
     vocab = F.array(*[F.lit(w) for w in VOCAB])
 
     def word(k: Column) -> Column:
@@ -101,7 +101,7 @@ def gen_documents(
 
     words = F.transform(
         F.sequence(F.lit(1), n_words),
-        lambda p: word(_h(base, p) % vocab_size),
+        lambda p: word(_row_hash(base, p) % vocab_size),
     )
     text = F.when(
         (i % 7 == 0) & (i > 0),
@@ -120,7 +120,7 @@ def gen_documents(
         text.alias("text"),
         F.element_at(
             F.array(F.lit("en"), F.lit("de"), F.lit("fr"), F.lit("es")),
-            (_h(i, 7) % 4 + 1).cast("int"),
+            (_row_hash(i, 7) % 4 + 1).cast("int"),
         ).alias("lang"),
         F.concat(F.lit("src"), (i % 20).cast("string")).alias("source"),
         F.length(text).cast("bigint").alias("n_chars"),
@@ -138,7 +138,7 @@ def gen_embeddings(
         F.sequence(F.lit(1), F.lit(dim)),
         lambda j: (
             ((label * 1000 + j * 37) % 997 - 498).cast("double") / 1000.0
-            + ((_h(i, j) % 401 - 200)).cast("double") / 1000.0
+            + ((_row_hash(i, j) % 401 - 200)).cast("double") / 1000.0
         ).cast("float"),
     )
     # Fixture-schema contract (TESTDATA embeddings): float elements and
@@ -186,20 +186,20 @@ def gen_embeddings_scattered(
     i = F.col("id")
     is_copy = (i % stride == 0) & (i > 0)
     base = F.when(is_copy, i - 10).otherwise(i)
-    # Double-mixed component hash: one _h round leaves the per-id salt
-    # sequence an arithmetic progression (h1 is linear in the salt), and
-    # the residual cross-dimension correlation concentrated sign-bit
+    # Double-mixed component hash: one _row_hash round leaves the per-id
+    # salt sequence an arithmetic progression (h1 is linear in the salt),
+    # and the residual cross-dimension correlation concentrated sign-bit
     # cells ~15x past their expected occupancy at 500k vectors
-    # (measured: max cell 460 vs E≈24). Feeding the first round's
-    # output back through _h as the row key breaks the progression;
+    # (measured: max cell 460 vs E≈24). Feeding the first round's output
+    # back through _row_hash as the row key breaks the progression;
     # still plain integer arithmetic, still SQL-replicable.
     emb = F.transform(
         F.sequence(F.lit(1), F.lit(dim)),
         lambda j: (
-            (_h(_h(base, j), j) % 1001 - 500).cast("double") / 1000.0
+            (_row_hash(_row_hash(base, j), j) % 1001 - 500).cast("double") / 1000.0
             + F.when(
                 is_copy,
-                (_h(i, j + dim) % 21 - 10).cast("double") / 1000.0,
+                (_row_hash(i, j + dim) % 21 - 10).cast("double") / 1000.0,
             ).otherwise(F.lit(0.0))
         ).cast("float"),
     )
@@ -222,14 +222,14 @@ def gen_events(spark: SparkSession, n_events: int, parts: int = 8) -> DataFrame:
     types = F.array(*[F.lit(t) for t in EVENT_TYPES])
     return spark.range(0, n_events, 1, parts).select(
         i.alias("event_id"),
-        F.timestamp_micros(F.lit(_BASE_US) + _h(i, 2) % _SPAN_US).alias("ts"),
-        (_h(i, 1) % n_users).alias("user_id"),
-        F.element_at(types, (_h(i, 3) % len(EVENT_TYPES) + 1).cast("int")).alias(
-            "event_type"
-        ),
-        ((_h(i, 4) % 30_000).cast("double") / 100.0).alias("value"),
+        F.timestamp_micros(F.lit(_BASE_US) + _row_hash(i, 2) % _SPAN_US).alias("ts"),
+        (_row_hash(i, 1) % n_users).alias("user_id"),
+        F.element_at(
+            types, (_row_hash(i, 3) % len(EVENT_TYPES) + 1).cast("int")
+        ).alias("event_type"),
+        ((_row_hash(i, 4) % 30_000).cast("double") / 100.0).alias("value"),
         F.concat(
-            F.lit('{"k": '), (_h(i, 5) % 100).cast("string"), F.lit("}")
+            F.lit('{"k": '), (_row_hash(i, 5) % 100).cast("string"), F.lit("}")
         ).alias("props"),
     )
 

@@ -38,7 +38,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import DateType, DecimalType, IntegerType, LongType, StringType
 
-from tpctools_spark.generate import COMMENT_WORDS, _h
+from tpctools_spark.generate import COMMENT_WORDS, _u
 from tpctools_spark.schemas_tpcds import TPCDS
 
 # Base cardinalities at sf=1 (TPC-DS spec, Appendix table sizes). Tables
@@ -241,10 +241,6 @@ def rows_for(table: str, scale: float) -> int:
 
 def _seed(table: str, column: str) -> int:
     return zlib.crc32(f"{table}.{column}".encode())
-
-
-def _u(seed: int, n: int, *cols: Column) -> Column:
-    return F.pmod(_h(seed, *cols), F.lit(n))
 
 
 def _maybe_null(c: Column, seed: int, key: Column, nullable: bool) -> Column:

@@ -17,7 +17,6 @@ the physical plan, never the answer.
 from __future__ import annotations
 
 import os
-import tempfile
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -26,6 +25,7 @@ from pyspark.sql import functions as F
 from tpctools_spark.catalog import table
 from tpctools_spark.queries._util import trunc_digits
 from tpctools_spark.queries._util import dsum
+from tpctools_spark.queries.scans import _scratch_dir, _stable_scratch
 from tpctools_spark.registry import query
 
 N_SALT = 8
@@ -54,7 +54,7 @@ def join_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     layout time, never again.
     """
     tag = uuid.uuid4().hex[:8]
-    base = os.path.join(tempfile.gettempdir(), f"tpctools_buckets_{tag}")
+    base = _scratch_dir("buckets")  # pid-tagged: swept once its owner dies
     o_name, l_name = f"orders_b_{tag}", f"lineitem_b_{tag}"
 
     o = table(spark, sf_dir, "orders").filter(
@@ -282,8 +282,6 @@ def join_dpp_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     fact FileScan. Oracle: the equivalent static filter — DPP never
     changes the answer, only the partitions read.
     """
-    from tpctools_spark.queries.scans import _stable_scratch
-
     base = _stable_scratch("dpp_orders")
     path = os.path.join(base, "orders_by_status")
     dim_path = os.path.join(base, "status_dim")
@@ -464,7 +462,7 @@ def scan_bucket_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     spark.conf.set(conf_key, "false")
     try:
         tag = uuid.uuid4().hex[:8]
-        base = os.path.join(tempfile.gettempdir(), f"tpctools_bprune_{tag}")
+        base = _scratch_dir("bprune")
         name = f"orders_bp_{tag}"
         (
             table(spark, sf_dir, "orders")

@@ -497,7 +497,7 @@ def scan_file_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     the oracle pins the expected name while rows/min/max prove the
     metadata rows carry the full data alongside.
     """
-    d = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
+    d = table(spark, sf_dir, "documents")
     return (
         d.select(
             F.element_at(F.split(F.col("_metadata.file_path"), "/"), -1).alias(

@@ -15,51 +15,28 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType, StructType
 
+from tpctools_spark.catalog import table, typed_read
 from tpctools_spark.queries.mining import _PSI_ORACLE_SQL
+from tpctools_spark.queries.scans import _scratch_dir
 from tpctools_spark.queries._util import trunc_digits
 from tpctools_spark.registry import query
-from tpctools_spark.schemas import TESTDATA
-
 
 
 def _stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """readStream over the events parquet (explicit schema — streaming
-    sources never infer).
+    """readStream over the events parquet, typed like the batch reader
+    (streaming sources never infer).
 
     The file source wants a directory, so the single parquet file is
     staged into a scratch dir (in production this is the landing
-    directory new files arrive into). ``ts`` is physically
-    TIMESTAMP(NANOS) → read as int64 and truncate to microseconds, same
-    as the batch reader (catalog._events).
+    directory new files arrive into).
     """
-    from tpctools_spark.queries.scans import _scratch_dir
-
     stage = _scratch_dir("stream")  # pid-tagged: swept once its owner dies
     shutil.copy(
         os.path.join(sf_dir, "events.parquet"), os.path.join(stage, "part-0.parquet")
     )
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    # The fixture's physical ts type has varied across driver versions:
-    # TIMESTAMP(NANOS) (readable only as int64 via nanosAsLong) vs
-    # TIMESTAMP(MICROS) (a normal timestamp). Probe with the batch
-    # reader and only apply the nanos→micros truncation when the column
-    # really is nanos — dividing micros by 1000 would compress every
-    # event-time 1000×.
-    probed = spark.read.parquet(stage).schema["ts"].dataType
-    if isinstance(probed, LongType):  # physical TIMESTAMP(NANOS)
-        schema = StructType(
-            [
-                f if f.name != "ts" else type(f)("ts", LongType(), True)
-                for f in TESTDATA["events"].fields
-            ]
-        )
-        raw = spark.readStream.schema(schema).parquet(stage)
-        return raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    return spark.readStream.schema(TESTDATA["events"]).parquet(stage)
+    return typed_read(spark.readStream, stage)
 
 
 def _drain_to_memory(stream_df: DataFrame, output_mode: str) -> DataFrame:
@@ -435,8 +412,6 @@ def stream_foreach_batch_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``tests/test_streaming_recovery.py``, which kills the query
     mid-drain and resumes it from the same checkpoint.
     """
-    from tpctools_spark.queries.scans import _scratch_dir
-
     out = _scratch_dir("febview")  # pid-tagged: swept once its owner dies
     q = start_merge_view(
         _stream_events(spark, sf_dir).withWatermark("ts", "10 minutes"), out
@@ -521,7 +496,6 @@ def stream_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from tpctools_spark.queries.mining import _psi_bin, _psi_from_counts
 
-    from tpctools_spark.catalog import table as _table
 
     ev = _stream_events(spark, sf_dir)
     cur = (
@@ -531,7 +505,7 @@ def stream_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("cc"))
     )
     cur_counts = _drain_to_memory(cur, "complete")
-    batch = _table(spark, sf_dir, "events")
+    batch = table(spark, sf_dir, "events")
     base_counts = (
         batch.filter(F.col("event_id") % 2 == 0)
         .select("event_type", _psi_bin())
@@ -589,7 +563,6 @@ def stream_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle checks end-to-end.
     """
     from tpctools_spark.queries.aggregates import _CMS_P, _CMS_ROWS, _CMS_W
-    from tpctools_spark.catalog import table as _table
 
     ev = _stream_events(spark, sf_dir)
     hashes = F.array(
@@ -609,7 +582,7 @@ def stream_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     sketch = _drain_to_memory(sketch_stream, "complete")
 
     keys = (
-        _table(spark, sf_dir, "events").select("user_id").distinct()
+        table(spark, sf_dir, "events").select("user_id").distinct()
     )
     probes = keys.select("user_id", F.explode(hashes).alias("h")).select(
         "user_id",
@@ -779,12 +752,11 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream-static join, still stateless); stream side shuffles once
     into the window aggregate keyed by (nation, day).
     """
-    from tpctools_spark.catalog import table as _table
 
     ev = _stream_events(spark, sf_dir).filter(
         F.col("event_type") == "purchase"
     )
-    cust = _table(spark, sf_dir, "customer").select(
+    cust = table(spark, sf_dir, "customer").select(
         "c_custkey", "c_nationkey"
     )
     joined = ev.join(
@@ -846,10 +818,9 @@ def stream_approx_distinct_window(spark: SparkSession, sf_dir: str) -> DataFrame
         .select(F.col("w.start").alias("day"), "approx_users")
     )
     drained = _drain_to_memory(agg, "complete")
-    from tpctools_spark.catalog import table as _table
 
     exact = (
-        _table(spark, sf_dir, "events")
+        table(spark, sf_dir, "events")
         .groupBy(F.date_trunc("day", F.col("ts")).alias("day"))
         .agg(F.countDistinct("user_id").alias("exact_users"))
     )
@@ -958,7 +929,6 @@ def stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     from tpctools_spark.generate_corpus import gen_documents
-    from tpctools_spark.queries.scans import _scratch_dir
 
     docs = gen_documents(spark, 500)
     is_batch = (F.col("doc_id") % 7 == 0) & (F.col("doc_id") > 0)
@@ -1221,11 +1191,9 @@ def stream_dsir_router(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import os
 
-    from tpctools_spark.catalog import table as _table
     from tpctools_spark.queries.pipeline import _dsir_hashed, _dsir_lam
-    from tpctools_spark.queries.scans import _scratch_dir
 
-    docs = _table(spark, sf_dir, "documents").select(
+    docs = table(spark, sf_dir, "documents").select(
         "doc_id", "text", "lang"
     )
     is_in = F.col("doc_id") % 7 == 0

@@ -34,7 +34,7 @@ from functools import partial
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from tpctools_spark.benchmark import TpcH, materialize, parquet_ctes
+from tpctools_spark.benchmark import TpcH, materialized_table, parquet_ctes
 from tpctools_spark.queries._util import trunc_digits
 from tpctools_spark.registry import query
 
@@ -46,16 +46,10 @@ _GEN_DIR = os.path.join(
 )
 
 
-def _t(spark: SparkSession, name: str) -> DataFrame:
-    # Scale hook: when TPCTOOLS_TPCH_DIR points at a pre-materialized
-    # table directory (bench.py's sf1 suite), read it instead of the
-    # default sf0.01 scratch materialization. Query logic is
-    # scale-blind either way.
-    root = os.environ.get("TPCTOOLS_TPCH_DIR") or materialize(
-        spark, TpcH(), _SCALE, _GEN_DIR, spark.sparkContext.defaultParallelism
-    )
-    return spark.read.parquet(os.path.join(root, name))
-
+_t = partial(
+    materialized_table, lambda: os.environ.get("TPCTOOLS_TPCH_DIR"),
+    TpcH(), _SCALE, _GEN_DIR,
+)
 
 _with = partial(parquet_ctes, _GEN_DIR)
 

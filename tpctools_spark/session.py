@@ -47,10 +47,6 @@ def get_spark(
         # Deterministic timezone so date/timestamp semantics match the
         # DuckDB oracle regardless of host TZ.
         .config("spark.sql.session.timeZone", "UTC")
-        # Untagged parquet timestamp[us] → LTZ (not NTZ): NTZ breaks
-        # epoch arithmetic (unix_micros) and the two are value-identical
-        # under the UTC pin. Mirrors the same pin in catalog.table().
-        .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
         # Parquet: snappy matches the reference writer properties
         # (src/lib.rs:201-203) and is Spark's default; made explicit.
         .config("spark.sql.parquet.compression.codec", "snappy")
