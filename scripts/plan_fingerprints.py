@@ -63,7 +63,12 @@ def main() -> int:
     from tpctools_spark.registry import spark_queries
     from tpctools_spark.session import get_spark
 
-    spark = get_spark("plan-fingerprints")
+    # A few plans depend on the session's parallelism, so the planning
+    # session is pinned to the one PLANS.json was made with, not the
+    # host's core count.
+    spark = get_spark(
+        "plan-fingerprints", master="local[32]", shuffle_partitions=32
+    )
     spark.sparkContext.setLogLevel("ERROR")
     qs = spark_queries()
     fps: dict[str, dict] = {}

@@ -1,11 +1,11 @@
-"""Restart-recovery for the foreachBatch incremental view.
+"""Restart recovery of the streaming queries.
 
-The one streaming property the availableNow drains don't touch: kill
-the query MID-DRAIN, restart it from the same checkpoint, and prove
-the merged view still equals the batch aggregate. foreachBatch is
-at-least-once — the in-flight batch replays on restart — so this only
-holds because the merge commits one generation dir per batch id via
-atomic rename and skips already-committed ids.
+Each test stops or crashes a query mid-drain, restarts it from the same
+checkpoint, and checks the result against the batch answer.
+foreachBatch is at-least-once, so the in-flight batch replays on
+restart; the foreachBatch tests run the library's committer
+(``streaming_demo._commit_batches``), and the crash-injected ones
+assert row-count equality so a double-counted replay fails.
 """
 
 from __future__ import annotations
@@ -15,27 +15,36 @@ import time
 
 from pyspark.sql import functions as F
 
-from tpctools_spark.catalog import table
+from tpctools_spark.catalog import read_table, table
 from tpctools_spark.queries.streaming_demo import (
-    read_merge_view,
-    start_merge_view,
+    _commit_batches,
+    _committed,
+    _drain,
+    _file_batches,
+    _merge_view,
+    _read_batches,
 )
 
 SF = "/root/testdata/sf0.001"
 N_FILES = 12
 
 
-def _start(spark, landing, out, schema):
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)  # force one micro-batch per file
-        .parquet(landing)
-        .withWatermark("ts", "10 minutes")
-    )
-    return start_merge_view(stream, out)
+def test_committed_orders_batches_by_id(tmp_path):
+    """Batch dirs sort by number (``batch-10`` after ``batch-2``), and
+    uncommitted ``tmp-*`` dirs and the checkpoint are skipped."""
+    for d in ("batch-2", "batch-10", "tmp-11", "ckpt"):
+        (tmp_path / d).mkdir()
+    assert _committed(str(tmp_path)) == [
+        str(tmp_path / "batch-2"),
+        str(tmp_path / "batch-10"),
+    ]
 
 
 def test_foreach_batch_view_survives_mid_drain_restart(spark, tmp_path):
+    """Stop the merge view mid-drain, resume it from the same
+    checkpoint, and check the newest committed generation against the
+    batch aggregate. 12 one-file batches, so batch ids pass 9 and the
+    newest generation is only found by numeric order."""
     ev = table(spark, SF, "events").select("event_id", "ts", "event_type", "value")
     landing = str(tmp_path / "landing")
     ev.repartition(N_FILES).write.parquet(landing)
@@ -44,38 +53,23 @@ def test_foreach_batch_view_survives_mid_drain_restart(spark, tmp_path):
         for r in ev.groupBy("event_type")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n"),
-            F.round(
-                F.sum(F.col("value").cast("decimal(12,2)")).cast("double"), 2
-            ).alias("v"),
+            F.sum(F.col("value").cast("decimal(12,2)")).alias("v"),
         )
         .collect()
     }
 
     out = str(tmp_path / "view")
-    os.makedirs(out, exist_ok=True)
-    schema = spark.read.parquet(landing).schema
-
-    # First run: stop as soon as at least one generation is committed —
-    # with 12 single-file batches the drain is still in flight.
-    q = _start(spark, landing, out, schema)
-    deadline = time.monotonic() + 120
-    while time.monotonic() < deadline:
-        if any(d.startswith("view-") for d in os.listdir(out)):
-            break
-        time.sleep(0.05)
-    q.stop()
-    q.awaitTermination()
-    committed_early = [d for d in os.listdir(out) if d.startswith("view-")]
-    assert committed_early, "no batch committed before the kill"
-
-    # Resume from the SAME checkpoint: replayed + remaining batches must
-    # converge the view to the exact batch aggregate.
-    q2 = _start(spark, landing, out, schema)
-    q2.awaitTermination()
+    stream = _file_batches(spark, ev.schema, landing).withWatermark(
+        "ts", "10 minutes"
+    )
+    fn = _commit_batches(out, _merge_view(out))
+    ckpt = os.path.join(out, "ckpt")
+    _stop_mid_drain(_drain(stream, fn, ckpt, "append"))
+    _drain(stream, fn, ckpt, "append").awaitTermination()
 
     got = {
-        r.event_type: (r.n_events, r.total_value)
-        for r in read_merge_view(spark, out).collect()
+        r.event_type: (r.n_events, r.value_dec)
+        for r in read_table(spark, _committed(out)[-1]).collect()
     }
     assert got == want
 
@@ -131,7 +125,6 @@ def test_cdc_compact_resumes_from_checkpoint(spark, tmp_path):
     )
     landing = str(tmp_path / "cdc_landing")
     ev.repartition(N_FILES).write.parquet(landing)
-    schema = spark.read.parquet(landing).schema
     ckpt = str(tmp_path / "cdc_ckpt")
 
     w = Window.partitionBy("user_id").orderBy(
@@ -148,13 +141,8 @@ def test_cdc_compact_resumes_from_checkpoint(spark, tmp_path):
     }
 
     def start(name: str):
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(landing)
-        )
         return (
-            _cdc_agg(stream)
+            _cdc_agg(_file_batches(spark, ev.schema, landing))
             .writeStream.format("memory")
             .queryName(name)
             .outputMode("complete")
@@ -339,7 +327,7 @@ def test_jsonl_sink_exactly_once_under_task_retry(tmp_path):
 
 
 def test_stream_reader_offset_monotone_under_hostile_restart_order():
-    """The sources.py offset-clamp contract (r9-ADVICE low), pinned as
+    """The sources.py offset-clamp contract, pinned as
     a pure protocol test — no Spark session needed.
 
     An incremental ``SensorStreamReader`` re-learns its position from
@@ -393,170 +381,63 @@ def test_stream_reader_offset_monotone_under_hostile_restart_order():
 
 
 def test_dsir_router_resumes_from_checkpoint(spark, tmp_path):
-    """Crash the DSIR ingest router between a batch's parquet write
-    and its offset commit, restart from the same checkpoint, and prove
-    the routed output still equals the one-shot batch score (the
-    r10-VERDICT recovery gap for the family's streaming form).
+    """Crash the DSIR ingest router between a batch's commit and its
+    offset commit, restart from the same checkpoint, and check the
+    routed output against the same scoring of all documents at once.
 
-    The crash is INJECTED deterministically: the first incarnation's
-    scorer raises AFTER landing its first batch, so that batch's
-    offset never commits and the restart must re-execute it —
-    side-effects included. This is the at-least-once replay that
-    forced the router's sink from mode("append") (which double-counted
-    the replayed batch's documents) to per-batch-id overwrite dirs.
-    A plain stop() mid-drain does NOT reliably open this window (the
-    offset commit usually wins the race), which is why the fault is
-    injected rather than raced.
+    The crash is injected, not raced: a plain stop() mid-drain rarely
+    opens this window, because the offset commit usually wins. The
+    first run's committer raises after its first batch has committed,
+    so that batch's offset never commits and the restart replays it.
     """
-    import pyspark.errors
-
-    from pyspark.sql import functions as F
-
     from tpctools_spark.queries.pipeline import _dsir_hashed, _dsir_lam
-    from tpctools_spark.queries.streaming_demo import (
-        _dsir_route_read,
-        _dsir_route_start,
-        _dsir_score_fn,
-    )
+    from tpctools_spark.queries.streaming_demo import _dsir_score
 
     docs = table(spark, SF, "documents").select("doc_id", "text", "lang")
     is_in = F.col("doc_id") % 7 == 0
     lam = _dsir_lam(_dsir_hashed(docs.filter(~is_in))).cache()
     lam.count()
-
     in_dir = str(tmp_path / "in")
     out_dir = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-    marker = str(tmp_path / "crashed_once")
     docs.filter(is_in).repartitionByRange(8, "doc_id").write.parquet(in_dir)
 
-    want = {
-        (r["doc_id"], r["n_bigrams"], r["imp"])
-        for r in _dsir_hashed(docs.filter(is_in))
-        .join(F.broadcast(lam), "bucket")
-        .groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_bigrams"),
-            F.sum(F.col("lam").cast("decimal(25,16)"))
-            .cast("double")
-            .alias("imp"),
-        )
-        .collect()
-    }
-
-    inner = _dsir_score_fn(lam, out_dir)
-
-    def faulty(bdf, batch_id):
-        inner(bdf, batch_id)  # side-effect lands...
-        if not os.path.exists(marker):
-            with open(marker, "w") as f:
-                f.write("x")
-            # ...then the "process dies" before the offset commit.
-            raise RuntimeError("injected crash after write, before commit")
-
-    schema = docs.schema
-    q = _dsir_route_start(
-        spark, schema, in_dir, out_dir, ckpt, lam, score_fn=faulty
+    build = _dsir_score(lam)
+    want_rows = build(docs.filter(is_in)).collect()
+    _drive_with_crash(
+        _file_batches(spark, docs.schema, in_dir), out_dir, build, tmp_path,
+        "append",
     )
-    try:
-        q.awaitTermination()
-        raise AssertionError("injected crash did not surface")
-    except pyspark.errors.exceptions.captured.StreamingQueryException:
-        pass
-    assert os.path.exists(marker), "fault was never injected"
-
-    q2 = _dsir_route_start(spark, schema, in_dir, out_dir, ckpt, lam)
-    q2.awaitTermination()
+    got_rows = _read_batches(spark, out_dir).collect()
     lam.unpersist()
-
-    got_rows = _dsir_route_read(spark, out_dir).collect()
-    got = {(r["doc_id"], r["n_bigrams"], r["imp"]) for r in got_rows}
-    # Row-count equality matters — an at-least-once replay that
-    # duplicates rows would still pass a set compare.
-    assert len(got_rows) == len(want), (
-        f"{len(got_rows)} rows for {len(want)} documents — replayed "
-        "batch double-counted"
-    )
-    assert got == want
+    _assert_same_rows(got_rows, want_rows)
 
 
 def test_incremental_dedup_resumes_from_checkpoint(spark, tmp_path):
     """The admission stream's twin of the DSIR-router recovery test:
-    crash between a batch's decision write and its offset commit,
-    restart from the same checkpoint, and prove the admitted output
-    is row-exact against the one-shot scoring — the replay must not
-    double-count the in-flight batch's documents.
-    """
-    import pyspark.errors
-
-    from pyspark.sql import functions as F
-
+    decisions depend only on (document, standing index), so the drained
+    output must equal the same build over all incoming documents at
+    once, row for row."""
     from tpctools_spark.generate_corpus import gen_documents
     from tpctools_spark.queries.streaming_demo import (
-        _incr_admit_fn,
+        _incr_admit,
         _incr_dedup_index,
-        _incr_dedup_start,
     )
 
     docs = gen_documents(spark, 500)
     is_batch = (F.col("doc_id") % 7 == 0) & (F.col("doc_id") > 0)
-    corpus = docs.filter(~is_batch)
     incoming = docs.filter(is_batch)
-    capped, pc, sizes_c, fps_c = _incr_dedup_index(corpus)
-
     in_dir = str(tmp_path / "in")
     out_dir = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-    marker = str(tmp_path / "crashed_once")
     incoming.repartitionByRange(8, "doc_id").write.parquet(in_dir)
 
-    # Expected: the same admit logic applied to ALL incoming docs at
-    # once (decisions depend only on (doc, standing index), so the
-    # one-shot scoring equals the drained union by construction).
-    exp_dir = str(tmp_path / "expected")
-    _incr_admit_fn(capped, pc, sizes_c, fps_c, exp_dir)(incoming, 0)
-    want_rows = (
-        spark.read.option("recursiveFileLookup", "true")
-        .parquet(exp_dir)
-        .collect()
+    build = _incr_admit(*_incr_dedup_index(docs.filter(~is_batch)))
+    want_rows = build(incoming).collect()
+    _drive_with_crash(
+        _file_batches(spark, docs.schema, in_dir), out_dir, build, tmp_path,
+        "append",
     )
-    want = {(r["doc_id"], r["decision"]) for r in want_rows}
+    _assert_same_rows(_read_batches(spark, out_dir).collect(), want_rows)
 
-    inner = _incr_admit_fn(capped, pc, sizes_c, fps_c, out_dir)
-
-    def faulty(bdf, batch_id):
-        inner(bdf, batch_id)  # decision lands...
-        if not os.path.exists(marker):
-            with open(marker, "w") as f:
-                f.write("x")
-            # ...then the "process dies" before the offset commit.
-            raise RuntimeError("injected crash after write, before commit")
-
-    q = _incr_dedup_start(spark, docs.schema, in_dir, ckpt, faulty)
-    try:
-        q.awaitTermination()
-        raise AssertionError("injected crash did not surface")
-    except pyspark.errors.exceptions.captured.StreamingQueryException:
-        pass
-    assert os.path.exists(marker), "fault was never injected"
-
-    q2 = _incr_dedup_start(spark, docs.schema, in_dir, ckpt, inner)
-    q2.awaitTermination()
-
-    got_rows = (
-        spark.read.option("recursiveFileLookup", "true")
-        .parquet(out_dir)
-        .collect()
-    )
-    got = {(r["doc_id"], r["decision"]) for r in got_rows}
-    assert len(got_rows) == len(want_rows), (
-        f"{len(got_rows)} rows for {len(want_rows)} documents — "
-        "replayed batch double-counted"
-    )
-    assert got == want
-
-
-# ---- r12: injected-crash recovery for the remaining stateful streams ----
 
 def _stage_ts_ordered_chunks(df, in_dir: str, n: int = 8) -> None:
     """Write *df* as *n* ascending-ts range-partitioned files and stamp
@@ -574,84 +455,59 @@ def _stage_ts_ordered_chunks(df, in_dir: str, n: int = 8) -> None:
         os.utime(p, (base + i * 10, base + i * 10))
 
 
-def _committed_dir_sink(out: str, prefix: str):
-    """foreachBatch sink committing one ``<prefix>-<batch_id>`` dir per
-    micro-batch via atomic rename; a replayed batch id skips the
-    EXTERNAL side effect only.
+def _crash_once_after(fn, out: str, marker: str):
+    """*fn*, crashing once: after the first batch whose commit under
+    *out* holds rows, so its replay could double-count them."""
 
-    Stateful-operator nuance (Spark 4 enforces this via
-    STATE_STORE_COMMIT_VALIDATION_FAILED): the replayed batch must
-    still be FULLY PROCESSED — every state-store partition has to
-    re-commit its version for the replayed batch id — so the skip
-    branch drains the batch through a noop sink instead of returning
-    early. An early return would be exactly the "swallowing the batch"
-    bug the validator exists to catch."""
-
-    def fn(bdf, batch_id):
-        committed = os.path.join(out, f"{prefix}-{batch_id}")
-        if os.path.exists(committed):
-            bdf.write.format("noop").mode("overwrite").save()
-            return
-        tmp = os.path.join(out, f"tmp-{batch_id}")
-        bdf.write.mode("overwrite").parquet(tmp)
-        os.rename(tmp, committed)
-
-    return fn
-
-
-def _crash_once_after(fn, marker: str):
     def faulty(bdf, batch_id):
-        fn(bdf, batch_id)  # side-effect lands...
-        if not os.path.exists(marker):
-            with open(marker, "w") as f:
-                f.write("x")
-            # ...then the "process dies" before the offset commit.
-            raise RuntimeError("injected crash after write, before commit")
+        fn(bdf, batch_id)  # the batch commits...
+        done = os.path.join(out, f"batch-{batch_id}")
+        if os.path.exists(marker) or read_table(bdf.sparkSession, done).isEmpty():
+            return
+        with open(marker, "w") as f:
+            f.write("x")
+        # ...then the "process dies" before the offset commit.
+        raise RuntimeError("injected crash after write, before commit")
 
     return faulty
 
 
-def _drive_with_crash(spark, transform, schema, in_dir, ckpt, sink, marker,
-                      mode):
-    """Start the stream with a crash-once sink, assert the crash
-    surfaced, then restart from the SAME checkpoint with the clean sink
-    and drain to completion."""
+def _drive_with_crash(stream, out, build, tmp_path, mode):
+    """Drain *stream* through ``_commit_batches(out, build)`` with a
+    crash injected after the first batch that commits rows, assert the
+    crash surfaced, then restart from the SAME checkpoint without the
+    fault and drain to completion."""
     import pyspark.errors
 
-    def start(fn):
-        ev = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(in_dir)
-        )
-        return (
-            transform(ev)
-            .writeStream.foreachBatch(fn)
-            .outputMode(mode)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-
-    q = start(_crash_once_after(sink, marker))
+    fn = _commit_batches(out, build)
+    ckpt = str(tmp_path / "ckpt")
+    marker = str(tmp_path / "crashed_once")
+    q = _drain(stream, _crash_once_after(fn, out, marker), ckpt, mode)
     try:
         q.awaitTermination()
         raise AssertionError("injected crash did not surface")
     except pyspark.errors.exceptions.captured.StreamingQueryException:
         pass
     assert os.path.exists(marker), "fault was never injected"
-    q2 = start(sink)
-    q2.awaitTermination()
+    _drain(stream, fn, ckpt, mode).awaitTermination()
+
+
+def _assert_same_rows(got_rows, want_rows):
+    """Row-count equality as well as set equality: a replay that
+    duplicates rows would still pass a set compare."""
+    assert len(got_rows) == len(want_rows), (
+        f"{len(got_rows)} rows for {len(want_rows)} — replayed batch "
+        "double-counted or lost"
+    )
+    assert {tuple(r) for r in got_rows} == {tuple(r) for r in want_rows}
 
 
 def test_stream_stream_join_resumes_from_checkpoint(spark, tmp_path):
     """Crash the purchase×click stream-stream join between a batch's
-    output write and its offset commit, restart from the checkpoint,
-    and prove the union of committed batch outputs is row-exact against
-    the one-shot batch join — the dual-watermark join state must replay
-    the in-flight batch without duplicating its matches."""
-    import glob
-
+    commit and its offset commit, restart from the checkpoint, and
+    check the union of committed batches against the one-shot batch
+    join — the dual-watermark join state must replay the in-flight
+    batch without duplicating its matches."""
     from tpctools_spark.queries.streaming_demo import _purchase_click_join
 
     ev = table(spark, SF, "events").select(
@@ -659,68 +515,35 @@ def test_stream_stream_join_resumes_from_checkpoint(spark, tmp_path):
     )
     in_dir = str(tmp_path / "in")
     out_dir = str(tmp_path / "out")
-    os.makedirs(out_dir)
     _stage_ts_ordered_chunks(ev, in_dir)
 
     want_rows = _purchase_click_join(ev).collect()
-    want = {tuple(r) for r in want_rows}
     assert want_rows, "fixture yields no purchase-click matches"
-
     _drive_with_crash(
-        spark, _purchase_click_join, ev.schema, in_dir,
-        str(tmp_path / "ckpt"), _committed_dir_sink(out_dir, "batch"),
-        str(tmp_path / "crashed_once"), "append",
+        _purchase_click_join(_file_batches(spark, ev.schema, in_dir)),
+        out_dir, lambda bdf: bdf, tmp_path, "append",
     )
-
-    out_schema = _purchase_click_join(ev).schema
-    dirs = sorted(glob.glob(os.path.join(out_dir, "batch-*")))
-    got_rows = [
-        tuple(r)
-        for d in dirs
-        # explicit schema: a zero-match batch commits a dir with no
-        # data files, which schema inference would refuse to read
-        for r in spark.read.schema(out_schema).parquet(d).collect()
-    ]
-    assert len(got_rows) == len(want_rows), (
-        f"{len(got_rows)} rows for {len(want_rows)} matches — replayed "
-        "batch double-counted"
-    )
-    assert set(got_rows) == want
+    _assert_same_rows(_read_batches(spark, out_dir).collect(), want_rows)
 
 
 def test_session_window_resumes_from_checkpoint(spark, tmp_path):
     """The session-window twin: crash mid-drain, restart from the
-    checkpoint, and prove the final complete-mode view equals the batch
-    sessionization — the session-MERGE state (sessions spanning
+    checkpoint, and check the newest complete-mode commit against the
+    batch sessionization — the session-MERGE state (sessions spanning
     micro-batch boundaries get merged in the store) must survive the
     replay."""
-    from tpctools_spark.queries.streaming_demo import (
-        _latest_view_gen,
-        _session_window_agg,
-    )
+    from tpctools_spark.queries.streaming_demo import _session_window_agg
 
     ev = table(spark, SF, "events").select("user_id", "ts")
     in_dir = str(tmp_path / "in")
     out_dir = str(tmp_path / "out")
-    os.makedirs(out_dir)
     _stage_ts_ordered_chunks(ev, in_dir)
 
     want_rows = _session_window_agg(ev).collect()
-    want = {tuple(r) for r in want_rows}
     assert want_rows, "fixture yields no sessions"
-
     _drive_with_crash(
-        spark, _session_window_agg, ev.schema, in_dir,
-        str(tmp_path / "ckpt"), _committed_dir_sink(out_dir, "view"),
-        str(tmp_path / "crashed_once"), "complete",
+        _session_window_agg(_file_batches(spark, ev.schema, in_dir)),
+        out_dir, lambda bdf: bdf, tmp_path, "complete",
     )
-
-    latest = _latest_view_gen(out_dir)
-    assert latest is not None
-    got_rows = spark.read.parquet(os.path.join(out_dir, latest)).collect()
-    got = {tuple(r) for r in got_rows}
-    assert len(got_rows) == len(want_rows), (
-        f"{len(got_rows)} sessions for {len(want_rows)} — state lost or "
-        "double-merged across the replay"
-    )
-    assert got == want
+    got_rows = read_table(spark, _committed(out_dir)[-1]).collect()
+    _assert_same_rows(got_rows, want_rows)

@@ -398,10 +398,6 @@ _INFERRED_READS = {
     "sink_partitioned_prune",
     "sink_sorted_stats_prune",
     "sink_parquet_bloom",
-    "merge_batch",
-    "read_merge_view",
-    "stream_incremental_dedup",
-    "_dsir_route_read",
 }
 
 

@@ -8,6 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from tpctools_spark.queries._util import dsum, sql_trunc_digits, trunc_digits
+from tpctools_spark.queries.scale_patterns import _BLOOM_CONFS
 
 EDGE_DOUBLES = [0.125, 0.105, 2.675, 1e-9, 123456.789, 0.99995, 7.0]
 
@@ -135,3 +136,27 @@ def test_spread_input_widens_narrow_and_skips_wide(spark):
 
     wider = spark.range(0, 1000, 1, target * 2)
     assert spread_input(wider) is wider
+
+
+@pytest.mark.parametrize(
+    "name, keys",
+    [
+        ("scalar_sql_script", ["spark.sql.scripting.enabled"]),
+        (
+            "scan_bucket_pruned",
+            ["spark.sql.sources.bucketing.autoBucketedScan.enabled"],
+        ),
+        ("join_bloom_pruned", list(_BLOOM_CONFS)),
+    ],
+)
+def test_queries_leave_session_confs_unset(spark, sf_dir, name, keys):
+    """A query that sets a session conf for its own run puts it back
+    as it found it: a key the caller left unset is unset again, so the
+    built-in default (SQL scripting on, in Spark 4) still applies."""
+    from tpctools_spark.registry import spark_queries
+
+    for k in {*keys, "spark.sql.scripting.enabled"}:
+        spark.conf.unset(k)
+    spark_queries()[name](spark, sf_dir).collect()
+    assert {k: spark.conf.get(k, None) for k in keys} == dict.fromkeys(keys)
+    assert spark.sql("BEGIN SELECT 1 AS x; END").collect()[0]["x"] == 1

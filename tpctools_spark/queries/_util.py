@@ -13,6 +13,8 @@ Mirrors the reference's choice of ``Decimal128(11,2)`` for money columns
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -256,3 +258,22 @@ def release_local_checkpoint(df) -> None:
             rdd.unpersist(False)
     except Exception:  # noqa: BLE001 — best-effort release, never fatal
         pass
+
+
+@contextmanager
+def session_conf(spark, confs: dict[str, str]):
+    """Set the session confs *confs* for the block, then put each key
+    back as it was: a key that was unset is unset again, so its
+    built-in default stays in force (``conf.get(k, default)`` on an
+    unset key returns the default given, which must not be pinned)."""
+    prior = {k: spark.conf.get(k, None) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in prior.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)

@@ -894,10 +894,11 @@ def _jaccard_pairs(
     return shared.filter(jacc >= 0.2).select("doc_a", "doc_b", jacc.alias("jacc"))
 
 
-@query(
-    "dedup_ngram_jaccard",
-    oracle=f"""
-    WITH grams AS (
+# The oracles' candidate pairs: distinct word 3-grams per document, gram
+# counts per document, grams above the df cap dropped, and the shared-gram
+# count of every document pair. Ends on ``shared``'s closing paren, so an
+# oracle continues with ``, <next cte> AS (`` or its final SELECT.
+_SHARED_GRAMS_CTES = f"""grams AS (
       SELECT DISTINCT doc_id, gram FROM (
         SELECT doc_id,
                UNNEST(list_transform(
@@ -915,7 +916,13 @@ def _jaccard_pairs(
       SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_shared
       FROM kept a JOIN kept b ON a.gram = b.gram AND a.doc_id < b.doc_id
       GROUP BY 1, 2
-    )
+    )"""
+
+
+@query(
+    "dedup_ngram_jaccard",
+    oracle=f"""
+    WITH {_SHARED_GRAMS_CTES}
     SELECT doc_a, doc_b,
            CAST(floor(CAST(n_shared AS DOUBLE) / (sa.n + sb.n - n_shared) * 10000) AS DOUBLE) / 10000 AS jaccard
     FROM shared
@@ -957,25 +964,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "dedup_containment",
     oracle=f"""
-    WITH grams AS (
-      SELECT DISTINCT doc_id, gram FROM (
-        SELECT doc_id,
-               UNNEST(list_transform(
-                 range(1, greatest(len(w) - 1, 1)),
-                 i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])) AS gram
-        FROM (SELECT doc_id, string_split(lower(trim(text)), ' ') AS w FROM documents)
-      ) WHERE gram IS NOT NULL
-    ), sizes AS (
-      SELECT doc_id, COUNT(*) AS n FROM grams GROUP BY doc_id
-    ), hot AS (
-      SELECT gram FROM grams GROUP BY gram HAVING COUNT(*) > {JACCARD_DF_CAP}
-    ), kept AS (
-      SELECT * FROM grams WHERE gram NOT IN (SELECT gram FROM hot)
-    ), shared AS (
-      SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_shared
-      FROM kept a JOIN kept b ON a.gram = b.gram AND a.doc_id < b.doc_id
-      GROUP BY 1, 2
-    )
+    WITH {_SHARED_GRAMS_CTES}
     SELECT doc_a, doc_b,
            CASE WHEN sa.n <= sb.n THEN doc_a ELSE doc_b END AS doc_inner,
            CAST(floor(CAST(n_shared AS DOUBLE) / least(sa.n, sb.n) * 10000)
@@ -1442,25 +1431,7 @@ def _min_label_components(
 @query(
     "dedup_cluster_components",
     oracle=f"""
-    WITH RECURSIVE grams AS (
-      SELECT DISTINCT doc_id, gram FROM (
-        SELECT doc_id,
-               UNNEST(list_transform(
-                 range(1, greatest(len(w) - 1, 1)),
-                 i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])) AS gram
-        FROM (SELECT doc_id, string_split(lower(trim(text)), ' ') AS w FROM documents)
-      ) WHERE gram IS NOT NULL
-    ), sizes AS (
-      SELECT doc_id, COUNT(*) AS n FROM grams GROUP BY doc_id
-    ), hot AS (
-      SELECT gram FROM grams GROUP BY gram HAVING COUNT(*) > {JACCARD_DF_CAP}
-    ), kept AS (
-      SELECT * FROM grams WHERE gram NOT IN (SELECT gram FROM hot)
-    ), shared AS (
-      SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_shared
-      FROM kept a JOIN kept b ON a.gram = b.gram AND a.doc_id < b.doc_id
-      GROUP BY 1, 2
-    ), pairs AS (
+    WITH RECURSIVE {_SHARED_GRAMS_CTES}, pairs AS (
       SELECT doc_a, doc_b FROM shared
       JOIN sizes sa ON sa.doc_id = doc_a
       JOIN sizes sb ON sb.doc_id = doc_b
@@ -1952,25 +1923,7 @@ def dedup_lsh_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "dedup_keep_longest",
     oracle=f"""
-    WITH RECURSIVE grams AS (
-      SELECT DISTINCT doc_id, gram FROM (
-        SELECT doc_id,
-               UNNEST(list_transform(
-                 range(1, greatest(len(w) - 1, 1)),
-                 i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])) AS gram
-        FROM (SELECT doc_id, string_split(lower(trim(text)), ' ') AS w FROM documents)
-      ) WHERE gram IS NOT NULL
-    ), sizes AS (
-      SELECT doc_id, COUNT(*) AS n FROM grams GROUP BY doc_id
-    ), hot AS (
-      SELECT gram FROM grams GROUP BY gram HAVING COUNT(*) > {JACCARD_DF_CAP}
-    ), kept AS (
-      SELECT * FROM grams WHERE gram NOT IN (SELECT gram FROM hot)
-    ), shared AS (
-      SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_shared
-      FROM kept a JOIN kept b ON a.gram = b.gram AND a.doc_id < b.doc_id
-      GROUP BY 1, 2
-    ), pairs AS (
+    WITH RECURSIVE {_SHARED_GRAMS_CTES}, pairs AS (
       SELECT doc_a, doc_b FROM shared
       JOIN sizes sa ON sa.doc_id = doc_a
       JOIN sizes sb ON sb.doc_id = doc_b
@@ -2302,25 +2255,7 @@ def dedup_minhash_band_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT h, MIN(doc_id) AS keep_id FROM norm GROUP BY h
     ), surv AS (
       SELECT keep_id AS doc_id FROM keep
-    ), grams AS (
-      SELECT DISTINCT doc_id, gram FROM (
-        SELECT doc_id,
-               UNNEST(list_transform(
-                 range(1, greatest(len(w) - 1, 1)),
-                 i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])) AS gram
-        FROM (SELECT doc_id, string_split(lower(trim(text)), ' ') AS w FROM documents)
-      ) WHERE gram IS NOT NULL
-    ), sizes AS (
-      SELECT doc_id, COUNT(*) AS n FROM grams GROUP BY doc_id
-    ), hot AS (
-      SELECT gram FROM grams GROUP BY gram HAVING COUNT(*) > {JACCARD_DF_CAP}
-    ), kept AS (
-      SELECT * FROM grams WHERE gram NOT IN (SELECT gram FROM hot)
-    ), shared AS (
-      SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_shared
-      FROM kept a JOIN kept b ON a.gram = b.gram AND a.doc_id < b.doc_id
-      GROUP BY 1, 2
-    ), pairs AS (
+    ), {_SHARED_GRAMS_CTES}, pairs AS (
       SELECT doc_a, doc_b FROM shared
       JOIN sizes sa ON sa.doc_id = doc_a
       JOIN sizes sb ON sb.doc_id = doc_b

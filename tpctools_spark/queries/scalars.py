@@ -11,7 +11,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from tpctools_spark.catalog import table
-from tpctools_spark.queries._util import money, rate, trunc_digits
+from tpctools_spark.queries._util import money, rate, session_conf, trunc_digits
 from tpctools_spark.registry import query
 
 
@@ -875,9 +875,7 @@ def scalar_sql_script(spark: SparkSession, sf_dir: str) -> DataFrame:
     exit). Everything integer-exact.
     """
     table(spark, sf_dir, "orders").createOrReplaceTempView("orders_script_v")
-    prev = spark.conf.get("spark.sql.scripting.enabled", "false")
-    spark.conf.set("spark.sql.scripting.enabled", "true")
-    try:
+    with session_conf(spark, {"spark.sql.scripting.enabled": "true"}):
         # Script execution (parse + control flow) happens inside this
         # sql() call; only the final SELECT's result comes back lazy,
         # and it references nothing conf-dependent.
@@ -901,8 +899,6 @@ def scalar_sql_script(spark: SparkSession, sf_dir: str) -> DataFrame:
             END
             """
         )
-    finally:
-        spark.conf.set("spark.sql.scripting.enabled", prev)
 
 
 @query(

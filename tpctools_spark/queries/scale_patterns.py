@@ -23,8 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from tpctools_spark.catalog import table
-from tpctools_spark.queries._util import trunc_digits
-from tpctools_spark.queries._util import dsum
+from tpctools_spark.queries._util import dsum, session_conf, trunc_digits
 from tpctools_spark.queries.scans import _scratch_dir, _stable_scratch
 from tpctools_spark.registry import query
 
@@ -241,18 +240,9 @@ def join_bloom_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     materializing run — the technique, not the conf state, is the
     deliverable.
     """
-    old = {k: spark.conf.get(k, None) for k in _BLOOM_CONFS}
-    for k, v in _BLOOM_CONFS.items():
-        spark.conf.set(k, v)
-    try:
+    with session_conf(spark, _BLOOM_CONFS):
         df = _bloom_join(spark, sf_dir).cache()
         df.count()  # materialize while the injection confs are live
-    finally:
-        for k, v in old.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
     return df
 
 
@@ -457,10 +447,9 @@ def scan_bucket_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     # bucketed scan (results stay correct; only the demonstration plan
     # shape is at stake). Sink-path callers must set the conf for
     # their own execution scope.
-    conf_key = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
-    prior = spark.conf.get(conf_key)
-    spark.conf.set(conf_key, "false")
-    try:
+    with session_conf(
+        spark, {"spark.sql.sources.bucketing.autoBucketedScan.enabled": "false"}
+    ):
         tag = uuid.uuid4().hex[:8]
         base = _scratch_dir("bprune")
         name = f"orders_bp_{tag}"
@@ -483,5 +472,3 @@ def scan_bucket_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         out._jdf.queryExecution().executedPlan()
         return out
-    finally:
-        spark.conf.set(conf_key, prior)

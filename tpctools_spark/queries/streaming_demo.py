@@ -5,6 +5,12 @@ with ``Trigger.AvailableNow`` (drain everything, then stop), sinks to an
 in-memory table, and returns that table as a batch DataFrame. The same
 code with a live source and a different trigger is the production
 stream — that symmetry is the point of Structured Streaming.
+
+The three foreachBatch queries (``stream_foreach_batch_view``,
+``stream_incremental_dedup``, ``stream_dsir_router``) instead commit
+each micro-batch's output as a parquet dir through one committer,
+``_commit_batches``, start through ``_drain`` and read their output back
+typed from its footer.
 """
 
 from __future__ import annotations
@@ -16,7 +22,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from tpctools_spark.catalog import table, typed_read
+from tpctools_spark.catalog import read_schema, read_table, table, typed_read
 from tpctools_spark.queries.mining import _PSI_ORACLE_SQL
 from tpctools_spark.queries.scans import _scratch_dir
 from tpctools_spark.queries._util import trunc_digits
@@ -307,76 +313,102 @@ def _purchase_click_join(ev: DataFrame) -> DataFrame:
     return joined
 
 
-def _latest_view_gen(out: str) -> str | None:
-    """Highest committed generation dir (``view-<batch_id>``), if any."""
-    gens = [d for d in os.listdir(out) if d.startswith("view-")]
-    if not gens:
-        return None
-    return max(gens, key=lambda d: int(d.rsplit("-", 1)[1]))
-
-
-def start_merge_view(stream: DataFrame, out: str):
-    """Start the foreachBatch incremental-view query over *stream*,
-    committing one generation dir per micro-batch into *out*.
-
-    Idempotent per batch id (the at-least-once contract): the merged
-    view for batch N is written to a scratch dir and atomically renamed
-    to ``view-N``; a replayed batch N finds ``view-N`` committed and
-    returns without touching anything, so a crash anywhere —
-    mid-merge, after commit but before the checkpoint records it —
-    reconverges to the exact batch answer on restart.
-    """
-
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        committed = os.path.join(out, f"view-{batch_id}")
-        if os.path.exists(committed):  # replay after crash-post-commit
-            return
-        part = batch_df.groupBy("event_type").agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_events"),
-            F.sum(F.col("value").cast("decimal(12,2)")).alias("value_dec"),
-        )
-        s = batch_df.sparkSession
-        latest = _latest_view_gen(out)
-        if latest is not None:
-            prev = s.read.parquet(os.path.join(out, latest))
-            part = (
-                prev.unionByName(part)
-                .groupBy("event_type")
-                .agg(
-                    F.sum("n_events").cast("bigint").alias("n_events"),
-                    F.sum("value_dec")
-                    .cast("decimal(12,2)")
-                    .alias("value_dec"),
-                )
-            )
-        gen = os.path.join(out, f"gen-{batch_id}")
-        part.write.mode("overwrite").parquet(gen)
-        os.rename(gen, committed)  # atomic commit of this generation
-        for d in os.listdir(out):  # prune superseded generations
-            if d.startswith("view-") and int(d.rsplit("-", 1)[1]) < batch_id:
-                shutil.rmtree(os.path.join(out, d), ignore_errors=True)
-
+def _drain(stream: DataFrame, fn, ckpt: str, output_mode: str):
+    """Start draining *stream* (availableNow) through the foreachBatch
+    function *fn*, checkpointed at *ckpt*; returns the query handle."""
     return (
-        stream.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", os.path.join(out, "ckpt"))
+        stream.writeStream.foreachBatch(fn)
+        .outputMode(output_mode)
+        .option("checkpointLocation", ckpt)
         .trigger(availableNow=True)
         .start()
     )
 
 
-def read_merge_view(spark: SparkSession, out: str) -> DataFrame:
-    """The current committed view, in the oracle's output shape."""
-    latest = _latest_view_gen(out)
-    if latest is None:
-        raise ValueError(
-            f"no committed merge view under {out!r}: the stream has not "
-            "completed any batch yet (or the output dir is wrong)"
-        )
-    return spark.read.parquet(os.path.join(out, latest)).select(
-        "event_type",
-        "n_events",
-        F.round(F.col("value_dec").cast("double"), 2).alias("total_value"),
+def _file_batches(spark: SparkSession, schema, in_dir: str) -> DataFrame:
+    """File stream over *in_dir* that makes one micro-batch per file."""
+    return (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(in_dir)
     )
+
+
+def _committed(out: str) -> list[str]:
+    """The committed ``batch-<id>`` dirs under *out*, in batch-id
+    order (numeric: ``batch-10`` follows ``batch-9``)."""
+    ids = sorted(
+        int(d[6:])
+        for d in os.listdir(out)
+        if d.startswith("batch-") and d[6:].isdigit()
+    )
+    return [os.path.join(out, f"batch-{i}") for i in ids]
+
+
+def _commit_batches(out: str, build):
+    """foreachBatch function committing ``build(batch)`` exactly once
+    per batch id, as the parquet dir ``<out>/batch-<id>``.
+
+    foreachBatch is at-least-once: a batch whose offset commit never
+    landed runs again on restart. The output is written to ``tmp-<id>``
+    and renamed to ``batch-<id>``, so a crash leaves either no commit or
+    a whole one. A replayed id whose ``batch-<id>`` exists writes
+    nothing, but is still drained through the ``noop`` sink: stateful
+    operators upstream must re-commit their state for that id, or
+    Spark fails the batch (``STATE_STORE_COMMIT_VALIDATION_FAILED``).
+    """
+    os.makedirs(out, exist_ok=True)
+
+    def commit(bdf: DataFrame, batch_id: int) -> None:
+        done = os.path.join(out, f"batch-{batch_id}")
+        if os.path.exists(done):
+            bdf.write.format("noop").mode("overwrite").save()
+            return
+        tmp = os.path.join(out, f"tmp-{batch_id}")
+        build(bdf).write.mode("overwrite").parquet(tmp)
+        os.rename(tmp, done)
+
+    return commit
+
+
+def _read_batches(spark: SparkSession, out: str) -> DataFrame:
+    """Every committed batch's output as one relation, typed by the
+    first commit's footer (a commit always holds one part file, even
+    for an empty batch)."""
+    dirs = _committed(out)
+    return spark.read.schema(read_schema(dirs[0])[0]).parquet(*dirs)
+
+
+def _merge_view(out: str):
+    """The merge view's per-batch build: the batch's (count, decimal
+    sum) per event type, merged into the newest committed generation.
+
+    Older generations are superseded, so they are deleted first; the
+    newest stays until the next batch commits, so a crash never leaves
+    the view without a committed generation.
+    """
+
+    def merge(bdf: DataFrame) -> DataFrame:
+        part = bdf.groupBy("event_type").agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_events"),
+            F.sum(F.col("value").cast("decimal(12,2)")).alias("value_dec"),
+        )
+        gens = _committed(out)
+        for d in gens[:-1]:
+            shutil.rmtree(d, ignore_errors=True)
+        if not gens:
+            return part
+        return (
+            read_table(bdf.sparkSession, gens[-1])
+            .unionByName(part)
+            .groupBy("event_type")
+            .agg(
+                F.sum("n_events").cast("bigint").alias("n_events"),
+                F.sum("value_dec").cast("decimal(12,2)").alias("value_dec"),
+            )
+        )
+
+    return merge
 
 
 @query(
@@ -404,20 +436,24 @@ def stream_foreach_batch_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(batch + |view|), and at scale the read-merge-write becomes a
     key-partitioned MERGE on the same plan.
 
-    foreachBatch is at-least-once: after a crash the in-flight batch
-    REPLAYS, so the merge must be idempotent per batch id. Each merge
-    commits to a generation dir named by its batch id via atomic
-    rename; a replayed id finds its generation already committed and
-    skips — restart-recovery is proven by
-    ``tests/test_streaming_recovery.py``, which kills the query
-    mid-drain and resumes it from the same checkpoint.
+    Each merged generation commits through ``_commit_batches``, so a
+    replayed batch id leaves the view as it was. Restart recovery is
+    tested in ``tests/test_streaming_recovery.py``, which stops the
+    query mid-drain and resumes it from the same checkpoint.
     """
     out = _scratch_dir("febview")  # pid-tagged: swept once its owner dies
-    q = start_merge_view(
-        _stream_events(spark, sf_dir).withWatermark("ts", "10 minutes"), out
+    stream = _stream_events(spark, sf_dir).withWatermark("ts", "10 minutes")
+    _drain(
+        stream,
+        _commit_batches(out, _merge_view(out)),
+        os.path.join(out, "ckpt"),
+        "append",
+    ).awaitTermination()
+    return read_table(spark, _committed(out)[-1]).select(
+        "event_type",
+        "n_events",
+        F.round(F.col("value_dec").cast("double"), 2).alias("total_value"),
     )
-    q.awaitTermination()
-    return read_merge_view(spark, out)
 
 
 @query(
@@ -926,8 +962,6 @@ def stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     shared gram key — the cached standing index (postings, sizes,
     fingerprints; corpus-bounded) serves every batch without recompute.
     """
-    import os
-
     from tpctools_spark.generate_corpus import gen_documents
 
     docs = gen_documents(spark, 500)
@@ -935,28 +969,20 @@ def stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = docs.filter(~is_batch)
     incoming = docs.filter(is_batch)
 
-    capped, pc, sizes_c, fps_c = _incr_dedup_index(corpus)
-
     stage = _scratch_dir("incrdedup")
     in_dir = os.path.join(stage, "in")
     out_dir = os.path.join(stage, "out")
     incoming.repartitionByRange(4, "doc_id").write.mode("overwrite").parquet(
         in_dir
     )
-
-    q = _incr_dedup_start(
-        spark,
-        docs.schema,
-        in_dir,
+    _drain(
+        _file_batches(spark, docs.schema, in_dir),
+        _commit_batches(out_dir, _incr_admit(*_incr_dedup_index(corpus))),
         os.path.join(stage, "ckpt"),
-        _incr_admit_fn(capped, pc, sizes_c, fps_c, out_dir),
-    )
-    q.awaitTermination()
-    return (
-        spark.read.option("recursiveFileLookup", "true")
-        .parquet(out_dir)
-        .select("doc_id", "decision")
-        .orderBy("doc_id")
+        "append",
+    ).awaitTermination()
+    return _read_batches(spark, out_dir).select("doc_id", "decision").orderBy(
+        "doc_id"
     )
 
 
@@ -987,30 +1013,12 @@ def _incr_dedup_index(corpus: DataFrame):
     return capped, pc, sizes_c, fps_c
 
 
-def _incr_dedup_start(spark, in_schema, in_dir, ckpt, admit):
-    """Start the admission drain (availableNow, one file per
-    micro-batch) — extracted, like ``_dsir_route_start``, so the
-    checkpoint-recovery test can crash it mid-drain and restart from
-    the same checkpoint with fault injection around ``admit``."""
-    return (
-        spark.readStream.schema(in_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir)
-        .writeStream.foreachBatch(admit)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
+def _incr_admit(capped, pc, sizes_c, fps_c):
+    """The admission stream's per-batch build: exact_dup / near_dup /
+    accept for each document of a micro-batch, against the standing
+    index."""
 
-
-def _incr_admit_fn(capped, pc, sizes_c, fps_c, out_dir: str):
-    """Build the admission scorer: decide exact_dup / near_dup /
-    accept for one micro-batch against the standing index, landing in
-    a per-batch-id overwrite dir (replay-idempotent — see
-    ``_dsir_score_fn`` for the at-least-once argument)."""
-    import os
-
-    def _admit(bdf: DataFrame, batch_id: int) -> None:
+    def admit(bdf: DataFrame) -> DataFrame:
         bg = _doc_grams(bdf)
         sizes_b = bg.groupBy("doc_id").agg(F.count(F.lit(1)).alias("ngb"))
         pb = bg.join(capped, "gram").select(
@@ -1037,7 +1045,7 @@ def _incr_admit_fn(capped, pc, sizes_c, fps_c, out_dir: str):
             .select("doc_id")
             .withColumn("ex", F.lit(1))
         )
-        (
+        return (
             bdf.select("doc_id")
             .join(exact, "doc_id", "left")
             .join(near, "doc_id", "left")
@@ -1048,40 +1056,18 @@ def _incr_admit_fn(capped, pc, sizes_c, fps_c, out_dir: str):
                 .otherwise("accept")
                 .alias("decision"),
             )
-            # Per-batch-id overwrite dir, NOT append: foreachBatch is
-            # at-least-once, and an append sink double-counts the
-            # in-flight batch replayed after a crash — the exact bug
-            # the r11 injected-crash recovery test demonstrated on
-            # stream_dsir_router's sink (81 rows for 72 docs); the
-            # per-batch generation dir makes the replay a no-op
-            # rewrite (see _dsir_score_fn).
-            .write.mode("overwrite")
-            .parquet(os.path.join(out_dir, f"batch-{batch_id}"))
         )
 
-    return _admit
+    return admit
 
 
-def _dsir_score_fn(lam, out_dir: str):
-    """Build the router's foreachBatch scorer: score one micro-batch
-    against the broadcast λ table and land it in its OWN
-    ``batch-<id>`` directory with mode("overwrite").
-
-    foreachBatch is at-least-once — a batch whose offset commit never
-    lands is RE-EXECUTED on restart, side-effects included. With the
-    original mode("append") sink that replay double-counted every
-    document of the in-flight batch (deterministically reproduced by
-    the r11 recovery test's injected crash-after-write); per-batch-dir
-    overwrite makes the replay idempotent — the merge-view
-    generation-dir discipline."""
-    import os
-
-    from pyspark.sql import functions as F
-
+def _dsir_score(lam):
+    """The router's per-batch build: each document's bigram count and
+    importance against the broadcast λ table."""
     from tpctools_spark.queries.pipeline import _dsir_hashed
 
-    def _score(bdf: DataFrame, batch_id: int) -> None:
-        (
+    def score(bdf: DataFrame) -> DataFrame:
+        return (
             _dsir_hashed(bdf)
             .join(F.broadcast(lam), "bucket")
             .groupBy("doc_id")
@@ -1091,39 +1077,9 @@ def _dsir_score_fn(lam, out_dir: str):
                 .cast("double")
                 .alias("imp"),
             )
-            .write.mode("overwrite")
-            .parquet(os.path.join(out_dir, f"batch-{batch_id}"))
         )
 
-    return _score
-
-
-def _dsir_route_start(spark, in_schema, in_dir, out_dir, ckpt, lam,
-                      score_fn=None):
-    """Start the DSIR ingest-router drain (availableNow, one file per
-    micro-batch) and return the streaming query handle.
-
-    Extracted from ``stream_dsir_router`` so the checkpoint-recovery
-    test can kill the drain and restart from the same checkpoint;
-    ``score_fn`` lets the test wrap the scorer with fault injection."""
-    return (
-        spark.readStream.schema(in_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir)
-        .writeStream.foreachBatch(score_fn or _dsir_score_fn(lam, out_dir))
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def _dsir_route_read(spark, out_dir: str) -> DataFrame:
-    """Read the router's per-batch output dirs back as one relation
-    (recursive lookup: the ``batch-<id>`` dirs are not key=value
-    partitions)."""
-    return (
-        spark.read.option("recursiveFileLookup", "true").parquet(out_dir)
-    )
+    return score
 
 
 @query(
@@ -1189,8 +1145,6 @@ def stream_dsir_router(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-doc partial aggregation. Buckets absent from the corpus LM
     drop (inner join) on both engines.
     """
-    import os
-
     from tpctools_spark.queries.pipeline import _dsir_hashed, _dsir_lam
 
     docs = table(spark, sf_dir, "documents").select(
@@ -1207,17 +1161,17 @@ def stream_dsir_router(spark: SparkSession, sf_dir: str) -> DataFrame:
         "overwrite"
     ).parquet(in_dir)
 
-    q = _dsir_route_start(
-        spark, docs.schema, in_dir, out_dir, os.path.join(stage, "ckpt"), lam
-    )
-    q.awaitTermination()
-    # The stream has drained and every foreachBatch already joined the
-    # broadcast LM, so the cached lambda table is dead weight from here
-    # — unpersist it instead of leaking one cached DataFrame per
-    # invocation into the session (r10-ADVICE low; the returned plan
-    # reads only the scored parquet, so this is safe).
+    _drain(
+        _file_batches(spark, docs.schema, in_dir),
+        _commit_batches(out_dir, _dsir_score(lam)),
+        os.path.join(stage, "ckpt"),
+        "append",
+    ).awaitTermination()
+    # Every batch has joined the broadcast λ table by now and the
+    # returned plan reads only the committed output, so the cache is
+    # released instead of left in the session.
     lam.unpersist()
-    scored = _dsir_route_read(spark, out_dir)
+    scored = _read_batches(spark, out_dir)
     return scored.select(
         "doc_id",
         "n_bigrams",
