@@ -107,13 +107,10 @@ def test_cluster_components_transitivity(spark, planted_dir):
         assert by_doc[d].keep
 
 
-def test_jaccard_hot_gram_cap(spark, tmp_path):
+def _hot_gram_dir(spark, out: str) -> str:
     """A boilerplate sentence shared by 120 docs (df > JACCARD_DF_CAP)
-    must NOT explode into ~120²/2 candidate pairs — the df-cap drops the
-    hot grams from candidate generation entirely, while selective grams
-    (df=2 control pair) still dedup exactly."""
+    plus one control pair of identical selective text (df = 2)."""
     from tpctools_spark.queries.dedup import JACCARD_DF_CAP
-    from tpctools_spark.registry import spark_queries
 
     boiler = "this document is provided as is without warranty of any kind"
     rows = [
@@ -123,12 +120,21 @@ def test_jaccard_hot_gram_cap(spark, tmp_path):
     control = "seventeen green turtles watch from a mossy riverbank tonight"
     rows += [(9001, control), (9002, control)]
     assert 120 > JACCARD_DF_CAP  # the plant actually exceeds the cap
-    out = str(tmp_path / "hotgram")
     spark.createDataFrame(
         [(i, t, "en", "test", len(t)) for i, t in rows],
         "doc_id long, text string, lang string, source string, n_chars long",
     ).write.mode("overwrite").parquet(f"{out}/documents.parquet")
+    return out
 
+
+def test_jaccard_hot_gram_cap(spark, tmp_path):
+    """A boilerplate sentence shared by 120 docs (df > JACCARD_DF_CAP)
+    must NOT explode into ~120²/2 candidate pairs — the df-cap drops the
+    hot grams from candidate generation entirely, while selective grams
+    (df=2 control pair) still dedup exactly."""
+    from tpctools_spark.registry import spark_queries
+
+    out = _hot_gram_dir(spark, str(tmp_path / "hotgram"))
     pairs = {
         (r.doc_a, r.doc_b): r.jaccard
         for r in spark_queries()["dedup_ngram_jaccard"](spark, out).collect()
@@ -137,6 +143,170 @@ def test_jaccard_hot_gram_cap(spark, tmp_path):
     # 7140 pairs; with it the hot grams vanish and only the control
     # pair (whose grams have df=2) survives.
     assert pairs == {(9001, 9002): 1.0}
+
+
+def _components(sets, ids=None):
+    """``_components_numpy`` over documents given as gram-hash lists."""
+    import numpy as np
+
+    from tpctools_spark.queries.dedup import _components_numpy
+
+    ids = np.arange(len(sets)) if ids is None else np.asarray(ids)
+    lens = np.array([len(s) for s in sets], dtype=np.int64)
+    grams = np.array([g for s in sets for g in s], dtype=np.int64)
+    cluster, size = _components_numpy(ids.astype(np.int64), lens, grams)
+    return cluster.tolist(), size.tolist()
+
+
+def test_components_kernel_chain_is_one_component():
+    """A 1000-link chain (doc i shares one of its two grams with doc
+    i+1, Jaccard 1/3) is one component labelled 0 — pointer jumping
+    converges where plain propagation would take 1000 rounds."""
+    cluster, size = _components([[i, i + 1] for i in range(1001)])
+    assert set(cluster) == {0}
+    assert set(size) == {1001}
+
+
+def test_components_kernel_disjoint_components_and_gramless_doc():
+    """Two disjoint components get their minimum doc ids (not row
+    positions), and a document without grams is a singleton."""
+    cluster, size = _components(
+        [[1, 2], [2, 3], [], [10, 11], [11, 12]], ids=[50, 40, 30, 20, 10]
+    )
+    assert cluster == [40, 40, 30, 10, 10]
+    assert size == [2, 2, 1, 2, 2]
+
+
+def test_components_kernel_empty_input():
+    assert _components([]) == ([], [])
+
+
+def test_components_kernel_df_cap_boundary():
+    """A gram at df = JACCARD_DF_CAP still links its documents; one at
+    CAP + 1 is dropped, leaving its documents singletons."""
+    from tpctools_spark.queries.dedup import JACCARD_DF_CAP as CAP
+
+    cluster, size = _components([[7]] * CAP + [[8]] * (CAP + 1))
+    assert cluster[:CAP] == [0] * CAP and size[:CAP] == [CAP] * CAP
+    assert cluster[CAP:] == list(range(CAP, 2 * CAP + 1))
+    assert size[CAP:] == [1] * (CAP + 1)
+
+
+def test_components_kernel_pair_passes_agree(monkeypatch):
+    """Counting pairs in many hash-split passes (the kernel's memory
+    bound) gives the one-pass answer."""
+    import numpy as np
+
+    from tpctools_spark.queries import dedup as D
+
+    rng = np.random.default_rng(0)
+    sets = [sorted(set(rng.integers(0, 400, 6).tolist())) for _ in range(2000)]
+    one_pass = _components(sets)
+    assert max(one_pass[1]) > 1
+    monkeypatch.setattr(D, "_CC_PAIRS_PER_PASS", 5000)
+    assert _components(sets) == one_pass
+
+
+def _component_rows(spark, sf, monkeypatch, caplog, path):
+    """``dedup_cluster_components`` rows on ``path`` ("arrow"/"loop"),
+    forced through the scan gate, with the path the gate logged."""
+    import logging
+
+    from tpctools_spark.queries import dedup as D
+
+    with monkeypatch.context() as m:
+        if path == "loop":
+            m.setattr(D, "_CC_ARROW_MAX_SCAN_BYTES", 0)
+        caplog.clear()
+        with caplog.at_level(logging.INFO, logger="tpctools_spark"):
+            rows = D.dedup_cluster_components(spark, sf).collect()
+    assert f"dedup_cluster_components: {path} " in caplog.text
+    spark.catalog.clearCache()
+    return sorted(tuple(r) for r in rows)
+
+
+@pytest.mark.parametrize("corpus", ["planted", "hot_gram", "sf0.001"])
+def test_components_paths_agree(
+    spark, sf_dir, planted_dir, tmp_path, monkeypatch, caplog, corpus
+):
+    """The single-task Arrow path and the distributed loop give the
+    same rows, singletons included."""
+    sf = {
+        "planted": lambda: planted_dir,
+        "hot_gram": lambda: _hot_gram_dir(spark, str(tmp_path)),
+        "sf0.001": lambda: sf_dir,
+    }[corpus]()
+    arrow = _component_rows(spark, sf, monkeypatch, caplog, "arrow")
+    assert arrow == _component_rows(spark, sf, monkeypatch, caplog, "loop")
+    assert any(r[2] > 1 for r in arrow)
+
+
+def test_components_gate_counts_text_not_file_bytes(spark, tmp_path, caplog):
+    """One document repeated 60 times is tiny on disk (one dictionary
+    entry) but over the text-byte cap: the exact check sends it to the
+    loop. Every gram is in 60 > JACCARD_DF_CAP documents, so all are
+    dropped and every copy is its own cluster."""
+    import logging
+
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from tpctools_spark.catalog import table
+    from tpctools_spark.queries import dedup as D
+    from tpctools_spark.queries._util import scan_size_bytes
+
+    words = np.random.default_rng(0).integers(0, 5000, 80_000)
+    text = " ".join(f"w{w}" for w in words)
+    copies = 60
+    assert copies > D.JACCARD_DF_CAP
+    assert copies * len(text) > D._CC_ARROW_MAX_TEXT_BYTES  # ASCII: bytes
+    (tmp_path / "documents.parquet").mkdir()
+    pq.write_table(
+        pa.table(
+            {
+                "doc_id": pa.array(range(copies), pa.int64()),
+                "text": pa.array([text] * copies),
+                "lang": pa.array(["en"] * copies),
+                "source": pa.array(["test"] * copies),
+                "n_chars": pa.array([len(text)] * copies, pa.int64()),
+            }
+        ),
+        tmp_path / "documents.parquet" / "part-0.parquet",
+    )
+    docs = table(spark, str(tmp_path), "documents")
+    assert 0 <= scan_size_bytes(docs) < D._CC_ARROW_MAX_SCAN_BYTES
+    with caplog.at_level(logging.INFO, logger="tpctools_spark"):
+        rows = D.dedup_cluster_components(spark, str(tmp_path)).collect()
+    spark.catalog.clearCache()
+    assert "dedup_cluster_components: loop (scan_size_bytes=" in caplog.text
+    assert f"rows={copies}, text_bytes={copies * len(text)})" in caplog.text
+    assert sorted(tuple(r) for r in rows) == [
+        (i, i, 1, True) for i in range(copies)
+    ]
+
+
+def test_components_job_budget_on_small_corpus(spark, tmp_path):
+    """On a 4k-document corpus the whole query — gate, build and
+    collect — starts at most 3 Spark jobs (the loop starts ~29)."""
+    from tpctools_spark.generate_corpus import gen_documents
+    from tpctools_spark.registry import spark_queries
+
+    gen_documents(spark, 4000, parts=4).write.parquet(
+        str(tmp_path / "documents.parquet")
+    )
+    sc = spark.sparkContext
+    group = "components_job_budget"
+    sc.setJobGroup(group, group)
+    try:
+        rows = spark_queries()["dedup_cluster_components"](
+            spark, str(tmp_path)
+        ).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert len(rows) == 4000
+    assert len(jobs) <= 3, f"{len(jobs)} jobs"
 
 
 def test_lsh_cosine_matches_brute_force(spark, tmp_path):
@@ -328,3 +498,37 @@ def test_minhash_arrow_gate_reads_scan_size(spark):
             raise RuntimeError("no plan")
 
     assert D._minhash_arrow_enabled(_NoStats())  # unknown → open
+
+
+def test_minhash_gate_logs_its_choice(spark, sf_dir, caplog):
+    """The minhash tail choice is logged once at INFO with its input."""
+    import logging
+
+    from tpctools_spark.catalog import table
+    from tpctools_spark.queries import dedup as D
+    from tpctools_spark.queries._util import scan_size_bytes
+
+    raw = table(spark, sf_dir, "documents")
+    with caplog.at_level(logging.INFO, logger="tpctools_spark"):
+        D._minhash_arrow_enabled(raw)
+    msgs = [r.getMessage() for r in caplog.records if r.name.startswith("tpctools_spark")]
+    assert msgs == [
+        f"dedup_minhash: jvm tail (scan_size_bytes={scan_size_bytes(raw)})"
+    ]
+
+
+def test_components_gate_logs_its_choice(spark, sf_dir, caplog):
+    """The components path is logged once at INFO with the scan size
+    and, once read, the exact row and text-byte counts."""
+    import logging
+
+    from tpctools_spark.catalog import table
+    from tpctools_spark.queries import dedup as D
+
+    docs = table(spark, sf_dir, "documents")
+    with caplog.at_level(logging.INFO, logger="tpctools_spark"):
+        assert D._components_arrow_enabled(docs)
+    msgs = [r.getMessage() for r in caplog.records if r.name.startswith("tpctools_spark")]
+    assert len(msgs) == 1
+    assert msgs[0].startswith("dedup_cluster_components: arrow (scan_size_bytes=")
+    assert msgs[0].endswith("rows=500, text_bytes=153156)")

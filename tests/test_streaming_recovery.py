@@ -439,6 +439,21 @@ def test_incremental_dedup_resumes_from_checkpoint(spark, tmp_path):
     _assert_same_rows(_read_batches(spark, out_dir).collect(), want_rows)
 
 
+def test_incremental_dedup_releases_its_index(spark):
+    """The admission stream caches its standing index for the drain;
+    the returned plan reads only committed output, so no cached block
+    outlives the call in the caller's session."""
+    from tpctools_spark.queries.streaming_demo import stream_incremental_dedup
+
+    # An identical plan cached earlier in the session would turn the
+    # call's cache() into a no-op and hide a leak.
+    spark.catalog.clearCache()
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    stream_incremental_dedup(spark, SF)
+    assert jsc.getPersistentRDDs().size() == before
+
+
 def _stage_ts_ordered_chunks(df, in_dir: str, n: int = 8) -> None:
     """Write *df* as *n* ascending-ts range-partitioned files and stamp
     strictly increasing mtimes so FileStreamSource (which orders by

@@ -36,9 +36,15 @@ Layout
 - :mod:`tpctools_spark.queries.streaming_demo` — Structured Streaming demos
 """
 
+import logging
+
 from tpctools_spark.session import get_spark
 from tpctools_spark.registry import QUERIES, ORACLES, spark_queries, oracle_queries
 from tpctools_spark.benchmark import Tpc, TpcH, TpcDs, create_benchmark
+
+# The library logs its runtime plan choices at INFO; it stays silent
+# unless the application configures logging.
+logging.getLogger("tpctools_spark").addHandler(logging.NullHandler())
 
 __version__ = "0.1.0"
 

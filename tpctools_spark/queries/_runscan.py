@@ -6,7 +6,9 @@ scan over a two-column blocking key (the embedding cells of
 each partition on the same keys in the JVM (spillable, no second
 shuffle), then ``mapInArrow``. In the Python worker ``split_runs``
 streams the sorted batches as tables of complete runs and hands each,
-with its run starts, to a numpy kernel. ``fixed_width`` is the one
+with its run starts, to a numpy kernel. ``run_pairs`` enumerates the
+pairs inside each run, for the minhash bucket scan and for the
+single-task components kernel of ``dedup``. ``fixed_width`` is the one
 list-column → n×w matrix read, with a loud arity check.
 
 Memory: the worker holds at most ``min_rows`` rows plus one batch plus
@@ -89,6 +91,31 @@ def split_runs(batches, key_a: str, key_b: str, min_rows: int = 65536):
     if buf:
         tab = concat()
         yield tab, runs(tab)
+
+
+def run_pairs(starts, n: int, chunk: int = 4_000_000):
+    """Yield ``(ii, jj)``: the row indices of every pair ``ii < jj``
+    inside one run of a table of ``n`` rows whose runs begin at the
+    ascending ``starts``, at most ``chunk`` pairs per yield — so the
+    index buffers stay bounded whatever one run's O(m²) pair count.
+
+    Vectorized, no per-run Python loop: row r (position pos[r] in its
+    run) pairs, as the right element, with the pos[r] rows before it;
+    cumpos[r] = #pairs whose right element is ≤ r, so pair id p maps to
+    j = first row with cumpos[j] > p and i = run start + offset in j's
+    run."""
+    import numpy as np
+
+    if n == 0:
+        return
+    starts_per_row = np.repeat(starts, np.diff(np.append(starts, n)))
+    pos = np.arange(n) - starts_per_row
+    cumpos = np.cumsum(pos)
+    total = int(cumpos[-1])
+    for s in range(0, total, chunk):
+        pid = np.arange(s, min(s + chunk, total), dtype=np.int64)
+        jj = np.searchsorted(cumpos, pid, side="right")
+        yield starts_per_row[jj] + (pid - (cumpos[jj] - pos[jj])), jj
 
 
 def run_scan(df: DataFrame, keys: tuple[str, str], kernel, schema: str):

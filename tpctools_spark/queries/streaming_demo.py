@@ -975,12 +975,17 @@ def stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     incoming.repartitionByRange(4, "doc_id").write.mode("overwrite").parquet(
         in_dir
     )
+    index = _incr_dedup_index(corpus)
     _drain(
         _file_batches(spark, docs.schema, in_dir),
-        _commit_batches(out_dir, _incr_admit(*_incr_dedup_index(corpus))),
+        _commit_batches(out_dir, _incr_admit(*index)),
         os.path.join(stage, "ckpt"),
         "append",
     ).awaitTermination()
+    # The returned plan reads only the committed output, so the standing
+    # index is released instead of left cached in the caller's session.
+    for part in index:
+        part.unpersist()
     return _read_batches(spark, out_dir).select("doc_id", "decision").orderBy(
         "doc_id"
     )
