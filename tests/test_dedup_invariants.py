@@ -192,19 +192,20 @@ def test_components_kernel_df_cap_boundary():
     assert size[CAP:] == [1] * (CAP + 1)
 
 
-def test_components_kernel_pair_passes_agree(monkeypatch):
-    """Counting pairs in many hash-split passes (the kernel's memory
-    bound) gives the one-pass answer."""
+def test_components_kernel_pair_chunks_agree(monkeypatch):
+    """Counting pairs over many small ``run_pairs`` chunks — a node's
+    partial counts carried from chunk to chunk — gives the one-chunk
+    answer."""
     import numpy as np
 
-    from tpctools_spark.queries import dedup as D
+    from tpctools_spark.queries import _runscan
 
     rng = np.random.default_rng(0)
     sets = [sorted(set(rng.integers(0, 400, 6).tolist())) for _ in range(2000)]
-    one_pass = _components(sets)
-    assert max(one_pass[1]) > 1
-    monkeypatch.setattr(D, "_CC_PAIRS_PER_PASS", 5000)
-    assert _components(sets) == one_pass
+    one_chunk = _components(sets)
+    assert max(one_chunk[1]) > 1
+    monkeypatch.setattr(_runscan, "_PAIR_CHUNK", 997)
+    assert _components(sets) == one_chunk
 
 
 def _component_rows(spark, sf, monkeypatch, caplog, path):

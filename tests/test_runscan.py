@@ -7,7 +7,8 @@ import numpy as np
 import pyarrow as pa
 import pytest
 
-from tpctools_spark.queries._runscan import fixed_width, split_runs
+from tpctools_spark.queries import _runscan
+from tpctools_spark.queries._runscan import fixed_width, run_pairs, split_runs
 
 
 def _batches(keys, sizes):
@@ -110,3 +111,23 @@ def test_fixed_width_reads_a_matrix_and_rejects_drift():
     with pytest.raises(ValueError, match=r"\(got null\)"):
         fixed_width(nulls, 2, "q dim")
     assert fixed_width(col.slice(0, 0), 2, "w").shape == (0, 2)
+
+
+def _pairs(starts, n, rows=None):
+    return [
+        p for ii, jj in run_pairs(np.array(starts), n, rows) for p in zip(ii, jj)
+    ]
+
+
+def test_run_pairs_enumerates_each_within_run_pair_once(monkeypatch):
+    """Runs [0, 3), [3, 4) and [4, 7): every i < j inside one run, in
+    order of the right element, whatever the chunk size; with ``rows``,
+    only the pairs whose right element is listed, in ``rows`` order."""
+    want = [(0, 1), (0, 2), (1, 2), (4, 5), (4, 6), (5, 6)]
+    assert _pairs([0, 3, 4], 7) == want
+    monkeypatch.setattr(_runscan, "_PAIR_CHUNK", 2)
+    assert _pairs([0, 3, 4], 7) == want
+    assert _pairs([0, 3, 4], 7, np.array([6, 3, 1])) == [
+        (4, 6), (5, 6), (0, 1)
+    ]
+    assert _pairs([0], 1) == [] and _pairs([], 0) == []

@@ -93,16 +93,23 @@ def split_runs(batches, key_a: str, key_b: str, min_rows: int = 65536):
         yield tab, runs(tab)
 
 
-def run_pairs(starts, n: int, chunk: int = 4_000_000):
+# Pairs per ``run_pairs`` yield: bounds its index buffers whatever one
+# run's O(m²) pair count.
+_PAIR_CHUNK = 4_000_000
+
+
+def run_pairs(starts, n: int, rows=None):
     """Yield ``(ii, jj)``: the row indices of every pair ``ii < jj``
     inside one run of a table of ``n`` rows whose runs begin at the
-    ascending ``starts``, at most ``chunk`` pairs per yield — so the
-    index buffers stay bounded whatever one run's O(m²) pair count.
+    ascending ``starts``, at most ``_PAIR_CHUNK`` pairs per yield.
+    With ``rows``, only the pairs whose right element ``jj`` is in
+    ``rows`` are enumerated, in the order of ``rows``.
 
     Vectorized, no per-run Python loop: row r (position pos[r] in its
     run) pairs, as the right element, with the pos[r] rows before it;
-    cumpos[r] = #pairs whose right element is ≤ r, so pair id p maps to
-    j = first row with cumpos[j] > p and i = run start + offset in j's
+    cumpos[k] = #pairs whose right element is one of the first k + 1
+    enumerated rows, so pair id p maps to the first k with
+    cumpos[k] > p, j = that row, and i = run start + offset in j's
     run."""
     import numpy as np
 
@@ -110,12 +117,15 @@ def run_pairs(starts, n: int, chunk: int = 4_000_000):
         return
     starts_per_row = np.repeat(starts, np.diff(np.append(starts, n)))
     pos = np.arange(n) - starts_per_row
-    cumpos = np.cumsum(pos)
-    total = int(cumpos[-1])
-    for s in range(0, total, chunk):
-        pid = np.arange(s, min(s + chunk, total), dtype=np.int64)
-        jj = np.searchsorted(cumpos, pid, side="right")
-        yield starts_per_row[jj] + (pid - (cumpos[jj] - pos[jj])), jj
+    if rows is None:
+        rows = np.arange(n)
+    cumpos = np.cumsum(pos[rows])
+    total = int(cumpos[-1]) if len(rows) else 0
+    for s in range(0, total, _PAIR_CHUNK):
+        pid = np.arange(s, min(s + _PAIR_CHUNK, total), dtype=np.int64)
+        k = np.searchsorted(cumpos, pid, side="right")
+        jj = rows[k]
+        yield starts_per_row[jj] + (pid - (cumpos[k] - pos[jj])), jj
 
 
 def run_scan(df: DataFrame, keys: tuple[str, str], kernel, schema: str):

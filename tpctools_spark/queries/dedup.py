@@ -1311,20 +1311,20 @@ def _min_label_components(
 # a large corpus pays nothing; the row and text-byte caps are exact and
 # bound the kernel's memory, which the on-disk size does not (a file of
 # repeated documents is tiny on disk). Measured: 3.5× faster at 5k and
-# at 50k documents (9.2 MiB on disk, 14.6 MB of text); the 500k tier
-# (111 MiB on disk) stays on the loop.
+# at 50k documents (9.2 MiB on disk, 14.6 MB of text), and 1.8× at the
+# caps on a corpus of 48-copy near-duplicate clusters (172M enumerated
+# pairs); the 500k tier (111 MiB on disk) stays on the loop.
 _CC_ARROW_MAX_SCAN_BYTES = 32 * 1024 * 1024
 _CC_ARROW_MAX_DOCS = 100_000
 _CC_ARROW_MAX_TEXT_BYTES = 24 * 1024 * 1024
 # Worker memory at the caps, T text bytes and N documents: postings
 # P ≤ T/2 (each gram starts at a word, and a word takes a character and
 # a separator), ~64 B each with their sort and run arrays → ≤ 0.8 GB;
-# the enumerated pairs Q ≤ P·(JACCARD_DF_CAP − 1)/2 are counted in
-# hash-split passes of at most _CC_PAIRS_PER_PASS, each holding its
-# reduced keys (~40 B a pair) plus one 4M-pair chunk → ≤ 0.6 GB; the
-# Jaccard edges are < 294 per document (a partner shares more than 1/6
-# of a document's grams, each gram at most CAP − 1 partners) → ≤ 0.3 GB.
-_CC_PAIRS_PER_PASS = 8_000_000
+# the enumerated pairs Q ≤ P·(JACCARD_DF_CAP − 1)/2 are counted in one
+# streaming pass (``_jaccard_edges``) that holds one run_pairs chunk
+# (~0.3 GB) plus one node's partial counts (< N keys); the Jaccard
+# edges are < 294 per document (a partner shares more than 1/6 of a
+# document's grams, each gram at most CAP − 1 partners) → ≤ 0.3 GB.
 
 _CC_SCHEMA = "doc_id bigint, cluster_id bigint, cluster_size bigint, keep boolean"
 
@@ -1358,34 +1358,37 @@ def _components_arrow_enabled(docs: DataFrame) -> bool:
     return small
 
 
-def _jaccard_edges(node, starts, size, part: int, parts: int):
-    """The node pairs (a, b) of ``_components_numpy``'s kept gram runs
-    with shared-gram Jaccard ≥ 0.2, restricted to the pairs whose key
-    hashes to ``part`` of ``parts``. Each chunk's keys are reduced at
-    once, then the chunks are merged."""
+def _jaccard_edges(node, starts, size):
+    """The node pairs (a, b), a < b, of ``_components_numpy``'s kept
+    gram runs (``node`` ascending within each run) whose shared-gram
+    Jaccard is ≥ 0.2. Every pair is enumerated once, in ascending order
+    of its right node b: each chunk's keys are counted at once, the
+    keys below the chunk's last b are final, and only that last node's
+    partial counts carry into the next chunk — so the work is linear in
+    the pairs and the memory is one chunk."""
     import numpy as np
 
     n = len(size)
-    keys, counts = [], []
-    for ii, jj in run_pairs(starts, len(node)):
-        a, b = node[ii], node[jj]
-        k = np.minimum(a, b) * n + np.maximum(a, b)
-        if parts > 1:
-            mix = k.view(np.uint64) * np.uint64(0x9E3779B97F4A7C15)
-            k = k[(mix >> np.uint64(32)) % np.uint64(parts) == part]
-        k, c = np.unique(k, return_counts=True)
-        keys.append(k)
-        counts.append(c)
-    k = np.concatenate(keys) if keys else np.zeros(0, np.int64)
-    c = np.concatenate(counts) if counts else np.zeros(0, np.int64)
-    if len(keys) > 1:
-        srt = np.argsort(k, kind="stable")
-        k, c = k[srt], c[srt]
-        first = np.flatnonzero(np.r_[True, k[1:] != k[:-1]])
-        k, c = k[first], np.add.reduceat(c, first)
-    a, b = k // max(n, 1), k % max(n, 1)
-    edge = c.astype(np.float64) / (size[a] + size[b] - c) >= 0.2
-    return a[edge], b[edge]
+    ea, eb = [], []
+    ck = cc = np.zeros(0, np.int64)
+
+    def emit(k, c):
+        a, b = k // n, k % n
+        edge = c.astype(np.float64) / (size[a] + size[b] - c) >= 0.2
+        ea.append(a[edge])
+        eb.append(b[edge])
+
+    by_b = np.argsort(node, kind="stable")
+    for ii, jj in run_pairs(starts, len(node), rows=by_b):
+        k, c = np.unique(node[ii] * n + node[jj], return_counts=True)
+        if len(ck):
+            k, inv = np.unique(np.r_[ck, k], return_inverse=True)
+            c = np.bincount(inv, np.r_[cc, c]).astype(np.int64)
+        done = k % n != node[jj[-1]]
+        emit(k[done], c[done])
+        ck, cc = k[~done], c[~done]
+    emit(ck, cc)
+    return np.concatenate(ea), np.concatenate(eb)
 
 
 def _components_numpy(ids, lens, grams):
@@ -1406,25 +1409,19 @@ def _components_numpy(ids, lens, grams):
     rank[order] = np.arange(n)
     size = np.zeros(n, np.int64)
     size[rank] = lens
-    # Postings sorted by gram; keep the runs of 2..JACCARD_DF_CAP docs.
-    by_gram = np.argsort(grams, kind="stable")
+    # Postings sorted by gram, then node; keep the runs of
+    # 2..JACCARD_DF_CAP docs.
+    node = np.repeat(rank, lens)
+    by_gram = np.lexsort((node, grams))
     g = grams[by_gram]
-    node = np.repeat(rank, lens)[by_gram]
+    node = node[by_gram]
     starts = np.flatnonzero(np.r_[True, g[1:] != g[:-1]])
     df = np.diff(np.append(starts, len(g)))
     kept = (df >= 2) & (df <= JACCARD_DF_CAP)
     dk = df[kept]
     node = node[np.repeat(kept, df)]
     kstarts = np.cumsum(np.r_[0, dk[:-1]])
-    # Shared-gram counts, in as many hash-split passes as keep each
-    # pass's pairs under _CC_PAIRS_PER_PASS; only Jaccard edges survive.
-    passes = max(1, -(-int((dk * (dk - 1) // 2).sum()) // _CC_PAIRS_PER_PASS))
-    edges = [
-        _jaccard_edges(node, kstarts, size, part, passes)
-        for part in range(passes)
-    ]
-    a = np.concatenate([e[0] for e in edges])
-    b = np.concatenate([e[1] for e in edges])
+    a, b = _jaccard_edges(node, kstarts, size)
     # Min-label propagation with pointer jumping to a fixed point.
     label = np.arange(n)
     while True:
@@ -2008,25 +2005,25 @@ def dedup_keep_longest(spark: SparkSession, sf_dir: str) -> DataFrame:
     Production near-dedup keeps the highest-quality member of each
     duplicate cluster, not the lowest id — length is the classic proxy
     (CCNet/RefinedWeb-style). Composes the connected components with a
-    per-cluster ``max_by`` on a packed long key (n_chars · 2³³ +
-    (2³³ − doc_id): longest wins, ties to the lowest id) — the election
-    is ONE hash aggregate over |docs| rows, and the packed key keeps it
-    on the hash fast path and bit-deterministic in both engines.
+    per-cluster ``max_by`` window on a packed long key (n_chars · 2³³ +
+    (2³³ − doc_id): longest wins, ties to the lowest id) — one shuffle
+    on cluster_id, the components read once (no join back onto an
+    aggregate of them), and the packed key keeps the election
+    bit-deterministic in both engines.
     """
+    from pyspark.sql.window import Window
+
     comps = dedup_cluster_components(spark, sf_dir).select("doc_id", "cluster_id")
     docs = table(spark, sf_dir, "documents").select("doc_id", "n_chars")
-    with_len = comps.join(docs, "doc_id")
     okey = F.col("n_chars") * F.lit(8589934592) + (
         F.lit(8589934592) - F.col("doc_id")
     )
-    elected = with_len.groupBy("cluster_id").agg(
-        F.max_by("doc_id", okey).alias("rep_id")
-    )
-    return with_len.join(elected, "cluster_id").select(
+    rep_id = F.max_by("doc_id", okey).over(Window.partitionBy("cluster_id"))
+    return comps.join(docs, "doc_id").select(
         "doc_id",
         "cluster_id",
         "n_chars",
-        (F.col("doc_id") == F.col("rep_id")).alias("keep"),
+        (F.col("doc_id") == rep_id).alias("keep"),
     )
 
 
