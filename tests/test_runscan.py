@@ -1,5 +1,6 @@
-"""The sorted-run splitter and the list→matrix read of ``_runscan``, in
-pure pyarrow: no Spark session."""
+"""The sorted-run splitter, the within-run pair enumeration and the
+list→matrix read of ``_runscan``, in pure pyarrow and numpy: no Spark
+session."""
 
 from __future__ import annotations
 
