@@ -7,6 +7,8 @@ recall/specificity properties.
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -222,6 +224,11 @@ def _component_rows(spark, sf, monkeypatch, caplog, path):
         with caplog.at_level(logging.INFO, logger="tpctools_spark"):
             rows = D.dedup_cluster_components(spark, sf).collect()
     assert f"dedup_cluster_components: {path} " in caplog.text
+    if path == "loop":
+        assert re.search(
+            r"dedup_cluster_components: loop converged in \d+ rounds",
+            caplog.text,
+        )
     spark.catalog.clearCache()
     return sorted(tuple(r) for r in rows)
 
@@ -375,6 +382,29 @@ def test_dedup_funnel_accounting(spark):
     assert r.n_total == r.n_exact_removed + r.n_near_removed + r.n_final
     assert r.n_near_removed > 0
     assert r.n_final > 0
+
+
+@pytest.mark.parametrize("cap_over", ["corpus", "corpus_and_batch"])
+def test_admission_probe_labels_each_case(spark, cap_over):
+    """Every label of the admission probe, for both callers' df-cap
+    scopes: an exact copy of a corpus document, a near copy, a new
+    document, and a second copy of that new document in the same batch,
+    which must not count as its match."""
+    from tpctools_spark.queries.dedup import _admission_probe
+
+    base = " ".join(f"w{i}" for i in range(10))
+    other = " ".join(f"v{i}" for i in range(10))
+    fresh = " ".join(f"u{i}" for i in range(10))
+    schema = "doc_id bigint, text string"
+    corpus = spark.createDataFrame([(1, base), (2, other)], schema)
+    batch = spark.createDataFrame(
+        [(10, base), (11, base + " x"), (12, fresh), (13, fresh)], schema
+    )
+    cap_docs = corpus if cap_over == "corpus" else corpus.unionByName(batch)
+    _, admit = _admission_probe(cap_docs)
+    assert dict(admit(batch).collect()) == {
+        10: "exact_dup", 11: "near_dup", 12: "accept", 13: "accept",
+    }
 
 
 def test_boilerplate_windows_flag_planted_copies(spark, planted_dir):

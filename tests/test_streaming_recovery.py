@@ -416,13 +416,13 @@ def test_incremental_dedup_resumes_from_checkpoint(spark, tmp_path):
     """The admission stream's twin of the DSIR-router recovery test:
     decisions depend only on (document, standing index), so the drained
     output must equal the same build over all incoming documents at
-    once, row for row."""
+    once, row for row. The probe caches nothing, so the run leaves the
+    shared session's persisted blocks as it found them."""
     from tpctools_spark.generate_corpus import gen_documents
-    from tpctools_spark.queries.streaming_demo import (
-        _incr_admit,
-        _incr_dedup_index,
-    )
+    from tpctools_spark.queries.dedup import _admission_probe
 
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
     docs = gen_documents(spark, 500)
     is_batch = (F.col("doc_id") % 7 == 0) & (F.col("doc_id") > 0)
     incoming = docs.filter(is_batch)
@@ -430,13 +430,14 @@ def test_incremental_dedup_resumes_from_checkpoint(spark, tmp_path):
     out_dir = str(tmp_path / "out")
     incoming.repartitionByRange(8, "doc_id").write.parquet(in_dir)
 
-    build = _incr_admit(*_incr_dedup_index(docs.filter(~is_batch)))
+    _, build = _admission_probe(docs.filter(~is_batch))
     want_rows = build(incoming).collect()
     _drive_with_crash(
         _file_batches(spark, docs.schema, in_dir), out_dir, build, tmp_path,
         "append",
     )
     _assert_same_rows(_read_batches(spark, out_dir).collect(), want_rows)
+    assert jsc.getPersistentRDDs().size() == before
 
 
 def test_incremental_dedup_releases_its_index(spark):

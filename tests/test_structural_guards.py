@@ -11,6 +11,7 @@ symmetrically in both engines would still fail here.
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from tpctools_spark.catalog import table
@@ -240,6 +241,13 @@ def test_fdr_bh_planted_shift_rejects(spark):
     assert out["null_0"]["mean_millicents"] == 50 * 1000
 
 
+def _chain_edges(spark, n: int = 1000):
+    """The symmetric edge table of an n-link chain 0 - 1 - ... - n."""
+    chain = [(i, i + 1) for i in range(n)]
+    sym = chain + [(b, a) for a, b in chain]
+    return spark.createDataFrame(sym, "src bigint, dst bigint")
+
+
 def test_components_chain_converges_logarithmically(spark):
     """A planted 1000-link chain must converge within the loud cap —
     and in O(log n) rounds, proving the pointer-halving step works.
@@ -251,10 +259,7 @@ def test_components_chain_converges_logarithmically(spark):
     )
 
     n = 1000
-    chain = [(i, i + 1) for i in range(n)]
-    sym = chain + [(b, a) for a, b in chain]
-    edges = spark.createDataFrame(sym, "src bigint, dst bigint")
-    labels, rounds = _min_label_components(edges)
+    labels, rounds = _min_label_components(_chain_edges(spark, n))
     try:
         rows = labels.collect()
     finally:
@@ -263,6 +268,16 @@ def test_components_chain_converges_logarithmically(spark):
     assert rounds <= _COMPONENTS_MAX_ROUNDS
     assert len(rows) == n + 1
     assert all(r["cluster_id"] == 0 for r in rows)
+
+
+def test_components_loop_fails_loudly_past_its_round_cap(spark, monkeypatch):
+    """The same 1000-link chain under a 2-round cap: the loop must raise
+    its named error instead of returning unconverged labels."""
+    from tpctools_spark.queries import dedup as D
+
+    monkeypatch.setattr(D, "_COMPONENTS_MAX_ROUNDS", 2)
+    with pytest.raises(RuntimeError, match="not converged after 2 rounds"):
+        D._min_label_components(_chain_edges(spark))
 
 
 def test_queries_have_no_import_fallbacks():
@@ -279,6 +294,42 @@ def test_queries_have_no_import_fallbacks():
         if "except ImportError" in p.read_text()
     ]
     assert not offenders, f"dead import fallbacks in {offenders}"
+
+
+def test_word_trigrams_are_built_only_in_dedup():
+    """Near-dup Jaccard has one home, ``queries/dedup.py``: its 3-gram
+    tokenizer is the codegen regex ``_shingles_rx``. A ``transform``
+    lambda that ``concat_ws``-joins three ``element_at`` words anywhere
+    else is a second, interpreted copy of that tokenizer."""
+    import ast
+    from pathlib import Path
+
+    import tpctools_spark
+
+    def name(call):
+        f = call.func
+        return f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", "")
+
+    def calls(node, fn):
+        return [
+            n for n in ast.walk(node)
+            if isinstance(n, ast.Call) and name(n) == fn
+        ]
+
+    root = Path(tpctools_spark.__file__).parent
+    offenders = sorted(
+        f"{p.relative_to(root)}:{lam.lineno}"
+        for p in root.rglob("*.py")
+        if p.relative_to(root).as_posix() != "queries/dedup.py"
+        for tr in calls(ast.parse(p.read_text()), "transform")
+        for lam in tr.args
+        if isinstance(lam, ast.Lambda)
+        and any(
+            len(calls(cw, "element_at")) >= 3
+            for cw in calls(lam.body, "concat_ws")
+        )
+    )
+    assert not offenders, f"word 3-grams built outside dedup.py: {offenders}"
 
 
 def test_env_reads_are_the_documented_ones():

@@ -27,6 +27,7 @@ from tpctools_spark.generate_corpus import (
     gen_embeddings,
     gen_events,
 )
+from tpctools_spark.queries.dedup import _admission_probe, _jaccard_pairs
 from tpctools_spark.registry import query
 
 _N_DOCS = 500
@@ -205,64 +206,24 @@ def pipeline_dedup_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The generated corpus plants a near-dup at every 7th doc, so
     detector quality is measurable, not guessable: run the capped
-    3-gram Jaccard detector (the production near-dup shape:
-    inverted index → df-cap → same-gram pair join → threshold) over
-    the generated documents and score precision/recall against the
+    3-gram Jaccard detector (``dedup._jaccard_pairs``, the production
+    near-dup shape: inverted index → df-cap → shared-gram counts →
+    threshold) over the generated documents at Jaccard ≥ 0.5 and
+    score precision/recall against the
     known duplicate pairs. This is the eval harness every 100 TB dedup
     deployment needs — thresholds get tuned against planted truth at
     small scale, then shipped, because at full scale there IS no truth
     set. The whole loop (generator, detector, scoring) is re-derived in
     the DuckDB twin, so the reported precision/recall are value-checked.
 
-    Scale: detector work is the capped postings join (hot grams
-    dropped, df ≤ 50 ⇒ bounded pairs per gram); truth and metrics are
-    |dups|-sized. Generator scales by adding partitions.
+    Scale: detector work is the capped posting lists (hot grams
+    dropped, df ≤ JACCARD_DF_CAP ⇒ bounded pairs per gram); truth and
+    metrics are |dups|-sized. Generator scales by adding partitions.
     """
-    docs = gen_documents(spark, _N_DOCS)
-    w = F.split(F.col("text"), " ")
-    grams = (
-        docs.select(
-            F.col("doc_id"),
-            F.explode(
-                F.transform(
-                    F.when(
-                        F.size(w) >= 3, F.sequence(F.lit(1), F.size(w) - 2)
-                    ).otherwise(F.array().cast("array<int>")),
-                    lambda k: F.concat_ws(
-                        " ",
-                        F.element_at(w, k),
-                        F.element_at(w, k + 1),
-                        F.element_at(w, k + 2),
-                    ),
-                )
-            ).alias("gram"),
-        )
-        .distinct()
-    )
-    capped = grams.groupBy("gram").agg(F.count(F.lit(1)).alias("df")).filter(
-        F.col("df") <= 50
-    )
-    pruned = grams.join(capped.select("gram"), "gram")
-    sizes = grams.groupBy("doc_id").agg(F.count(F.lit(1)).alias("ng"))
-    a = pruned.select(F.col("doc_id").alias("da"), "gram")
-    b = pruned.select(F.col("doc_id").alias("db"), "gram")
-    cand = (
-        a.join(b, "gram")
-        .filter(F.col("da") < F.col("db"))
-        .groupBy("da", "db")
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
-    sa = sizes.select(F.col("doc_id").alias("da"), F.col("ng").alias("nga"))
-    sb = sizes.select(F.col("doc_id").alias("db"), F.col("ng").alias("ngb"))
     detected = (
-        cand.join(sa, "da")
-        .join(sb, "db")
-        .filter(
-            F.col("inter").cast("double")
-            / (F.col("nga") + F.col("ngb") - F.col("inter"))
-            >= 0.5
-        )
-        .select("da", "db")
+        _jaccard_pairs(gen_documents(spark, _N_DOCS))
+        .filter(F.col("jacc") >= 0.5)
+        .select(F.col("doc_a").alias("da"), F.col("doc_b").alias("db"))
     )
     truth = (
         spark.range(0, _N_DOCS)
@@ -271,18 +232,8 @@ def pipeline_dedup_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("id") - 1).alias("da"), F.col("id").alias("db")
         )
     )
-    # Single-DAG tail (r13): the original form ran THREE driver actions
-    # (truth.count(), detected.count(), detected⋈truth count) plus a
-    # createDataFrame — at the 500-doc eval size the detector DAG is
-    # overhead-dominated, and the extra jobs re-ran its reduce side.
-    # Scoring is now one relational DAG: detected left-joins the
-    # (broadcast, |dups|-sized) truth pairs once, one aggregate emits
-    # n_detected and n_hit together, and the precision/recall floors
-    # use the same double ops as the Python originals
-    # (floor(nh/nd·10⁴)/10⁴ ≡ float(int(nh/nd·10⁴))/10⁴ for
-    # non-negative counts), so the emitted row is value-identical.
-    # Interleaved A/B (.scratch/ab_dedup_eval.py): new faster 8/8
-    # pairs, min 3.52 → 2.03 s, identical (71, 76, 71, 0.9342, 1.0).
+    # One relational DAG scores the detector: one aggregate emits
+    # n_detected and n_hit together (OPTIMIZATION_r13.md §9).
     det_stats = (
         detected.join(
             F.broadcast(truth.withColumn("hit", F.lit(1))),
@@ -389,90 +340,21 @@ def pipeline_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     planted every-7th near-dups; corpus = the rest): exact content
     fingerprint anti-probe first (cheap, catches bit-identical
     resubmissions), then the capped 3-gram Jaccard probe of the
-    corpus's inverted index. Only batch×corpus pairs are ever
-    generated — batch-internal and corpus-internal pairs are excluded,
-    which is what bounds the incremental cost. Ground truth makes the
-    outcome auditable: every planted doc must come back 'near_dup'.
+    corpus's inverted index (``dedup._admission_probe``, the df cap
+    counted over corpus and batch together). Only batch×corpus pairs
+    are ever generated — batch-internal and corpus-internal pairs are
+    excluded, which is what bounds the incremental cost. Ground truth
+    makes the outcome auditable: every planted doc must come back
+    'near_dup'.
 
     Scale: the corpus side of the postings join is the standing index
-    (built once, reused per ingest); the batch side is ingest-sized.
+    (built once, reused per ingest — ``stream_incremental_dedup``); the
+    batch side is ingest-sized.
     """
     docs = gen_documents(spark, _N_DOCS)
     is_batch = (F.col("doc_id") % 7 == 0) & (F.col("doc_id") > 0)
-    w = F.split(F.col("text"), " ")
-    grams = (
-        docs.select(
-            "doc_id",
-            F.explode(
-                F.transform(
-                    F.when(
-                        F.size(w) >= 3, F.sequence(F.lit(1), F.size(w) - 2)
-                    ).otherwise(F.array().cast("array<int>")),
-                    lambda k: F.concat_ws(
-                        " ",
-                        F.element_at(w, k),
-                        F.element_at(w, k + 1),
-                        F.element_at(w, k + 2),
-                    ),
-                )
-            ).alias("gram"),
-        )
-        .distinct()
-    )
-    capped = grams.groupBy("gram").agg(F.count(F.lit(1)).alias("df")).filter(
-        F.col("df") <= 50
-    )
-    pruned = grams.join(capped.select("gram"), "gram")
-    sizes = grams.groupBy("doc_id").agg(F.count(F.lit(1)).alias("ng"))
-    fp = docs.select("doc_id", F.md5("text").alias("fp"), is_batch.alias("in_batch"))
-
-    exact_hit = (
-        fp.filter("in_batch")
-        .select(F.col("doc_id"), "fp")
-        .join(
-            fp.filter(~F.col("in_batch")).select(F.col("fp")),
-            "fp",
-            "left_semi",
-        )
-        .select("doc_id")
-        .distinct()
-    )
-    b = pruned.filter((F.col("doc_id") % 7 == 0) & (F.col("doc_id") > 0)).select(
-        F.col("doc_id").alias("bd"), "gram"
-    )
-    c = pruned.filter(~((F.col("doc_id") % 7 == 0) & (F.col("doc_id") > 0))).select(
-        F.col("doc_id").alias("cd"), "gram"
-    )
-    sb = sizes.select(F.col("doc_id").alias("bd"), F.col("ng").alias("ngb"))
-    sc_ = sizes.select(F.col("doc_id").alias("cd"), F.col("ng").alias("ngc"))
-    near_hit = (
-        b.join(c, "gram")
-        .groupBy("bd", "cd")
-        .agg(F.count(F.lit(1)).alias("inter"))
-        .join(sb, "bd")
-        .join(sc_, "cd")
-        .filter(
-            F.col("inter").cast("double")
-            / (F.col("ngb") + F.col("ngc") - F.col("inter"))
-            >= 0.5
-        )
-        .select(F.col("bd").alias("doc_id"))
-        .distinct()
-    )
-    batch = docs.filter(is_batch).select("doc_id")
-    return (
-        batch.join(
-            exact_hit.withColumn("is_exact", F.lit(1)), "doc_id", "left"
-        )
-        .join(near_hit.withColumn("is_near", F.lit(1)), "doc_id", "left")
-        .select(
-            "doc_id",
-            F.when(F.col("is_exact") == 1, "exact_dup")
-            .when(F.col("is_near") == 1, "near_dup")
-            .otherwise("accept")
-            .alias("decision"),
-        )
-    )
+    _, admit = _admission_probe(docs)
+    return admit(docs.filter(is_batch))
 
 
 def sql_docs_words(n_docs: int = _N_DOCS) -> str:

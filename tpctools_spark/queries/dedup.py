@@ -128,22 +128,14 @@ def _minhash_signatures(docs: DataFrame) -> DataFrame:
     (split/explode/xxhash64/hash-agg are all JVM-generated code).
     The tempting shuffle-free alternative — nested higher-order
     functions computing all 32 mins row-local — runs ~5× slower because
-    HOF lambdas are interpreted per element.
-
-    r13 A/B NEGATIVE — Arrow-batched signature build (the _lsh_sig_arrow
-    pattern; .scratch/proto_minhash_arrow.py): a mapInArrow twin (md5 +
-    hex-slice ints per shingle in Python, segment-min via numpy
-    reduceat) produced BIT-IDENTICAL signatures (all-integer pipeline,
-    fingerprint-equal at 500k) but measured 11.8 s vs 2.6 s for this
-    codegen path — 4.5× SLOWER. Unlike the LSH sign chains (64 fused
-    ±chains too big for HotSpot's JIT), md5+conv+hash-agg codegen is
-    already compiled and fast, while Python pays ~2 µs × 20M shingles
-    for as_py/encode/md5/int plus the Arrow transfer of every shingle
-    string. The JVM signature build stays. The one shuffle here is
-    benign at any scale: partial (map-side) aggregation collapses each
-    doc to 32 longs before the exchange, so shuffle bytes are
-    O(n_docs·32·8), independent of document length. No array_distinct:
-    MIN over a multiset equals MIN over its set. Shingles (not unigrams)
+    HOF lambdas are interpreted per element. An Arrow-batched signature
+    build is 4.5× slower: md5 + hash-agg codegen is already compiled,
+    while Python pays per shingle (OPTIMIZATION_r13.md "Negative A/Bs").
+    The one shuffle here is benign at any scale: partial (map-side)
+    aggregation collapses each doc to 32 longs before the exchange, so
+    shuffle bytes are O(n_docs·32·8), independent of document length.
+    No array_distinct: MIN over a multiset equals MIN over its set.
+    Shingles (not unigrams)
     keep inter-document Jaccard — and therefore LSH bucket occupancy —
     low, so candidate generation stays near-linear.
     """
@@ -294,21 +286,15 @@ def _minhash_band_structs(rows_per_band: int) -> F.Column:
     )
 
 
-# r14 size gate for the Arrow minhash tail (r13 VERDICT item 1): r13
-# dispatched the Arrow tail unconditionally; the driver's bench showed
-# the 500k tier +12% but dedup_minhash_50k −21% and the sf0.1 headline
-# −11% — below ~10⁵ docs the Arrow stage's fixed costs (Python worker
-# handoff, sig32 transfer, the extra sort) exceed the removed
-# band-join+distinct+rejoin cost. The gate reads the documents scan's
-# Catalyst size estimate (metadata only, no job): at or above
-# _MINHASH_ARROW_MIN_BYTES → Arrow tail; below → the value-identical
-# JVM join tail (parity-pinned by tests/test_dedup_invariants.py).
-# Threshold: the bench corpora store ~195-230 B/doc in parquet, so
-# 16 MiB ≈ 8·10⁴ docs — between the measured −21% 50k loss (9.3 MiB
-# on disk) and the measured +12% 500k win (110 MiB), on the
-# conservative side of break-even so the JVM tail keeps every tier it
-# already wins.
-# Unknown stats gate OPEN (at 100 TB the gate must never fail closed).
+# Size gate for the Arrow minhash tail: below ~10⁵ docs its fixed costs
+# (Python worker handoff, sig32 transfer, the extra sort) exceed the
+# band-join + distinct + rejoins it removes, so smaller corpora take the
+# value-identical JVM join tail (parity-pinned by
+# tests/test_dedup_invariants.py). The gate reads the documents scan's
+# Catalyst size estimate (metadata only, no job); 16 MiB ≈ 8·10⁴ docs
+# sits between the measured 50k loss and 500k win (OPTIMIZATION_r14.md
+# §1). Unknown stats gate OPEN (at 100 TB the gate must never fail
+# closed).
 _MINHASH_ARROW_MIN_BYTES = 16 * 1024 * 1024
 
 
@@ -330,19 +316,14 @@ def _minhash_pairs_arrow(bands: DataFrame) -> DataFrame:
     agreement scan. Value-identical to the band self-join + distinct +
     two signature rejoins that serve below the size gate.
 
-    Why (guide §2.3/§2.4 + the r13 cell-tail lesson): the JVM tail pays
-    a two-sided band self-join, a pre-gate distinct over every band
-    collision, and two signature rejoins (sig cached for 3 consumers).
-    Here the int32-narrowed signature rides the single band shuffle
-    (32×4 B instead of 32×8 B — guide §2.3 narrower types), the
+    Why: the JVM tail pays a two-sided band self-join, a pre-gate
+    distinct over every band collision, and two signature rejoins (sig
+    cached for 3 consumers). Here the int32-narrowed signature rides
+    the single band shuffle (32×4 B instead of 32×8 B), the
     within-bucket pair agreements are one vectorized numpy comparison,
-    and the distinct collapses the (tiny, post-gate) cross-band dupes.
-    Sig-through-the-JVM-join was also A/B'd: LOSS (min 8.40 vs 7.68 s —
-    the r11 "narrow shape wins" note holds for joins; the win needs the
-    Arrow scan). Interleaved full-query A/B at 500k
-    (.scratch/ab_minhash_tail.py, JVM-quiesced reps): old min 7.68 s vs
-    new min 6.17 s, faster 4/4 pairs, identical (71424, ...) output
-    fingerprint.
+    and the distinct collapses the (tiny, post-gate) cross-band dupes —
+    faster at 500k, while the signature through the JVM join lost
+    (OPTIMIZATION_r13.md §7).
 
     Bit-exactness is trivial: the agreement count is 32 integer
     equalities summed (no floating point until the caller's unchanged
@@ -394,15 +375,9 @@ def dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``spread_input`` widens the single-file fixture scan; on a
     many-split production corpus it is a metadata-checked no-op.
 
-    Bench attribution (r11): the r10 `dedup_minhash_500k` move
-    (6.26 → 8.41 s) is the commit-1cd9a42 measurement change, not a
-    plan regression — an interleaved A/B on this query at the 500k
-    fixture, same JVM, timed the OLD style (.filter(planted).count(),
-    which lets Catalyst push the planted predicate into the candidate
-    joins and prune the plan) at 5.6 s min vs the NEW style (one agg
-    over the FULL pair output) at 7.4 s min, reproducing the delta
-    with identical found-counts (71423). The new number is the honest
-    one; accepted as the standing baseline.
+    The bench times one aggregate over the FULL pair output, not a
+    count of the planted pairs, which Catalyst would push into the
+    candidate joins (OPTIMIZATION_r14.md §10).
     """
     raw_docs = table(spark, sf_dir, "documents")
     docs = spread_input(raw_docs)
@@ -720,13 +695,42 @@ def _gram_hashes() -> F.Column:
     return F.array_distinct(F.transform(_shingles_rx(), lambda s: F.xxhash64(s)))
 
 
-def _shared_gram_counts(
-    spark: SparkSession, sf_dir: str, caches: list | None = None
-) -> DataFrame:
-    """Shared-gram statistics per candidate pair (doc_a < doc_b):
-    columns (doc_a, doc_b, na, nb, n_shared) — the inverted-index
-    core behind Jaccard pairs, containment pairs, and the
-    connected-components clustering.
+def _postings(gs_docs: DataFrame) -> DataFrame:
+    """(doc_id, n, gram) posting rows of a (doc_id, gs) frame. ``n`` is
+    the document's FULL gram-set size, so a Jaccard denominator is
+    unaffected by the df cap."""
+    return gs_docs.select(
+        "doc_id", F.size("gs").alias("n"), F.explode("gs").alias("gram")
+    )
+
+
+def _below_df_cap(prep: DataFrame) -> DataFrame:
+    """The postings of grams in at most ``JACCARD_DF_CAP`` documents.
+
+    Postings are hash-aggregated per gram (map-side partial → the
+    shuffled df table is |distinct grams|, not |postings|), and the hot
+    grams are anti-joined away. The hot list is the Zipf head in
+    practice but only bounded by |postings|/τ in the worst case, so the
+    anti-join is UNHINTED: AQE broadcasts it while it is executor-small
+    and falls back to a shuffled anti-join when a boilerplate-heavy
+    corpus grows it. The postings never shuffle for this step, and
+    counting FIRST (never collect_list on uncapped grams) keeps
+    per-group aggregation memory bounded even on boilerplate grams with
+    millions of postings."""
+    hot = (
+        prep.groupBy("gram")
+        .agg(F.count(F.lit(1)).alias("df"))
+        .filter(F.col("df") > JACCARD_DF_CAP)
+        .select("gram")
+    )
+    return prep.join(hot, "gram", "left_anti")
+
+
+def _shared_gram_counts(docs: DataFrame, caches: list | None = None) -> DataFrame:
+    """Shared-gram statistics per candidate pair (doc_a < doc_b) of the
+    ``docs`` documents: columns (doc_a, doc_b, na, nb, n_shared) — the
+    inverted-index core behind Jaccard pairs, containment pairs, the
+    connected-components clustering and the dedup evaluation.
 
     ``caches``: optional list the function appends its cached
     DataFrames to, so callers that fully consume the result inside
@@ -735,7 +739,7 @@ def _shared_gram_counts(
     # partition; spread_input widens it so shingling uses every core,
     # and skips the shuffle entirely (metadata check) when the scan is
     # already as wide as the cluster — the 100 TB case.
-    docs = spread_input(table(spark, sf_dir, "documents"))
+    docs = spread_input(docs)
     # Per-doc distinct gram set and its size, entirely row-local —
     # array_distinct replaces a DISTINCT shuffle, and carrying n (the
     # set size) through the join replaces a sizes aggregation + two
@@ -753,28 +757,7 @@ def _shared_gram_counts(
     )
     if caches is not None:
         caches.append(base)
-    prep = base.select(
-        "doc_id", F.size("gs").alias("n"), F.explode("gs").alias("gram")
-    )
-    # df-cap (JACCARD_DF_CAP): hash-aggregate postings per gram (map-side
-    # partial → the shuffled df table is |distinct grams|, not |postings|),
-    # keep only the hot grams (the Zipf head in practice, but only
-    # bounded by |postings|/τ in the worst case — so the anti-join is
-    # UNHINTED: AQE broadcasts the hot list while it is executor-small
-    # and falls back to a shuffled anti-join when a boilerplate-heavy
-    # corpus grows it), and anti-join them away. The
-    # postings never shuffle for this step; doc gram-set sizes `n` stay
-    # FULL sizes so the Jaccard denominator is unaffected by the cap.
-    # Counting FIRST (never collect_list on uncapped grams) keeps
-    # per-group aggregation memory bounded even on boilerplate grams
-    # with millions of postings.
-    hot = (
-        prep.groupBy("gram")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .filter(F.col("df") > JACCARD_DF_CAP)
-        .select("gram")
-    )
-    kept = prep.join(hot, "gram", "left_anti")
+    kept = _below_df_cap(_postings(base))
     # Pair generation from the per-gram posting list (≤ JACCARD_DF_CAP
     # entries by construction): ONE postings shuffle + a row-local
     # double-explode, instead of shuffling both legs of a self-join.
@@ -807,16 +790,75 @@ def _shared_gram_counts(
     return shared
 
 
-def _jaccard_pairs(
-    spark: SparkSession, sf_dir: str, caches: list | None = None
-) -> DataFrame:
-    """Near-dup candidate pairs (doc_a < doc_b, jacc ≥ 0.2) with the
-    raw `jacc` double column."""
-    shared = _shared_gram_counts(spark, sf_dir, caches=caches)
+def _jaccard_pairs(docs: DataFrame, caches: list | None = None) -> DataFrame:
+    """Near-dup candidate pairs of ``docs`` (doc_a < doc_b, jacc ≥ 0.2)
+    with the raw `jacc` double column."""
+    shared = _shared_gram_counts(docs, caches=caches)
     jacc = F.col("n_shared").cast("double") / (
         F.col("na") + F.col("nb") - F.col("n_shared")
     )
     return shared.filter(jacc >= 0.2).select("doc_a", "doc_b", jacc.alias("jacc"))
+
+
+def _admission_probe(cap_docs: DataFrame):
+    """Incremental near-dup admission, batch or stream: returns the
+    standing index ``(postings, fps)`` and ``admit(batch)``, which labels
+    each batch document ``exact_dup`` (its md5 equals an index
+    document's), ``near_dup`` (shared-gram Jaccard ≥ 0.5 with one) or
+    ``accept``. Only batch × index pairs are formed, against the index
+    documents outside the batch.
+
+    The index covers ``cap_docs``, and the df cap is counted over them:
+    ``pipeline_incremental_dedup`` passes every document (it sees the
+    corpus and the batch at once), ``stream_incremental_dedup`` passes
+    the corpus (at ingest time the index is all the admitter has).
+    Nothing is cached here; a caller that probes many batches caches
+    the index and releases it."""
+    gs = _gram_hashes().alias("gs")
+    postings = _below_df_cap(_postings(cap_docs.select("doc_id", gs)))
+    fps = cap_docs.select("doc_id", F.md5("text").alias("fp"))
+
+    def admit(batch: DataFrame) -> DataFrame:
+        ids = batch.select("doc_id")
+        corpus = postings.join(ids, "doc_id", "left_anti").select(
+            F.col("doc_id").alias("cd"), F.col("n").alias("nc"), "gram"
+        )
+        inter = (
+            _postings(batch.select("doc_id", gs))
+            .withColumnRenamed("n", "nb")
+            .join(corpus, "gram")
+            .groupBy("doc_id", "cd", "nb", "nc")
+            .agg(F.count(F.lit(1)).alias("inter"))
+        )
+        near = (
+            inter.filter(
+                F.col("inter").cast("double")
+                / (F.col("nb") + F.col("nc") - F.col("inter"))
+                >= 0.5
+            )
+            .select("doc_id")
+            .distinct()
+            .withColumn("near", F.lit(1))
+        )
+        exact = (
+            batch.select("doc_id", F.md5("text").alias("fp"))
+            .join(fps.join(ids, "doc_id", "left_anti"), "fp", "left_semi")
+            .select("doc_id")
+            .withColumn("ex", F.lit(1))
+        )
+        return (
+            ids.join(exact, "doc_id", "left")
+            .join(near, "doc_id", "left")
+            .select(
+                "doc_id",
+                F.when(F.col("ex") == 1, "exact_dup")
+                .when(F.col("near") == 1, "near_dup")
+                .otherwise("accept")
+                .alias("decision"),
+            )
+        )
+
+    return (postings, fps), admit
 
 
 # The oracles' candidate pairs: distinct word 3-grams per document, gram
@@ -867,8 +909,8 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     tradeoff). Jaccard is an exact integer ratio, so the threshold
     decision is FP-safe against the oracle.
 
-    Contract note (r13, declared): the engine keys grams by
-    ``xxhash64(gram)`` (guide §2.3 — 8-byte shuffle keys instead of
+    Contract note (declared, OPTIMIZATION_r14.md §4): the engine keys
+    grams by ``xxhash64(gram)`` (8-byte shuffle keys instead of
     ~25-byte strings) while the DuckDB oracle compares the strings
     themselves, so cross-engine equality holds with high probability
     rather than unconditionally: a 64-bit collision between two
@@ -877,11 +919,14 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     ~1e-9 at the oracle SFs). An oracle mismatch at a much larger SF
     should be triaged as a possible collision before being treated as
     a regression. Same whp-equivalence class as the md5-derived
-    minhash family; applies to every ``_shared_gram_counts`` consumer
-    (containment, keep-longest, cluster components, the dedup
-    pipelines).
+    minhash family; applies to every ``_gram_hashes`` consumer:
+    containment, keep-longest, cluster components (both paths),
+    ``pipeline_dedup_funnel``, ``pipeline_shard_dedup_run``,
+    ``pipeline_dedup_eval``, and the two admission twins
+    ``pipeline_incremental_dedup`` and ``stream_incremental_dedup``
+    (``_admission_probe``).
     """
-    return _jaccard_pairs(spark, sf_dir).select(
+    return _jaccard_pairs(table(spark, sf_dir, "documents")).select(
         "doc_a", "doc_b", trunc_digits(F.col("jacc"), 4).alias("jaccard")
     )
 
@@ -915,7 +960,7 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     including the declared xxhash64 gram-keying whp-equivalence to the
     string-gram oracle (see ``dedup_ngram_jaccard``'s contract note).
     """
-    shared = _shared_gram_counts(spark, sf_dir)
+    shared = _shared_gram_counts(table(spark, sf_dir, "documents"))
     cont = F.col("n_shared").cast("double") / F.least("na", "nb")
     return shared.filter(cont >= 0.6).select(
         "doc_a",
@@ -1200,9 +1245,7 @@ _COMPONENTS_MAX_ROUNDS = 60
 _CC_HALVE_FROM = 3
 
 
-def _min_label_components(
-    edges: DataFrame, max_rounds: int = _COMPONENTS_MAX_ROUNDS
-) -> tuple[DataFrame, int]:
+def _min_label_components(edges: DataFrame) -> tuple[DataFrame, int]:
     """Connected components over a symmetric ``(src, dst)`` edge table
     by min-label propagation WITH pointer halving.
 
@@ -1214,22 +1257,23 @@ def _min_label_components(
     halving step is classic pointer jumping: a length-d label chain
     shortens to ⌈d/2⌉, so adversarial chain graphs converge in
     O(log d) rounds instead of the O(d) that plain propagation needs —
-    the guard that makes ``max_rounds`` a real invariant rather than a
-    tunable. Deferring it to round ``_CC_HALVE_FROM`` skips its
-    graph-sized join on the tiny-diameter graphs that dominate
-    near-dup workloads. Labels are monotone decreasing,
+    the guard that makes ``_COMPONENTS_MAX_ROUNDS`` a real invariant
+    rather than a tunable. Deferring it to round ``_CC_HALVE_FROM``
+    skips its graph-sized join on the tiny-diameter graphs that
+    dominate near-dup workloads. Labels are monotone decreasing,
     so the global SUM(label) is an exact convergence witness; driver
     state is one scalar per round, never the labels.
 
     Returns the converged ``(doc_id, cluster_id)`` table (left cached —
     callers unpersist when done) and the round count. Raises
-    ``RuntimeError`` if ``max_rounds`` is exceeded.
+    ``RuntimeError`` if ``_COMPONENTS_MAX_ROUNDS`` is exceeded.
 
     Each round's new checkpoint RELEASES the previous round's blocks
-    (``_release_local_checkpoint``) — without that, up to ``max_rounds``
-    graph-node-sized RDDs sit persisted on executors until driver GC
-    happens to trigger ContextCleaner, quietly breaking the "state is
-    graph-node-sized" claim on slow-converging graphs.
+    (``_release_local_checkpoint``) — without that, up to
+    ``_COMPONENTS_MAX_ROUNDS`` graph-node-sized RDDs sit persisted on
+    executors until driver GC happens to trigger ContextCleaner,
+    quietly breaking the "state is graph-node-sized" claim on
+    slow-converging graphs.
 
     One job per round: ``localCheckpoint(eager=False)`` lets the
     convergence agg itself materialize the round's checkpoint blocks
@@ -1253,12 +1297,13 @@ def _min_label_components(
     rounds = 0
     while True:
         rounds += 1
-        if rounds > max_rounds:
+        if rounds > _COMPONENTS_MAX_ROUNDS:
+            _release_local_checkpoint(labels)
             raise RuntimeError(
-                f"component labels not converged after {max_rounds} "
-                "rounds — monotonicity invariant broken (labels must "
-                "reach the component min in O(log diameter) rounds "
-                "under pointer halving)"
+                "component labels not converged after "
+                f"{_COMPONENTS_MAX_ROUNDS} rounds — monotonicity invariant "
+                "broken (labels must reach the component min in "
+                "O(log diameter) rounds under pointer halving)"
             )
         prop = (
             edges.join(labels, edges.src == labels.doc_id)
@@ -1538,7 +1583,7 @@ def dedup_cluster_components(spark: SparkSession, sf_dir: str) -> DataFrame:
             .mapInArrow(_components_arrow, _CC_SCHEMA)
         )
     pair_caches: list[DataFrame] = []
-    pairs = _jaccard_pairs(spark, sf_dir, caches=pair_caches).select(
+    pairs = _jaccard_pairs(docs, caches=pair_caches).select(
         "doc_a", "doc_b"
     )
     edges = (
@@ -1550,7 +1595,8 @@ def dedup_cluster_components(spark: SparkSession, sf_dir: str) -> DataFrame:
         .toDF("src", "dst")
         .cache()
     )
-    labels, _rounds = _min_label_components(edges)
+    labels, rounds = _min_label_components(edges)
+    log.info("dedup_cluster_components: loop converged in %d rounds", rounds)
     # The loop consumed edges and the shingle base fully (the final
     # labels generation is materialized in cache by its sum-agg above) —
     # release them so back-to-back multi-query sessions don't accumulate
@@ -1709,9 +1755,9 @@ def _lsh_sig_arrow(vecs: DataFrame, bits: int) -> DataFrame:
 def _lsh_sq_norm(col: F.Column) -> F.Column:
     """Exact DECIMAL(25,16) squared norm of a float embedding → double —
     the oracle's ``sq_norm`` expression. Interpreted fold by design (the
-    flat decimal chain measured a 3× LOSS, note at the rescore site);
-    r13 moves every evaluation to the per-SURVIVOR rescore projection,
-    so the per-row cost never multiplies with the corpus."""
+    flat decimal chain measured a 3× LOSS, OPTIMIZATION_r13.md §4); it
+    is evaluated only in the per-SURVIVOR rescore projection, so the
+    per-row cost never multiplies with the corpus."""
     return F.aggregate(
         col,
         F.lit(0).cast("decimal(25,16)"),
@@ -1726,11 +1772,8 @@ def _lsh_pairs_from_bands(prep: DataFrame, bands: DataFrame) -> DataFrame:
     distinct → exact DECIMAL(25,16) rescore. ``bands`` must carry
     (vec_id, nsq, d1..d64, band, band_key).
     ``prep`` carries (vec_id, embedding) only — the exact decimal
-    sq_norm is computed HERE, per survivor (r13: keeping it in the
-    500k-row prep cache cost ~1.2 s/pass of interpreted decimal folds
-    for a value only the ~10³ rescore rows read; the rescore fold below
-    is the identical expression over the identical float array, so the
-    output is bit-unchanged)."""
+    sq_norm is computed HERE, per survivor, not per corpus row in the
+    prep cache (OPTIMIZATION_r13.md §2)."""
     lhs = bands.select(
         F.col("vec_id").alias("vec_a"), "band", "band_key",
         F.col("nsq").alias("nsq_a"),
@@ -1744,23 +1787,10 @@ def _lsh_pairs_from_bands(prep: DataFrame, bands: DataFrame) -> DataFrame:
     dot_gate = sum(
         F.col(f"a{d}") * F.col(f"x{d}") for d in range(1, EMB_DIM + 1)
     )
-    # r11 A/B NEUTRAL: hint("shuffle_hash") on this self-join (the q72
-    # sort-side lesson) measured a wash at the 500k tier once the
-    # signature cache is warm (3.06 s SMJ vs 3.08 s SHJ min-of-3,
-    # identical 62870 candidates) — the join is not the residual
-    # bottleneck (cache build + rescore are); SMJ kept as the
-    # scale-safe default.
-    # r13 A/B NEGATIVE — Arrow within-bucket candidate scan (the
-    # minhash/prune pattern: repartition(band, band_key) of the float32
-    # arrays + vectorized numpy pair dots + gate; .scratch/
-    # ab_lsh_cand.py): bit-identical output (19433,
-    # 6754358889222674800) but min 24.45 vs 9.90 s — 2.5× SLOWER,
-    # 0/4 reps. Unlike minhash (int32 sigs, tiny per-pair work moved
-    # out of a join+distinct+2 rejoins), here the in-join 0.45 gate
-    # already runs as flat-codegen column arithmetic inside the SMJ
-    # stream, while the Arrow form pays array-column explode+shuffle
-    # serialization plus per-pair numpy gathers over ~7M bucket
-    # collisions. The wide-dims-through-the-join shape stays.
+    # A plain SMJ: a shuffle_hash hint measured a wash
+    # (OPTIMIZATION_r14.md §10), and an Arrow within-bucket scan 2.5×
+    # slower, because the in-join 0.45 gate already runs as flat-codegen
+    # column arithmetic (OPTIMIZATION_r13.md "Negative A/Bs").
     cand = (
         lhs.join(rhs, ["band", "band_key"])
         .filter(F.col("vec_a") < F.col("vec_b"))
@@ -1784,13 +1814,10 @@ def _lsh_pairs_from_bands(prep: DataFrame, bands: DataFrame) -> DataFrame:
     # gate is provably lossless: the 64-term double dot differs from
     # the exact-decimal value by ≤ 64·ε·‖a‖‖b‖ ≈ 1e-14 relative, so
     # no true ≥0.5 pair can fall below 0.45. The F.aggregate folds here
-    # (dot AND both sq_norms) are per-SURVIVOR (a few ×10³ rows), not
-    # per-corpus-row — the r13 fold sweep leaves them interpreted
-    # (flat decimal chains measured a 3× LOSS), and r13 moved the
-    # sq_norm folds HERE, ABOVE the joins, out of the 500k-row prep
-    # cache (~1.2 s/pass saved; a projection below the join would
-    # still evaluate per streamed prep row, so they must sit in the
-    # post-join projection to be per-survivor).
+    # (dot AND both sq_norms) are per-SURVIVOR (a few ×10³ rows) and
+    # stay interpreted; they sit in the post-join projection because a
+    # projection below the join runs per streamed prep row
+    # (OPTIMIZATION_r13.md §2 and §4).
     prods = F.zip_with(
         F.col("ea"), F.col("eb"),
         lambda x, y: x.cast("double") * y.cast("double"),
@@ -1897,38 +1924,31 @@ def dedup_lsh_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     ≈ 1e-14 relative — and only survivors (the near-dup tail, not the
     ~14·N random-pair bulk) pay the distinct shuffle, the prep
     join-backs, and the exact DECIMAL(25,16) dot that the oracle
-    compares against (r11 A/B at the 500k tier: 62.8 → 27.2 s vs the
-    narrow pairs-first shape). The 500k bench tier times the FULL
+    compares against (2.3× faster than the narrow pairs-first shape at
+    500k, OPTIMIZATION_r14.md §10). The 500k bench tier times the FULL
     pair enumeration and asserts planted recall ≥95%.
     """
     emb = table(spark, sf_dir, "embeddings")
     # The exact DECIMAL(25,16) sq_norm (oracle's prep CTE) is NOT
-    # computed here: r13 deferred it to the rescore projection in
-    # ``_lsh_pairs_from_bands`` (``_lsh_sq_norm``), where it runs per
-    # SURVIVOR instead of per corpus row — the 500k prep cache paid
-    # ~1.2 s/pass of interpreted decimal folds (measured, vs 0.23 s
-    # without; .scratch/attr_lsh.py) for a value only ~10³ rescore rows
-    # read. The fold itself stays interpreted: the r12/r13 A/B measured
-    # a flat decimal chain 3× SLOWER (6.2 vs 2.0 s per 500k rows,
-    # .scratch/prof_lsh13.out) — decimal codegen ops allocate per step,
-    # so the chain trick only pays for DOUBLE/BIGINT arithmetic.
+    # computed here but per SURVIVOR in ``_lsh_pairs_from_bands``
+    # (``_lsh_sq_norm``) — only ~10³ rescore rows read it
+    # (OPTIMIZATION_r13.md §2).
     # Carry the RAW float arrays (half the bytes of array<double>)
     # through cache and the candidate join-back; every arithmetic site
     # casts float→double per element (exact, row-local), so results
     # are bit-identical to a double-array pipeline while the pair
     # join's vector shuffle — the volume term at 500k+ — halves.
     prep = emb.select("vec_id", "embedding").cache()
-    # ONE parquet scan for the whole query (r12, interleaved A/B
-    # +3.4% sign-stable 3/3 at the 500k tier): the corpus count that
-    # sizes the geometry materializes the prep cache the rescore reads
-    # anyway, and the signature projection below builds FROM that cache
-    # — the r11 shape paid three separate scans (count, prep, sigw).
+    # ONE parquet scan for the whole query instead of three (count,
+    # prep, sigw; OPTIMIZATION_r14.md §10): the corpus count that sizes
+    # the geometry materializes the prep cache the rescore reads
+    # anyway, and the signature projection below builds FROM that cache.
     bits = _lsh_bits(prep.count())
 
     # Dims flatten to DOUBLE once, here: FLOAT columns do not shrink
-    # UnsafeRow's 8-byte slots and measured 25% slower (r12 A/B). The
-    # signature map upstream has already rejected any row whose dim is
-    # not EMB_DIM, so element_at never reads past the end.
+    # UnsafeRow's 8-byte slots and measured slower (OPTIMIZATION_r14.md
+    # §10). The signature map upstream has already rejected any row
+    # whose dim is not EMB_DIM, so element_at never reads past the end.
     dim_exprs = [
         F.element_at(F.col("embedding"), d).cast("double").alias(f"d{d}")
         for d in range(1, EMB_DIM + 1)
@@ -2206,10 +2226,9 @@ def dedup_minhash_band_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table(spark, sf_dir, "documents")
     sigs = _minhash_signatures(docs).cache()
     sig_el = lambda i: F.element_at("signature", i + 1)  # noqa: E731
-    # r13 fold sweep: stays a fold — 32 integer terms per CANDIDATE
-    # pair, and candidates are banding-bounded (occupancy-capped
-    # buckets), never corpus-sized; the band-eval query is a one-shot
-    # planner, not a 500k tier.
+    # Stays a fold (OPTIMIZATION_r13.md §4): 32 integer terms per
+    # CANDIDATE pair, and candidates are banding-bounded, never
+    # corpus-sized.
     agree = F.aggregate(
         F.zip_with(
             F.col("sa"), F.col("sb"), lambda x, y: F.when(x == y, 1).otherwise(0)
@@ -2347,7 +2366,7 @@ def pipeline_dedup_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     keep = keyed.groupBy("h").agg(F.min("doc_id").alias("keep_id"))
     surv = keep.select(F.col("keep_id").alias("doc_id"))
-    pairs = _jaccard_pairs(spark, sf_dir).select("doc_a", "doc_b")
+    pairs = _jaccard_pairs(docs).select("doc_a", "doc_b")
     spairs = pairs.join(
         surv.withColumnRenamed("doc_id", "doc_a"), "doc_a", "left_semi"
     ).join(surv.withColumnRenamed("doc_id", "doc_b"), "doc_b", "left_semi")
@@ -2426,13 +2445,11 @@ def dedup_boilerplate_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = spread_input(table(spark, sf_dir, "documents"))
     w = _words()
     nwin = F.ceil(F.size("w") / F.lit(float(_BP_W))).cast("int")
-    # Lambda-free window hashing (r12): explode the bare window INDEX
+    # Lambda-free window hashing: explode the bare window INDEX
     # sequence (native) and compute slice + array_join + md5 POST-
-    # explode inside whole-stage codegen — the old shape ran md5 inside
-    # a transform() lambda, which evaluates interpreted per element
-    # (the DSIR-profile lesson: 8-10× slower than codegen md5). The
-    # word array rides the Generate within one fused stage (no shuffle
-    # touches it), so no extra data movement. Identical (h, nw) rows.
+    # explode inside whole-stage codegen, not in an interpreted
+    # transform() lambda (OPTIMIZATION_r14.md §10). The word array rides
+    # the Generate within one fused stage (no shuffle touches it).
     segs = (
         docs.select("doc_id", w.alias("w"))
         .select(

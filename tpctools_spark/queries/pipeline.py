@@ -1248,7 +1248,7 @@ def pipeline_shard_dedup_run(spark: SparkSession, sf_dir: str) -> DataFrame:
     pa = (F.col("doc_a") % _SDP_SHARDS).cast("bigint")
     pb = (F.col("doc_b") % _SDP_SHARDS).cast("bigint")
     pairs = (
-        _jaccard_pairs(spark, sf_dir)
+        _jaccard_pairs(table(spark, sf_dir, "documents"))
         .filter(pa != pb)
         .withColumn("shard_a", F.least(pa, pb))
         .withColumn("shard_b", F.greatest(pa, pb))

@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from tpctools_spark.catalog import read_schema, read_table, table, typed_read
+from tpctools_spark.queries.dedup import _admission_probe
 from tpctools_spark.queries.mining import _PSI_ORACLE_SQL
 from tpctools_spark.queries.scans import _scratch_dir
 from tpctools_spark.queries._util import trunc_digits
@@ -918,29 +919,6 @@ def _stream_incr_dedup_sql() -> str:
     """
 
 
-def _doc_grams(d: DataFrame) -> DataFrame:
-    """doc_id → distinct 3-gram rows (row-local explode, no shuffle)."""
-    w = F.split(F.col("text"), " ")
-    return d.select(
-        "doc_id",
-        F.explode(
-            F.array_distinct(
-                F.transform(
-                    F.when(
-                        F.size(w) >= 3, F.sequence(F.lit(1), F.size(w) - 2)
-                    ).otherwise(F.array().cast("array<int>")),
-                    lambda k: F.concat_ws(
-                        " ",
-                        F.element_at(w, k),
-                        F.element_at(w, k + 1),
-                        F.element_at(w, k + 2),
-                    ),
-                )
-            )
-        ).alias("gram"),
-    )
-
-
 @query("stream_incremental_dedup", oracle=_stream_incr_dedup_sql())
 def stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental dedup as a CONTINUOUS admission stream: incoming
@@ -959,8 +937,9 @@ def stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     deliberate semantic difference from the batch twin, encoded in
     both engines. Each foreachBatch probe is ingest-sized: exact
     fingerprint semi-join, then batch-postings × corpus-postings on the
-    shared gram key — the cached standing index (postings, sizes,
-    fingerprints; corpus-bounded) serves every batch without recompute.
+    shared gram key (``dedup._admission_probe``) — the cached standing
+    index (postings with gram-set sizes, fingerprints; corpus-bounded)
+    serves every batch without recompute.
     """
     from tpctools_spark.generate_corpus import gen_documents
 
@@ -975,10 +954,12 @@ def stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     incoming.repartitionByRange(4, "doc_id").write.mode("overwrite").parquet(
         in_dir
     )
-    index = _incr_dedup_index(corpus)
+    index, admit = _admission_probe(corpus)
+    for part in index:
+        part.cache()
     _drain(
         _file_batches(spark, docs.schema, in_dir),
-        _commit_batches(out_dir, _incr_admit(*index)),
+        _commit_batches(out_dir, admit),
         os.path.join(stage, "ckpt"),
         "append",
     ).awaitTermination()
@@ -989,81 +970,6 @@ def stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _read_batches(spark, out_dir).select("doc_id", "decision").orderBy(
         "doc_id"
     )
-
-
-def _incr_dedup_index(corpus: DataFrame):
-    """The admission stream's STANDING index: df-capped grams, corpus
-    postings, per-doc gram counts, exact fingerprints — all cached,
-    the static side of every micro-batch probe."""
-    cg = _doc_grams(corpus)
-    capped = (
-        cg.groupBy("gram")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .filter(F.col("df") <= 50)
-        .select("gram")
-        .cache()
-    )
-    pc = (
-        cg.join(capped, "gram")
-        .select(F.col("doc_id").alias("cd"), "gram")
-        .cache()
-    )
-    sizes_c = (
-        cg.groupBy("doc_id")
-        .agg(F.count(F.lit(1)).alias("ngc"))
-        .select(F.col("doc_id").alias("cd"), "ngc")
-        .cache()
-    )
-    fps_c = corpus.select(F.md5("text").alias("fp")).distinct().cache()
-    return capped, pc, sizes_c, fps_c
-
-
-def _incr_admit(capped, pc, sizes_c, fps_c):
-    """The admission stream's per-batch build: exact_dup / near_dup /
-    accept for each document of a micro-batch, against the standing
-    index."""
-
-    def admit(bdf: DataFrame) -> DataFrame:
-        bg = _doc_grams(bdf)
-        sizes_b = bg.groupBy("doc_id").agg(F.count(F.lit(1)).alias("ngb"))
-        pb = bg.join(capped, "gram").select(
-            F.col("doc_id").alias("bd"), "gram"
-        )
-        near = (
-            pb.join(pc, "gram")
-            .groupBy("bd", "cd")
-            .agg(F.count(F.lit(1)).alias("inter"))
-            .join(sizes_b.select(F.col("doc_id").alias("bd"), "ngb"), "bd")
-            .join(sizes_c, "cd")
-            .filter(
-                F.col("inter").cast("double")
-                / (F.col("ngb") + F.col("ngc") - F.col("inter"))
-                >= 0.5
-            )
-            .select(F.col("bd").alias("doc_id"))
-            .distinct()
-            .withColumn("near", F.lit(1))
-        )
-        exact = (
-            bdf.select("doc_id", F.md5("text").alias("fp"))
-            .join(fps_c, "fp", "left_semi")
-            .select("doc_id")
-            .withColumn("ex", F.lit(1))
-        )
-        return (
-            bdf.select("doc_id")
-            .join(exact, "doc_id", "left")
-            .join(near, "doc_id", "left")
-            .select(
-                "doc_id",
-                F.when(F.col("ex") == 1, "exact_dup")
-                .when(F.col("near") == 1, "near_dup")
-                .otherwise("accept")
-                .alias("decision"),
-            )
-        )
-
-    return admit
 
 
 def _dsir_score(lam):
